@@ -4,10 +4,17 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
 
 /** Spark surface for the Doc-AI backend: four scalar functions, exposed
-  * both as Column helpers and as registered SQL UDFs. Marked
-  * non-deterministic-safe by usage convention: we never place them below
-  * user filters (SURVEY §4 item 1) — plan construction order keeps cheap
-  * predicates (file-name filters, class filters) under the AI projection.
+  * both as Column helpers and as registered SQL UDFs.
+  *
+  * Pipelines make one model call per document per function, but the
+  * optimizer may copy any deterministic expression: over a plain
+  * `explode` of an `ai_extract` map it infers and pushes down a
+  * `size(map) > 0` filter that runs the model twice more per row. The
+  * guards are the shape of `Relational.unpivotMap` and
+  * PlanRegressionSpec's plan guard (no AI UDF twice, none in a filter
+  * nobody wrote). The UDFs stay deterministic because
+  * `CheapPredicatesFirst` only reorders deterministic conjuncts, and
+  * cheap predicates must run before the model.
   *
   * UDFs (not codegen Expressions) are the right call here: each call is
   * "model-inference" priced, so per-row JVM dispatch overhead is noise
@@ -50,17 +57,17 @@ object AiFunctions {
     }
 
   /** AI_EXTRACT (app:202-210): map of {field -> question} in, map of
-    * {field -> answer} out. The {"response": ...} envelope of the
-    * reference is applied by `ai_extract_json` below when the raw
-    * payload shape matters.
+    * {field -> answer} out; a backend failure becomes the error row
+    * {"error" -> message} (X9, app:855-856) so the batch stays alive.
     */
-  private def mkExtractUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
+  private def extract(b: DocAiBackend, text: String,
+                      prompts: Map[String, String]): Map[String, String] =
     if (text == null || prompts == null) null
     else try b.answerAll(text, prompts)
-    catch { // error-as-row (X9, app:855-856): keep the batch alive
-      case e: Exception => Map("error" -> String.valueOf(e.getMessage))
-    }
-  }
+    catch { case e: Exception => Map("error" -> String.valueOf(e.getMessage)) }
+
+  private def mkExtractUdf(b: DocAiBackend) =
+    udf(extract(b, _: String, _: Map[String, String]))
 
   /** RFC-8259-complete JSON string escape: backslash, quote, and ALL
     * control chars — answers are raw document sentences, which can
@@ -85,22 +92,26 @@ object AiFunctions {
     sb.toString
   }
 
-  /** AI_EXTRACT returning the reference's exact JSON envelope
-    * {"response": {field: answer}} (app:503, app:854, app:962).
+  /** The reference's exact JSON envelope {"response": {field: answer}}
+    * (app:503, app:854, app:962) of one extract map, or {"error": msg}
+    * for the error row — told apart from a real field named `error` by
+    * the prompt map asking for it.
     */
-  private def mkExtractJsonUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
-    if (text == null || prompts == null) null
-    else try {
-      val answers = b.answerAll(text, prompts)
-      val fields = answers.toSeq.sortBy(_._1).map { case (f, a) =>
-        s""""${jsonEscape(f)}": "${jsonEscape(a)}""""
-      }
-      s"""{"response": {${fields.mkString(", ")}}}"""
-    } catch { // error-as-row (X9): {"error": msg} like app:855-856
-      case e: Exception =>
-        s"""{"error": "${jsonEscape(String.valueOf(e.getMessage))}"}"""
+  private def envelope(answers: Map[String, String],
+                       prompts: Map[String, String]): String =
+    if (answers == null) null
+    else answers.get("error") match {
+      case Some(msg) if answers.size == 1 &&
+          (prompts == null || !prompts.contains("error")) =>
+        s"""{"error": "${jsonEscape(msg)}"}"""
+      case _ =>
+        val fields = answers.toSeq.sortBy(_._1).map { case (f, a) =>
+          s""""${jsonEscape(f)}": "${jsonEscape(a)}""""
+        }
+        s"""{"response": {${fields.mkString(", ")}}}"""
     }
-  }
+
+  private val envelopeUdf = udf(envelope _)
 
   private def mkClassifyUdf(b: DocAiBackend) = udf { (text: String) =>
     if (text == null) null else b.classify(text)
@@ -129,8 +140,12 @@ object AiFunctions {
     mkExtractUdf(backendRef)(text, prompts)
   def canonicalize_prompts(promptsJson: Column, className: Column): Column =
     canonicalizeUdf(promptsJson, className)
+  /** [[ai_extract]] in the reference's JSON envelope. */
   def ai_extract_json(text: Column, prompts: Column): Column =
-    mkExtractJsonUdf(backendRef)(text, prompts)
+    extract_envelope(ai_extract(text, prompts), prompts)
+  /** The JSON envelope of an `ai_extract` map already in the plan. */
+  def extract_envelope(answers: Column, prompts: Column): Column =
+    envelopeUdf(answers, prompts)
   def ai_classify(text: Column): Column = mkClassifyUdf(backendRef)(text)
   def parse_document(content: Column): Column =
     mkParseDocumentUdf(backendRef)(content)
@@ -143,7 +158,8 @@ object AiFunctions {
   def register(spark: SparkSession): Unit = {
     val b = backendRef
     spark.udf.register("ai_extract", mkExtractUdf(b))
-    spark.udf.register("ai_extract_json", mkExtractJsonUdf(b))
+    spark.udf.register("ai_extract_json", udf((t: String, p: Map[String, String]) =>
+      envelope(extract(b, t, p), p)))
     spark.udf.register("ai_classify", mkClassifyUdf(b))
     spark.udf.register("parse_document", mkParseDocumentUdf(b))
     spark.udf.register("ai_complete", mkCompleteUdf(b))

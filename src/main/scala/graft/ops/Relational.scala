@@ -140,11 +140,18 @@ object Relational {
   /** Unpivot a MapType column into (key, value) rows — the dict->rows
     * flatten of app:531-538, expressed with the built-in explode
     * Generator (no custom UDTF).
+    *
+    * `explode_outer` + a null-key filter, because for a plain explode
+    * InferFiltersFromGenerate pushes `size(m) > 0 AND isnotnull(m)`
+    * below the projection with `m`'s defining expression substituted —
+    * an AI UDF then runs three times per row. Map keys are never null,
+    * so the filter drops exactly the rows a null or empty map padded in.
     */
   def unpivotMap(df: DataFrame, mapCol: String, keyName: String, valName: String): DataFrame =
     df.select(
       df.columns.filterNot(_ == mapCol).map(col) :+
-        explode(col(mapCol)).as(Seq(keyName, valName)): _*)
+        explode_outer(col(mapCol)).as(Seq(keyName, valName)): _*)
+      .filter(col(keyName).isNotNull)
 
   /** Widen field rows into one row per id with a column per field name —
     * the dynamic-schema union of app:888-899 done set-based via pivot

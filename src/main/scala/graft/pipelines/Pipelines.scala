@@ -22,6 +22,10 @@ import graft.ops.Relational
   *
   * Streaming (app:838-906): per-file fan-out with incremental results
   * — Structured Streaming file source + foreachBatch persists.
+  *
+  * Every mode calls each AI function once per document: the
+  * {"response": ...} envelope is derived from the one `ai_extract` map,
+  * and `Relational.unpivotMap` keeps the optimizer from copying it.
   */
 object Pipelines {
 
@@ -120,8 +124,9 @@ object Pipelines {
         docRow.getString(2), className))
       .toDF("file_url", "relative_path", "text", "class_name")
       .withColumn("prompt_map", promptsLiteral(promptMap))
-      .withColumn("extraction_result", ai_extract_json(col("text"), col("prompt_map")))
       .withColumn("result_map", ai_extract(col("text"), col("prompt_map")))
+      .withColumn("extraction_result",
+        extract_envelope(col("result_map"), col("prompt_map")))
       .withColumn("ocr", to_json(struct(col("text").as("content"))))
       .withColumn("summary", ai_complete(lit("mistral-7b"),
         substring(col("text"), 1, 6000)))
@@ -217,29 +222,32 @@ object Pipelines {
     */
   def stream(cat: Catalog, stage: String, prompts: Map[String, String],
              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val promptsCol = promptsLiteral(prompts)
-    val dir = cat.stageDir(stage)
     val src = cat.spark.readStream.format("binaryFile")
       .schema(Catalog.binaryFileSchema)
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", 64) // pacing knob (X2)
-      .load(dir)
-    val stagePrefix = Catalog.stagePathPrefix(stage)
-    val extracted = src
-      .withColumn("relative_path",
-        regexp_replace(col("path"), stagePrefix, ""))
-      .withColumn("file_url", concat(lit(s"@$stage/"), col("relative_path")))
-      .withColumn("text", parse_document(col("content")))
-      .withColumn("class_name", ai_classify(col("text")))
-      .withColumn("extraction_result", ai_extract_json(col("text"), promptsCol))
-      .withColumn("result_map", ai_extract(col("text"), promptsCol))
+      .load(cat.stageDir(stage))
     val run = runToken(checkpoint)
-    extracted.writeStream
+    streamColumns(src, stage, prompts).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         persistBatch(cat, batch, run, batchId)
       }
       .start()
+  }
+
+  /** The stream's per-document columns over binaryFile rows of `stage`. */
+  private[pipelines] def streamColumns(files: DataFrame, stage: String,
+                                       prompts: Map[String, String]): DataFrame = {
+    val promptsCol = promptsLiteral(prompts)
+    files
+      .withColumn("relative_path",
+        regexp_replace(col("path"), Catalog.stagePathPrefix(stage), ""))
+      .withColumn("file_url", concat(lit(s"@$stage/"), col("relative_path")))
+      .withColumn("text", parse_document(col("content")))
+      .withColumn("class_name", ai_classify(col("text")))
+      .withColumn("result_map", ai_extract(col("text"), promptsCol))
+      .withColumn("extraction_result", extract_envelope(col("result_map"), promptsCol))
   }
 
   /** Stable run identity for idempotent-append tokens, tied to the

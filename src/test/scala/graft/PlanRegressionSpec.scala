@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards: the scale properties COVERAGE.md
@@ -903,6 +906,65 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     assert(cheapAt >= 0 && udfAt >= 0, filterLine)
     assert(cheapAt < udfAt,
       s"cheap conjunct must precede the UDF conjunct: $filterLine")
+  }
+
+  /** Model-calling UDFs by the class of their function: each Column
+    * helper builds its UDF from one lambda, so the class names the AI
+    * function wherever the optimizer moved or copied it.
+    */
+  private lazy val aiUdfNames: Map[Class[_], String] = {
+    import org.apache.spark.sql.functions.{lit, typedLit}
+    import graft.ai.AiFunctions._
+    val str = lit(null).cast("string")
+    Seq(
+      "parse_document" -> parse_document(lit(null).cast("binary")),
+      "ai_classify" -> ai_classify(str),
+      "ai_extract" -> ai_extract(str, typedLit(Map.empty[String, String])),
+      "ai_complete" -> ai_complete(lit("m"), str)
+    ).map { case (name, c) =>
+      val probe = spark.range(1).select(c).queryExecution.analyzed
+      val Seq(u) = aiUdfs(probe.flatMap(_.expressions), _ => true)
+      u.function.getClass -> name
+    }.toMap
+  }
+
+  private def aiUdfs(es: Seq[Expression], isAi: ScalaUDF => Boolean = u =>
+      aiUdfNames.contains(u.function.getClass)): Seq[ScalaUDF] =
+    es.flatMap(_.collect { case u: ScalaUDF if isAi(u) => u })
+
+  /** Each expected AI UDF appears once in the optimized plan, and none
+    * sits in a Filter (none of these pipelines writes one).
+    */
+  private def assertAiOnce(what: String, p: LogicalPlan, expected: Set[String]): Unit = {
+    val names = aiUdfs(p.flatMap(_.expressions)).map(u => aiUdfNames(u.function.getClass))
+    assert(names.groupBy(identity).map { case (n, ns) => n -> ns.size } ==
+      expected.map(_ -> 1).toMap, s"$what: AI UDFs $names in\n$p")
+    val inFilters = aiUdfs(p.collect { case f: Filter => f.condition })
+    assert(inFilters.isEmpty, s"$what: AI UDF inside an inferred Filter:\n$p")
+  }
+
+  test("pipeline plans call each AI UDF once, never in an inferred Filter") {
+    import graft.pipelines.Pipelines
+    // a plain explode over the extract map lets InferFiltersFromGenerate
+    // copy ai_extract(parse_document(content)) into a pushed-down
+    // size/isnotnull Filter: three model calls per document
+    val prompts = Map("title" -> "What is the title?", "date" -> "What is the date?")
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_ai_").toString
+    val cat = new graft.engine.Catalog(spark, root)
+    cat.ensureTables()
+    Seq("a.txt" -> "Invoice INV-9. Total $5.", "b.txt" -> "Contract. Term one year.")
+      .foreach { case (f, t) => cat.putFile("docs", f, t.getBytes("UTF-8")) }
+    assertAiOnce("batchSql",
+      Pipelines.batchSql(cat, "docs", prompts).queryExecution.optimizedPlan,
+      Set("parse_document", "ai_extract"))
+    assertAiOnce("batchSqlOverDocuments",
+      Pipelines.batchSqlOverDocuments(spark, sf, prompts).queryExecution.optimizedPlan,
+      Set("ai_extract"))
+    val q = Pipelines.stream(cat, "docs", prompts, root + "/cp")
+    try q.processAllAvailable() finally q.stop()
+    val microBatch = q.asInstanceOf[StreamingQueryWrapper]
+      .streamingQuery.lastExecution.optimizedPlan
+    assertAiOnce("stream", microBatch, Set("parse_document", "ai_classify", "ai_extract"))
   }
 
   test("HITS surfaces the pinned final half-steps; no cartesian") {

@@ -91,6 +91,13 @@ class AiFunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(j.startsWith("""{"error": """), j)
   }
 
+  test("a prompted field named error stays a response field, not an error row") {
+    val j = Seq(text).toDF("text")
+      .select(ai_extract_json(col("text"),
+        typedLit(Map("error" -> "What is the invoice number?")))).as[String].collect()(0)
+    assert(j.startsWith("""{"response": {"error": """) && j.contains("INV-42"), j)
+  }
+
   test("SQL registration exposes the functions") {
     AiFunctions.register(spark)
     val n = spark.sql(s"SELECT ai_classify('$text') AS c").collect()(0).getString(0)

@@ -104,17 +104,11 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming persists are exactly-once under foreachBatch replay") {
     val cat = stagedCat()
-    val batch = cat.directory("docs")
-      .withColumn("relative_path", col("relative_path"))
-      .withColumn("file_url", concat(lit("@docs/"), col("relative_path")))
-      .withColumn("text", graft.ai.AiFunctions.parse_document(col("content")))
-      .withColumn("class_name", graft.ai.AiFunctions.ai_classify(col("text")))
-      .withColumn("extraction_result",
-        graft.ai.AiFunctions.ai_extract_json(col("text"),
-          map(lit("t"), lit("What is the title?"))))
-      .withColumn("result_map",
-        graft.ai.AiFunctions.ai_extract(col("text"),
-          map(lit("t"), lit("What is the title?"))))
+    // the stream's own columns, over a batch read of the same stage
+    val batch = Pipelines.streamColumns(
+      spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+        .load(cat.stageDir("docs")),
+      "docs", Map("t" -> "What is the title?"))
     // a crash between the append and the checkpoint commit replays the
     // SAME (run, batchId): row counts must not change on the second run
     Pipelines.persistBatch(cat, batch, run = "runA", batchId = 0L)
