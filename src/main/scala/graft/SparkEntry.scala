@@ -2413,7 +2413,7 @@ object SparkEntry {
     // quadratic stage doesn't inherit the scan's single partition
     // count-less repartition kept deliberately: this is a BOUNDED
     // 200-doc audit slice (20k pairs) at every SF — an explicit
-    // 32-way spread measured 0.21→0.32 s at sf1 (SpreadAb), pure
+    // 32-way spread measured 0.21→0.32 s at sf1 (same-JVM A/B), pure
     // exchange overhead against a trivially small quadratic
     val sh = Dedup.shingleTable(
       t(s, d, "documents").filter(col("doc_id") < 200), "text", "doc_id", k = 3)
@@ -2454,7 +2454,7 @@ object SparkEntry {
     // count-less repartition kept deliberately (round-16 re-measured):
     // AQE coalesces this to ~5 partitions of the ~5 MB shingle table —
     // enough to clear the round-13 serial cliff — and forcing the full
-    // 32-way spread read 0.62→1.12 s at sf0.1 / 0.86× at sf1 (SpreadAb):
+    // 32-way spread read 0.62→1.12 s at sf0.1 / 0.86× at sf1 (same-JVM A/B):
     // more checkpoint blocks and join tasks than the pair stage repays
     val csh = Dedup.shingleTable(docs, "text", "doc_id", k = 3)
       .repartition(col("doc_id")).localCheckpoint()

@@ -187,7 +187,7 @@ object Dedup {
   private[ops] def normalizedToks(df: DataFrame, textCol: String,
                                   idCol: String): DataFrame =
     // NO serial-scan spread here — both variants were MEASURED and
-    // lost (SpreadAb, round 17): shuffling the token arrays read
+    // lost (same-JVM A/B, round 17): shuffling the token arrays read
     // 0.75-0.82x (per-token string objects serialize bigger than the
     // flat text), and shuffling raw text read 0.95-1.05x (the span
     // family's serial floor is the scan+split itself, and the native

@@ -166,8 +166,12 @@ object Graph {
     * ≈ 64 MB — comfortably one executor task, and ~100× below where
     * the distributed plan starts to win. Above the bound nothing
     * changes: the co-partitioned loop with scaled partitions is the
-    * 100-TB path (SCALE.md rounds 13–16). `graft.rank.kernel=off`
-    * replays the distributed plan for same-JVM A/Bs.
+    * 100-TB path (SCALE.md rounds 13–16). The same bound serves the
+    * HITS / BFS / k-core / label-propagation / triangle kernels, whose
+    * loops spend the same iters × (join + aggregate + pin)
+    * orchestration — ~10–30 sub-100ms jobs — below it. Every kernel
+    * dispatches through [[Fused.small]]; `spark.graft.fusedKernels=false`
+    * forces the distributed plans for one session.
     */
   private[graft] val kernelEdgeLimit: Long = 2L * 1000 * 1000
 
@@ -357,10 +361,9 @@ object Graph {
     val eRows = sizing.edgeRows
     // FUSED KERNEL dispatch (see [[kernelEdgeLimit]]): a small graph's
     // recurrence runs as one task instead of iters×(join+agg+pin)
-    // orchestration. Gate on eRows > 0 so the empty-graph contract
-    // (driver-side IllegalArgumentException) stays with the loop.
-    if (eRows > 0 && eRows <= kernelEdgeLimit && kernelEligible(shaped) &&
-        !sys.props.get("graft.rank.kernel").contains("off"))
+    // orchestration. The gate's eRows > 0 keeps the empty-graph
+    // contract (driver-side IllegalArgumentException) with the loop.
+    if (Fused.small(shaped, Seq("src", "dst"), kernelEdgeLimit)(eRows))
       return rankKernel(shaped, weightCol.isDefined, iters, damping, seeds,
         dedup = !materialized)
     // |V| upper bound: a symmetric graph's two sides are the SAME set
@@ -386,15 +389,8 @@ object Graph {
     //   customer→supplier graph), partial aggregation already reduces
     //   the shuffle to ~p×|dst| rows and the src-co-partitioned plan
     //   is strictly better (free outdeg, no per-round broadcast).
-    // measurement override (graft.tools.RankAb's regime A/B): a
-    // system property, not an env var, so one JVM can alternate
-    // regimes rep-for-rep under identical host drift
-    val smallV = sys.props.get("graft.rank.regime") match {
-      case Some("broadcast") => true
-      case Some("shuffle") => false
-      case _ => vApprox <= broadcastNodeLimit &&
-        2L * p * sizing.dstNodesApprox >= eRows
-    }
+    val smallV = vApprox <= broadcastNodeLimit &&
+      2L * p * sizing.dstNodesApprox >= eRows
     // below the threshold the machinery costs more than it saves —
     // simple plan, session confs untouched (AQE coalesces freely)
     val big = eRows >= coPartitionThreshold
@@ -460,11 +456,13 @@ object Graph {
     // aggregate dropped, a VIOLATED contract no longer redistributes a
     // stray sink's mass via __dm — it silently vanishes (the sink is
     // missing from deg entirely, so the left join drops its inbound
-    // contributions). One opt-in check (-Dgraft.rank.checkSymmetric=on;
-    // an anti-join job per call, too expensive to run unconditionally
-    // in the loop's hot path): every dst must appear in the degree
-    // table's node set, i.e. every receiver also sends.
-    if (symmetric && sys.props.get("graft.rank.checkSymmetric").contains("on")) {
+    // contributions). One opt-in check (session conf
+    // spark.graft.rank.checkSymmetric=true; an anti-join job per call,
+    // too expensive to run unconditionally in the loop's hot path):
+    // every dst must appear in the degree table's node set, i.e. every
+    // receiver also sends.
+    if (symmetric &&
+        spark.conf.get("spark.graft.rank.checkSymmetric", "false").toBoolean) {
       // deg was aggregated over degKey; the violable direction is the
       // OTHER endpoint column (an endpoint seen there but absent from
       // deg has no rank row / no out-edges)
@@ -498,27 +496,20 @@ object Graph {
     // dangling reference gone, each iteration references the previous
     // vector exactly once (the share projection), so the small
     // symmetric regime COULD skip the eager pin and unroll the loop
-    // as one lazy chain. graft.tools.RankLazyAb (same-JVM alternated
-    // B,A,B,A at sf0.1, 3 blocks): lazy read 0.73× on q_pagerank /
+    // as one lazy chain. A same-JVM A/B (alternated B,A,B,A at sf0.1,
+    // 3 blocks; OPTIMIZATION_r16.md): lazy read 0.73× on q_pagerank /
     // 1.06× on q_pagerank_ppr vs the eager pin — no win, because each
     // per-iteration broadcast(share) still materializes its whole
     // sub-chain as its own broadcast-build job, so laziness saves no
     // job launches and pays deeper plans. Eager pins stay on every
-    // path (`graft.rank.lazy=on` replays the lazy variant for
-    // measurement only).
-    val pinIter: DataFrame => DataFrame =
-      if (sys.props.get("graft.rank.lazy").contains("on")) identity else pin
-    var ranks = pinIter(deg.select(col("node"), col("outdeg"),
+    // path.
+    var ranks = pin(deg.select(col("node"), col("outdeg"),
       round(tele, 8).as("rank")))
     for (_ <- 1 to iters) {
       // one-row dangling-mass aggregate, broadcast by construction
-      // (general path only — see the symmetric contract note above;
-      // graft.rank.dangling=keep replays the old always-aggregate
-      // plan for same-JVM measurement, output identical: __dm ≡ 0)
-      val skipDangling = symmetric &&
-        !sys.props.get("graft.rank.dangling").contains("keep")
+      // (general path only — see the symmetric contract note above)
       val dangling =
-        if (skipDangling) null
+        if (symmetric) null
         else ranks.filter(col("outdeg") === 0)
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))
       // small-|V| regime: ranks broadcast, agg partition-local on the
@@ -551,8 +542,8 @@ object Graph {
           case Some(_) => sum(col("__r") * col("w") / col("__od"))
         }).as("__in"))
       val joined = deg.join(contribs, deg("node") === contribs("dst"), "left")
-      ranks = pinIter(
-        if (skipDangling)
+      ranks = pin(
+        if (symmetric)
           joined.select(col("node"), col("outdeg"),
             round(lit(oneMinusD) * tele + lit(damping) *
               coalesce(col("__in"), lit(0.0)), 8)
@@ -569,19 +560,6 @@ object Graph {
     if (big) e.unpersist(blocking = false)
     ranks.select(col("node"), col("rank"))
     }
-  }
-
-  /** The kernel packs (srcIdx, dstIdx) int pairs into one long for the
-    * dedup set, so node ids must survive an exact cast to long — every
-    * integral endpoint type qualifies; anything else (string ids,
-    * decimals) stays on the distributed loop.
-    */
-  private def kernelEligible(shaped: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    Seq("src", "dst").forall(c => shaped.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    })
   }
 
   /** Spark's exact round(double, 8): the codegen for Round on doubles
@@ -765,34 +743,6 @@ object Graph {
         }
       })
   }
-
-  /** Dispatch gate for the round-17 fused one-task kernels on the
-    * NON-rank iterative operators (HITS / BFS / k-core / label
-    * propagation): same [[kernelEdgeLimit]] bound and integral-id
-    * eligibility as the rank kernel, shared `graft.graph.kernel=off`
-    * toggle so one JVM can alternate kernel/loop rep-for-rep. The
-    * rationale is the rank kernel's: below ~2M edge rows the
-    * distributed loops spend iters × (join + aggregate + pin)
-    * orchestration — ~10–30 sub-100ms jobs — on arithmetic a single
-    * task replays in milliseconds, while above the bound nothing
-    * changes and the 100-TB loop shapes stay exactly as measured in
-    * SCALE.md rounds 13–16.
-    */
-  private[graft] def graphKernelEnabled: Boolean =
-    !sys.props.get("graft.graph.kernel").contains("off")
-
-  private def integralCols(df: DataFrame, cols: Seq[String]): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    cols.forall(c => df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    })
-  }
-
-  private def graphKernelOn(eRows: Long, df: DataFrame,
-                            cols: Seq[String]): Boolean =
-    eRows > 0 && eRows <= kernelEdgeLimit && integralCols(df, cols) &&
-      graphKernelEnabled
 
   /** The widest of two integral types — Spark's tightest common type
     * for the kernel outputs that replay a union/join of two endpoint
@@ -1156,10 +1106,10 @@ object Graph {
     // |E| sizes the scale knobs (the rankLoop contract): partition
     // count tracks the data, pins go to disk past the threshold
     val eRows = sizingHint.map(_.edgeRows).getOrElse(e0.count())
-    // FUSED KERNEL dispatch (round 17, see [[graphKernelOn]]): a small
-    // graph's alternating matvec runs as one task instead of
+    // FUSED KERNEL dispatch (round 17, see [[kernelEdgeLimit]]): a
+    // small graph's alternating matvec runs as one task instead of
     // iters × (2 joins + 2 aggregates + 2 norm broadcasts + 2 pins)
-    if (graphKernelOn(eRows, e0, Seq("src", "dst")))
+    if (Fused.small(e0, Seq("src", "dst"), kernelEdgeLimit)(eRows))
       return hitsKernel(e0, iters, dedup = !materialized)
     val p = scaledPartitions(spark, eRows)
     val pin = pinner(spark, checkpointDir, eRows)
@@ -1242,14 +1192,11 @@ object Graph {
                      sizingHint: Option[GraphSizing] = None): DataFrame = {
     val pin = trianglePin(edges, sizingHint)
     val e = pin(canonicalEdges(edges, srcCol, dstCol))
-    // FUSED KERNEL dispatch (round 17, the [[graphKernelEnabled]]
-    // family): the canonical set is pinned, so the gate count is a
-    // cheap checkpoint scan
-    if (graphKernelEnabled && integralCols(e, Seq("a", "b"))) {
-      val c = e.count()
-      if (c > 0 && c <= kernelEdgeLimit)
-        return triangleKernel(e).select(col("node"), col("n_triangles"))
-    }
+    // FUSED KERNEL dispatch (round 17, see [[kernelEdgeLimit]]): the
+    // canonical set is pinned, so the gate count is a cheap checkpoint
+    // scan
+    if (Fused.small(e, Seq("a", "b"), kernelEdgeLimit)(e.count()))
+      return triangleKernel(e).select(col("node"), col("n_triangles"))
     triangleCountsOn(e, degreesOf(e), pin)
   }
 
@@ -1416,14 +1363,11 @@ object Graph {
     // alongside the triangle count, and the ratio is computed with the
     // SAME Spark expression as the distributed path — exact integers
     // in, so the surfaces are bit-identical
-    if (graphKernelEnabled && integralCols(e, Seq("a", "b"))) {
-      val c = e.count()
-      if (c > 0 && c <= kernelEdgeLimit)
-        return triangleKernel(e).filter(col("deg") >= 2)
-          .select(col("node"), col("deg"), col("n_triangles"),
-            round(lit(2.0) * col("n_triangles") /
-              (col("deg") * (col("deg") - 1)), 6).as("clustering_coef"))
-    }
+    if (Fused.small(e, Seq("a", "b"), kernelEdgeLimit)(e.count()))
+      return triangleKernel(e).filter(col("deg") >= 2)
+        .select(col("node"), col("deg"), col("n_triangles"),
+          round(lit(2.0) * col("n_triangles") /
+            (col("deg") * (col("deg") - 1)), 6).as("clustering_coef"))
     val deg = degreesOf(e)
     deg.filter(col("deg") >= 2)
       .join(triangleCountsOn(e, deg, pin), Seq("node"))
@@ -1496,14 +1440,11 @@ object Graph {
     require(iters >= 1 && iters <= 64, "iters in [1, 64]")
     val pin = withCheckpointDir(edges, checkpointDir)
     val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    // FUSED KERNEL dispatch (round 17, see [[graphKernelOn]]): the
+    // FUSED KERNEL dispatch (round 17, see [[kernelEdgeLimit]]): the
     // canonical set is checkpointed, so the gate count is cheap; the
     // per-round join + count aggregate + window collapse to one task
-    if (graphKernelEnabled && integralCols(e, Seq("a", "b"))) {
-      val eCnt = e.count()
-      if (eCnt > 0 && eCnt <= kernelEdgeLimit)
-        return lpaKernel(e, iters)
-    }
+    if (Fused.small(e, Seq("a", "b"), kernelEdgeLimit)(e.count()))
+      return lpaKernel(e, iters)
     val adj = e.select(col("a").as("node"), col("b").as("nbr"))
       .union(e.select(col("b").as("node"), col("a").as("nbr")))
     var labels = adj.select(col("node")).distinct()
@@ -1566,14 +1507,11 @@ object Graph {
     // task; kept for the record.)
     val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull))
-    // FUSED KERNEL dispatch (round 17, see [[graphKernelOn]]): below
-    // the bound the hops × (join + distinct + anti-join + pin)
+    // FUSED KERNEL dispatch (round 17, see [[kernelEdgeLimit]]):
+    // below the bound the hops × (join + distinct + anti-join + pin)
     // orchestration collapses to one task over the pinned edges.
-    if (graphKernelEnabled && integralCols(e, Seq("src", "dst"))) {
-      val eCnt = e.count()
-      if (eCnt > 0 && eCnt <= kernelEdgeLimit)
-        return bfsKernel(e, sources, maxHops)
-    }
+    if (Fused.small(e, Seq("src", "dst"), kernelEdgeLimit)(e.count()))
+      return bfsKernel(e, sources, maxHops)
     var settled = pin(sources.distinct.toDF("node")
       .select(col("node"), lit(0L).as("dist")))
     var frontier = settled.select(col("node"))
@@ -1627,15 +1565,12 @@ object Graph {
     val pin = pinner(edges.sparkSession, checkpointDir,
       sizingHint.map(_.edgeRows).getOrElse(0L))
     var e = pin(canonicalEdges(edges, srcCol, dstCol))
-    // FUSED KERNEL dispatch (round 17, see [[graphKernelOn]]): the
+    // FUSED KERNEL dispatch (round 17, see [[kernelEdgeLimit]]): the
     // canonical set is pinned, so the gate count is a cheap checkpoint
     // scan; the per-round degree aggregate + two semi-joins + re-pin
     // collapse to one task below the bound
-    if (graphKernelEnabled && integralCols(e, Seq("a", "b"))) {
-      val eCnt = e.count()
-      if (eCnt > 0 && eCnt <= kernelEdgeLimit)
-        return kcoreKernel(e, k, rounds)
-    }
+    if (Fused.small(e, Seq("a", "b"), kernelEdgeLimit)(e.count()))
+      return kcoreKernel(e, k, rounds)
     for (_ <- 1 to rounds) {
       val keep = degreesOf(e).filter(col("deg") >= k)
         .select(col("node"))

@@ -145,8 +145,9 @@ object Ivf {
     * distributed partial-aggregate merge order, absorbed by the
     * consumers' contracts exactly as the loop's own nondeterminism
     * already is (IvfSpec pins kernel == loop EXACTLY on integer-valued
-    * vectors, where every sum is order-exact).
-    * `graft.ivf.kernel=off` replays the per-step jobs.
+    * vectors, where every sum is order-exact). Dispatched through
+    * [[Fused.small]]; `spark.graft.fusedKernels=false` forces the
+    * per-step jobs for one session.
     */
   private val kernelRowLimit: Long = 50L * 1000
 
@@ -161,7 +162,7 @@ object Ivf {
     // storage level we set OURSELVES: persist() returns the same
     // Dataset, so unpersisting a corpus the caller had already cached
     // would silently evict THEIR cache
-    // NOT spread (round-16 measured negative, SpreadAb): real corpora
+    // NOT spread (round-16 measured negative, same-JVM A/B): real corpora
     // and the scaled fixtures arrive as multiple scan splits, so the
     // Lloyd passes already parallelize; an explicit repartition here
     // costs an extra exchange per build and lost 20–35% on the
@@ -186,19 +187,8 @@ object Ivf {
       // FUSED KERNEL dispatch (see [[kernelRowLimit]]): integral ids
       // only — the kernel's sample tie-break compares ids as longs,
       // exactly the orderBy's secondary key on those types
-      val integralId = corpus.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.ByteType => true
-        case _ => false
-      }
-      lazy val corpusRows = c.count()
-      val kernelOn = integralId &&
-        !sys.props.get("graft.ivf.kernel").contains("off") &&
-        corpusRows > 0 && corpusRows <= kernelRowLimit
       val cen: Cen =
-        if (kernelOn) {
+        if (Fused.small(c, Seq(idCol), kernelRowLimit)(c.count())) {
           // md5 computed by SPARK's own expression (not re-implemented),
           // so the sample order is the orderBy's bit-for-bit
           val rows = c

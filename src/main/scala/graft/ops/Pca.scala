@@ -94,8 +94,7 @@ object Pca {
     val xs = emb.select(col(vecCol).as("__v")).localCheckpoint()
     val n = xs.count()
     require(n > 0, "empty embedding table")
-    if (n <= kernelRowLimit &&
-        !sys.props.get("graft.pca.kernel").contains("off")) {
+    if (Fused.small(xs, Nil, kernelRowLimit)(n)) {
       val rows = xs.as[Array[Float]].coalesce(1)
         .mapPartitions(it => fusedFitBody(it, dim, m, iters, n))
         .collect()
@@ -257,10 +256,11 @@ object Pca {
     * bound keeps the buffered float matrix small (200k × 64 ≈ 51 MB —
     * one comfortable task); above it the per-step jobs are the honest
     * distributed shape (the matvec streams, nothing is buffered).
-    * `graft.pca.kernel=off` replays the per-step jobs for same-JVM
-    * A/Bs. Arithmetic is IDENTICAL by construction: the kernel calls
-    * the same [[fitSweep]]/[[powerLoop]] code with an in-memory matvec
-    * that replays [[Core.matvec]]'s exact per-row expression
+    * Dispatched through [[Fused.small]]; `spark.graft.fusedKernels=false`
+    * forces the per-step jobs for one session. Arithmetic is IDENTICAL
+    * by construction: the kernel calls the same [[fitSweep]] /
+    * [[powerLoop]] code with an in-memory matvec that replays
+    * [[Core.matvec]]'s exact per-row expression
     * (float→double promotion, index-order accumulation); sum-order
     * wobble vs the distributed partial aggregates is absorbed by the
     * recurrence's own 8dp rounding, the [[Graph.pageRank]] posture.

@@ -45,25 +45,18 @@ object Similarity {
     * aggregate or rank with total tie-breaks).
     */
   private[graft] def spread(df: DataFrame, keys: Column*): DataFrame = {
-    // measurement override (the RankAb regime pattern): a system
-    // property, not an env var, so one JVM can alternate the spread
-    // on/off rep-for-rep under identical host drift ("off" = the
-    // pre-round-16 effective shape: scan splits / AQE-coalesced)
-    if (sys.props.get("graft.spread").contains("off")) df
-    else {
-      // max(cores, shuffle.partitions) — REPARTITION_BY_NUM is exempt
-      // from ALL AQE rewrites (including skew-split), so pinning the
-      // count to exactly defaultParallelism would CAP the quadratic
-      // stages this helper protects on deployments whose
-      // shuffle.partitions is tuned above core count (round-17
-      // ADVICE). In the bench harness the two are equal, so local
-      // numbers are unchanged; on a tuned cluster the spread now
-      // honors the operator-parallelism the session asked for.
-      val sess = df.sparkSession
-      val p = math.max(sess.sparkContext.defaultParallelism,
-        sess.conf.get("spark.sql.shuffle.partitions", "1").toInt)
-      if (keys.isEmpty) df.repartition(p) else df.repartition(p, keys: _*)
-    }
+    // max(cores, shuffle.partitions) — REPARTITION_BY_NUM is exempt
+    // from ALL AQE rewrites (including skew-split), so pinning the
+    // count to exactly defaultParallelism would CAP the quadratic
+    // stages this helper protects on deployments whose
+    // shuffle.partitions is tuned above core count (round-17
+    // ADVICE). In the bench harness the two are equal, so local
+    // numbers are unchanged; on a tuned cluster the spread now
+    // honors the operator-parallelism the session asked for.
+    val sess = df.sparkSession
+    val p = math.max(sess.sparkContext.defaultParallelism,
+      sess.conf.get("spark.sql.shuffle.partitions", "1").toInt)
+    if (keys.isEmpty) df.repartition(p) else df.repartition(p, keys: _*)
   }
 
   /** [[spread]], but ONLY when the input arrives with fewer splits
@@ -79,16 +72,10 @@ object Similarity {
     * on benfordScreen (round 17), where the scan already
     * parallelizes. Callers that already repartitioned upstream pass
     * the gate with >= cores splits and are untouched.
-    *
-    * `graft.spread.scan=off` replays the ungated shape for same-JVM
-    * A/Bs (the [[spread]] toggle pattern).
     */
   private[graft] def spreadSerialScan(df: DataFrame, keys: Column*): DataFrame = {
-    if (sys.props.get("graft.spread.scan").contains("off")) df
-    else {
-      val p = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions * 2 >= p) df else spread(df, keys: _*)
-    }
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions * 2 >= p) df else spread(df, keys: _*)
   }
 
   /** Dot product of two array columns (double accumulation) — the

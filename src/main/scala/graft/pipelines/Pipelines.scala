@@ -203,7 +203,7 @@ object Pipelines {
                             prompts: Map[String, String]): DataFrame = {
     val promptsCol = promptsLiteral(prompts)
     // spread-before-extract was MEASURED a 0.75-0.82x regression here
-    // (SpreadAb, round 17 second pass): the ai_extract scan stage is
+    // (same-JVM A/B, round 17 second pass): the ai_extract scan stage is
     // read-dominated, not extract-dominated, so the text exchange
     // costs more than the parallelism returns — kept serial
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -49,7 +49,7 @@ object ContainProfile {
     // ---- q_dedup_containment, phase by phase (threshold 0.8, k=3,
     // winnow 5/4 — the entry's parameters) ----
     // phases mirror the ROUND-16 operator (hash-carried fp ids and
-    // shingle sets); graft.tools.ContainAb holds the old-vs-new A/B
+    // shingle sets); the old-vs-new A/B verdict is in SCALE.md
     val fps = t("P1 winnow fingerprints (scan+hash+pin)") {
       val x = Dedup.winnowFingerprints(corpus, "text", "doc_id", 5, 4)
         .select(col("doc_id"), xxhash64(col("__fp")).as("__fp"))

@@ -7,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * so co-tenant load lands on both scales equally and the RATIO —
   * the number every per-decade gate is about — survives a host that
   * poisons window-to-window comparisons (this round measured probe
-  * spreads of 2–3.6× inside single filtered windows). The same-JVM
-  * sibling of RankAb/BigramAb/ContainAb, generalized over
-  * [[graft.SparkEntry.queries]].
+  * spreads of 2–3.6× inside single filtered windows). The generic
+  * same-JVM harness, over any [[graft.SparkEntry.queries]] entry.
   *
   * Run: sbt "runMain graft.tools.CrossSfAb .data/sf10full .data/sf30rel 2 q_pagerank q_j1_correlated_max"
   */

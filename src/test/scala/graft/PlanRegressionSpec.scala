@@ -18,6 +18,19 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  private def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally {
+      val walk = java.nio.file.Files.walk(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.toSeq.reverse
+          .foreach(x => java.nio.file.Files.deleteIfExists(x))
+      } finally walk.close()
+    }
+  }
+
   test("dynamic predicates reach the parquet scan (P6)") {
     val p = plan("q_p6_dynamic_where")
     assert(p.contains("PushedFilters: [IsNotNull("), p)
@@ -89,8 +102,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("partitioned layout prunes scans via PartitionFilters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune_").toString
-    try {
+    withTempDir("graft_prune_") { dir =>
       graft.ops.Bucketing.writePartitioned(
         spark.read.parquet(s"$sf/documents.parquet")
           .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -105,13 +117,6 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
         s"source filter must prune partitions:\n$p")
       assert(!"PushedFilters: \\[[^\\]]*source".r.findFirstIn(p).isDefined,
         s"source is a directory key, not a data column:\n$p")
-    } finally {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(x => java.nio.file.Files.deleteIfExists(x))
-      } finally walk.close()
     }
   }
 
@@ -125,15 +130,20 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("winnowing fingerprint selection is scan-stage only (zero exchanges)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // the op's inherent shape — asserted with the round-17 serial-scan
-    // spread off: selection is doc-local, nothing shuffles
-    sys.props("graft.spread.scan") = "off"
-    try {
-      val p = graft.ops.Dedup.winnowFingerprints(docs, "text", "doc_id", 5, 4)
+    // the op's inherent shape, on a multi-file copy whose scan already
+    // has >= cores/2 splits, so the round-17 serial-scan spread skips:
+    // selection is doc-local, nothing shuffles
+    withTempDir("graft_winnow_") { dir =>
+      docs.repartition(4).write.parquet(s"$dir/docs")
+      val multi = spark.read.parquet(s"$dir/docs")
+      val cores = spark.sparkContext.defaultParallelism
+      assert(multi.rdd.getNumPartitions * 2 >= cores,
+        s"copy must scan as >= $cores/2 splits: ${multi.rdd.getNumPartitions}")
+      val p = graft.ops.Dedup.winnowFingerprints(multi, "text", "doc_id", 5, 4)
         .queryExecution.executedPlan.toString
       assert(!p.contains("Exchange"),
         s"winnow selection is doc-local and must not shuffle:\n$p")
-    } finally sys.props.remove("graft.spread.scan")
+    }
     // the gated audit-scale spread (single-split scan only): exactly
     // ONE explicit-count exchange, placed BELOW the fingerprint
     // explode so it carries the source-sized (id, text) projection,
@@ -633,9 +643,8 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     // plan is a bounded checkpoint scan. The distributed loop is
     // forced here (the kernel dispatch otherwise owns this scale —
     // asserted separately below); dispatch happens when the query
-    // builds its DataFrame, so the prop covers the plan() call.
-    sys.props("graft.rank.kernel") = "off"
-    val p = try plan("q_pagerank") finally sys.props.remove("graft.rank.kernel")
+    // builds its DataFrame, so withLoop covers the plan() call.
+    val p = withLoop(plan("q_pagerank"))
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"iteration recompute leaked into the final plan:\n$p")
@@ -741,9 +750,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("label propagation pins per-round labels — final plan reads the checkpoint") {
     // loop forced (the fused kernel owns this scale by default)
-    sys.props("graft.graph.kernel") = "off"
-    val p = try plan("q_graph_communities")
-      finally sys.props.remove("graft.graph.kernel")
+    val p = withLoop(plan("q_graph_communities"))
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
@@ -853,9 +860,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("BFS final plan reads per-hop checkpoints — lineage truncated") {
     // loop forced (the fused kernel owns this scale by default)
-    sys.props("graft.graph.kernel") = "off"
-    val p = try plan("q_graph_sssp")
-      finally sys.props.remove("graft.graph.kernel")
+    val p = withLoop(plan("q_graph_sssp"))
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("CartesianProduct"), p)
     val kp = plan("q_graph_sssp")
@@ -969,9 +974,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("HITS surfaces the pinned final half-steps; no cartesian") {
     // loop forced (the fused kernel owns this scale by default)
-    sys.props("graft.graph.kernel") = "off"
-    val p = try plan("q_graph_hits")
-      finally sys.props.remove("graft.graph.kernel")
+    val p = withLoop(plan("q_graph_hits"))
     // per-round score vectors pin (localCheckpoint): the surfaced plan
     // is the full-outer assembly over the final pinned h/a vectors
     assert(p.contains("Scan ExistingRDD"), p)
@@ -984,9 +987,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("k-core peel reads per-round checkpoints; degrees aggregate partially") {
     // loop forced (the fused kernel owns this scale by default)
-    sys.props("graft.graph.kernel") = "off"
-    val p = try plan("q_graph_kcore")
-      finally sys.props.remove("graft.graph.kernel")
+    val p = withLoop(plan("q_graph_kcore"))
     // the per-round semi-join restriction lives BEHIND the round pin —
     // the surfaced plan must be degree-count over the checkpoint
     assert(p.contains("Scan ExistingRDD"), p)

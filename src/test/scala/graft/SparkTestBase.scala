@@ -17,4 +17,14 @@ object SparkTestBase {
 
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `body` with the fused kernels switched off for this session
+    * (`spark.graft.fusedKernels=false`), so every kernel operator
+    * takes its distributed loop. Dispatch happens when an operator
+    * builds its DataFrame, so `body` only needs to cover that call.
+    */
+  def withLoop[A](body: => A): A = {
+    spark.conf.set(graft.ops.Fused.switch, "false")
+    try body finally spark.conf.unset(graft.ops.Fused.switch)
+  }
 }

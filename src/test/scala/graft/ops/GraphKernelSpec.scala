@@ -14,15 +14,6 @@ import graft.SparkTestBase
 class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  /** Build the plan with the distributed loop forced on (`off`), then
-    * restore; the dispatch happens at call time, so the prop only
-    * needs to cover the Graph.* call itself.
-    */
-  private def withLoop[A](body: => A): A = {
-    sys.props("graft.rank.kernel") = "off"
-    try body finally sys.props.remove("graft.rank.kernel")
-  }
-
   private val digraph: Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     // ~300 edges over 40 nodes: dangling nodes (node 39 never a src),
@@ -109,26 +100,18 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     assert(k == l)
   }
 
-  /** Same as [[withLoop]] for the round-17 non-rank kernels' shared
-    * toggle (hits / BFS / k-core / label propagation).
-    */
-  private def withLoopG[A](body: => A): A = {
-    sys.props("graft.graph.kernel") = "off"
-    try body finally sys.props.remove("graft.graph.kernel")
-  }
-
   test("hits kernel == distributed loop, exactly (dup edges, bipartite-ish)") {
     val e = digraph.toDF("src", "dst")
     val k = Graph.hits(e, "src", "dst", iters = 3)
       .as[(Long, Double, Double)].collect().toSet
-    val l = withLoopG(Graph.hits(e, "src", "dst", iters = 3))
+    val l = withLoop(Graph.hits(e, "src", "dst", iters = 3))
       .as[(Long, Double, Double)].collect().toSet
     assert(k == l, s"kernel $k vs loop $l")
     // materialized path (dedup skipped in the kernel, like the loop)
     val ded = digraph.distinct.toDF("src", "dst")
     val km = Graph.hits(ded, "src", "dst", iters = 2, materialized = true)
       .as[(Long, Double, Double)].collect().toSet
-    val lm = withLoopG(Graph.hits(ded, "src", "dst", iters = 2,
+    val lm = withLoop(Graph.hits(ded, "src", "dst", iters = 2,
         materialized = true))
       .as[(Long, Double, Double)].collect().toSet
     assert(km == lm, s"kernel $km vs loop $lm")
@@ -139,7 +122,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val k = Graph.hits(e, "src", "dst", iters = 2)
       .as[(Long, Double, Double)].collect().toSet
-    val l = withLoopG(Graph.hits(e, "src", "dst", iters = 2))
+    val l = withLoop(Graph.hits(e, "src", "dst", iters = 2))
       .as[(Long, Double, Double)].collect().toSet
     assert(k == l, s"kernel $k vs loop $l")
     assert(k.exists { case (n, h, a) => n == 1L && a == 0.0 && h > 0 })
@@ -152,7 +135,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
       val k = Graph.shortestPaths(sym, "src", "dst",
           sources = Seq(4L, 8L, 4L, 999L), maxHops = hops)
         .as[(Long, Long)].collect().toSet
-      val l = withLoopG(Graph.shortestPaths(sym, "src", "dst",
+      val l = withLoop(Graph.shortestPaths(sym, "src", "dst",
           sources = Seq(4L, 8L, 4L, 999L), maxHops = hops))
         .as[(Long, Long)].collect().toSet
       assert(k == l, s"hops=$hops kernel $k vs loop $l")
@@ -162,7 +145,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     val k1 = Graph.shortestPaths(digraph.toDF("src", "dst"), "src", "dst",
         sources = Seq(0L), maxHops = 2)
       .as[(Long, Long)].collect().toSet
-    val l1 = withLoopG(Graph.shortestPaths(digraph.toDF("src", "dst"),
+    val l1 = withLoop(Graph.shortestPaths(digraph.toDF("src", "dst"),
         "src", "dst", sources = Seq(0L), maxHops = 2))
       .as[(Long, Long)].collect().toSet
     assert(k1 == l1, s"kernel $k1 vs loop $l1")
@@ -174,7 +157,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     for ((k0, r) <- Seq((2, 1), (3, 3), (8, 2))) {
       val k = Graph.kCorePeel(messy, "src", "dst", k = k0, rounds = r)
         .as[(Long, Long)].collect().toSet
-      val l = withLoopG(Graph.kCorePeel(messy, "src", "dst", k = k0,
+      val l = withLoop(Graph.kCorePeel(messy, "src", "dst", k = k0,
           rounds = r))
         .as[(Long, Long)].collect().toSet
       assert(k == l, s"k=$k0 rounds=$r kernel $k vs loop $l")
@@ -186,7 +169,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     for (it <- Seq(1, 2, 3)) {
       val k = Graph.labelPropagation(messy, "src", "dst", iters = it)
         .as[(Long, Long)].collect().toSet
-      val l = withLoopG(Graph.labelPropagation(messy, "src", "dst",
+      val l = withLoop(Graph.labelPropagation(messy, "src", "dst",
           iters = it))
         .as[(Long, Long)].collect().toSet
       assert(k == l, s"iters=$it kernel $k vs loop $l")
@@ -200,7 +183,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
       .toDF("src", "dst")
     val k = Graph.triangleCounts(messy, "src", "dst")
       .as[(Long, Long)].collect().toSet
-    val l = withLoopG(Graph.triangleCounts(messy, "src", "dst"))
+    val l = withLoop(Graph.triangleCounts(messy, "src", "dst"))
       .as[(Long, Long)].collect().toSet
     assert(k == l, s"kernel $k vs loop $l")
     assert(k.contains((555L, 0L)), "zero-triangle nodes surface on both paths")
@@ -210,7 +193,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     val messy = (digraph ++ digraph.map(_.swap)).toDF("src", "dst")
     val k = Graph.clusteringCoefficient(messy, "src", "dst")
       .as[(Long, Long, Long, Double)].collect().toSet
-    val l = withLoopG(Graph.clusteringCoefficient(messy, "src", "dst"))
+    val l = withLoop(Graph.clusteringCoefficient(messy, "src", "dst"))
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(k == l, s"kernel $k vs loop $l")
     // a hand-checked shape: K4 on 100..103 plus a pendant — every K4
@@ -230,7 +213,7 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.schema("node").dataType ==
       org.apache.spark.sql.types.IntegerType)
     assert(hits.as[(Int, Double, Double)].collect().toSet ==
-      withLoopG(Graph.hits(e, "src", "dst", iters = 2))
+      withLoop(Graph.hits(e, "src", "dst", iters = 2))
         .as[(Int, Double, Double)].collect().toSet)
     val kc = Graph.kCorePeel(e, "src", "dst", k = 2, rounds = 1)
     assert(kc.schema("node").dataType ==
@@ -239,14 +222,14 @@ class GraphKernelSpec extends AnyFunSuite with SparkTestBase {
     assert(lp.schema("community").dataType ==
       org.apache.spark.sql.types.IntegerType)
     assert(lp.as[(Int, Int)].collect().toSet ==
-      withLoopG(Graph.labelPropagation(e, "src", "dst", iters = 2))
+      withLoop(Graph.labelPropagation(e, "src", "dst", iters = 2))
         .as[(Int, Int)].collect().toSet)
     // sssp's node type is LongType by the loop's union promotion
     val sp = Graph.shortestPaths(e, "src", "dst", Seq(1L), maxHops = 2)
     assert(sp.schema("node").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(sp.as[(Long, Long)].collect().toSet ==
-      withLoopG(Graph.shortestPaths(e, "src", "dst", Seq(1L), maxHops = 2))
+      withLoop(Graph.shortestPaths(e, "src", "dst", Seq(1L), maxHops = 2))
         .as[(Long, Long)].collect().toSet)
   }
 

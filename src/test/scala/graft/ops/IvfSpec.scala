@@ -123,9 +123,7 @@ class IvfSpec extends AnyFunSuite with SparkTestBase {
       .select($"vec_id", $"centroid_id").as[(Long, Int)].collect().toMap
     for (k <- Seq(2, 5); it <- Seq(0, 1, 3)) {
       val kIdx = Ivf.build(df, k, it)
-      sys.props("graft.ivf.kernel") = "off"
-      val lIdx = try Ivf.build(df, k, it)
-        finally sys.props.remove("graft.ivf.kernel")
+      val lIdx = withLoop(Ivf.build(df, k, it))
       assert(centroids(kIdx) == centroids(lIdx), s"k=$k iters=$it centroids")
       assert(asg(kIdx) == asg(lIdx), s"k=$k iters=$it assignments")
     }

@@ -12,11 +12,23 @@ class PcaSpec extends AnyFunSuite with SparkTestBase {
         "embedding", dim, iters)
       .as[(Long, Double, Double, Double)].collect().sortBy(_._1)
 
+  // all variance along e1 (0-indexed dim 1), mean zero
+  private val oneAxis = Seq(-2f, -1f, 1f, 2f).map(t => Array(0f, t, 0f, 0f))
+  // dim 0 spread +-3 (var 9), dim 2 spread +-1 (var 1)
+  private val twoAxes = Seq(
+    Array(3f, 0f, 1f, 0f), Array(-3f, 0f, -1f, 0f),
+    Array(3f, 0f, -1f, 0f), Array(-3f, 0f, 1f, 0f))
+  // axis variances: dim0 = 9, dim2 = 4, dim3 = 1 (mean zero each)
+  private val threeAxes = Seq(
+    Array(3f, 0f, 2f, 1f), Array(-3f, 0f, -2f, -1f),
+    Array(3f, 0f, -2f, 1f), Array(-3f, 0f, 2f, -1f),
+    Array(3f, 0f, 2f, -1f), Array(-3f, 0f, -2f, 1f),
+    Array(3f, 0f, -2f, -1f), Array(-3f, 0f, 2f, 1f))
+  private val ramp = (1 to 20).map(i =>
+    Array(i.toFloat, (i % 3).toFloat, (i % 7).toFloat, 1f))
+
   test("one-dimensional data: the axis is recovered, ratio 1") {
-    // all variance along e1 (0-indexed dim 1), mean zero
-    val vecs = Seq(-2f, -1f, 1f, 2f).map(t =>
-      Array(0f, t, 0f, 0f))
-    val r = run(vecs, dim = 4)
+    val r = run(oneAxis, dim = 4)
     val loadings = r.map(_._2)
     assert(math.abs(loadings(1)) == 1.0, loadings.toSeq.toString)
     assert(loadings(0) == 0.0 && loadings(2) == 0.0 && loadings(3) == 0.0)
@@ -26,17 +38,13 @@ class PcaSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("nonzero mean is centered out: a constant offset changes nothing") {
-    val base = Seq(-2f, -1f, 1f, 2f).map(t => Array(0f, t, 0f, 0f))
-    val shifted = base.map(v => v.zipWithIndex.map {
+    val shifted = oneAxis.map(v => v.zipWithIndex.map {
       case (x, i) => x + (if (i == 2) 7f else 0f) })
-    assert(run(base, 4).toSeq == run(shifted, 4).toSeq)
+    assert(run(oneAxis, 4).toSeq == run(shifted, 4).toSeq)
   }
 
   test("dominant of two axes wins; loadings are unit norm") {
-    // dim 0 spread +-3 (var 9), dim 2 spread +-1 (var 1)
-    val vecs = Seq(
-      Array(3f, 0f, 1f, 0f), Array(-3f, 0f, -1f, 0f),
-      Array(3f, 0f, -1f, 0f), Array(-3f, 0f, 1f, 0f))
+    val vecs = twoAxes
     // 8 iterations: the e2 residual decays as (1/9)^t — at t=4 it
     // would still sit at ~1.5e-4 and the eigenvalue at 8.99998
     val r = run(vecs, 4, iters = 8)
@@ -49,13 +57,7 @@ class PcaSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("top-m deflation recovers the axes in variance order, orthogonal") {
-    // axis variances: dim0 = 9, dim2 = 4, dim3 = 1 (mean zero each)
-    val vecs = Seq(
-      Array(3f, 0f, 2f, 1f), Array(-3f, 0f, -2f, -1f),
-      Array(3f, 0f, -2f, 1f), Array(-3f, 0f, 2f, -1f),
-      Array(3f, 0f, 2f, -1f), Array(-3f, 0f, -2f, 1f),
-      Array(3f, 0f, -2f, -1f), Array(-3f, 0f, 2f, 1f))
-    val r = Pca.components(vecs.map(Tuple1(_)).toDF("embedding"),
+    val r = Pca.components(threeAxes.map(Tuple1(_)).toDF("embedding"),
         "embedding", dim = 4, m = 3, iters = 12)
       .as[(Long, Long, Double, Double, Double)].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -80,8 +82,7 @@ class PcaSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("components(m=1) matches dominantComponent exactly") {
-    val vecs = (1 to 20).map(i =>
-      Array(i.toFloat, (i % 3).toFloat, (i % 7).toFloat, 1f))
+    val vecs = ramp
     val dom = run(vecs, 4).toSeq
     val one = Pca.components(vecs.map(Tuple1(_)).toDF("embedding"),
         "embedding", 4, m = 1, iters = 4)
@@ -112,11 +113,26 @@ class PcaSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("deterministic across runs; degenerate constant input rejected") {
-    val vecs = (1 to 20).map(i =>
-      Array(i.toFloat, (i % 3).toFloat, (i % 7).toFloat, 1f))
+    val vecs = ramp
     assert(run(vecs, 4).toSeq == run(vecs, 4).toSeq)
     intercept[Exception] {
       run(Seq.fill(3)(Array(1f, 1f, 1f, 1f)), 4)
+    }
+  }
+
+  test("fused kernel fit == per-step matvec fit, exactly (m = 1 and m = 3 deflation)") {
+    // the same fitSweep/powerLoop recurrence against an in-memory
+    // matvec (kernel, <= 200k rows) or one Spark job per step (loop)
+    def comps(vecs: Seq[Array[Float]], m: Int, iters: Int) =
+      Pca.components(vecs.map(Tuple1(_)).toDF("embedding"),
+          "embedding", dim = 4, m = m, iters = iters)
+        .as[(Long, Long, Double, Double, Double)].collect()
+        .sortBy(r => (r._1, r._2)).toSeq
+    for ((vecs, m, iters) <- Seq((oneAxis, 1, 4), (twoAxes, 1, 8),
+                                 (threeAxes, 3, 12), (ramp, 1, 4), (ramp, 3, 6))) {
+      val kernel = comps(vecs, m, iters)
+      val loop = withLoop(comps(vecs, m, iters))
+      assert(kernel == loop, s"m=$m iters=$iters")
     }
   }
 }
