@@ -1,8 +1,59 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBridge
+
+/** Per-query Spark counters for the bench mirror's `"layers"` map:
+  * jobs, completed stages, tasks, summed and longest task time, shuffle
+  * bytes and spill. Call [[reset]] before an action and [[snapshot]]
+  * after it; both first drain the listener bus, so the counts are
+  * complete without waiting on a timer.
+  */
+private[graft] final class QueryCounters(sc: SparkContext) extends SparkListener {
+  private val jobs, stages, tasks, taskMs, maxTaskMs, readB, writeB, spillB = new AtomicLong
+  private val all = Seq(jobs, stages, tasks, taskMs, maxTaskMs, readB, writeB, spillB)
+  sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    val ms = if (e.taskInfo != null) e.taskInfo.duration else 0L
+    tasks.incrementAndGet()
+    taskMs.addAndGet(ms)
+    maxTaskMs.accumulateAndGet(ms, math.max(_, _))
+    val m = e.taskMetrics
+    if (m != null) {
+      readB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      writeB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+    }
+  }
+
+  def reset(): Unit = { ListenerBridge.drain(sc); all.foreach(_.set(0)) }
+
+  /** The counters since [[reset]], in mirror order (seconds, MB). */
+  def snapshot(): Seq[(String, Double)] = {
+    ListenerBridge.drain(sc)
+    Seq("jobs" -> jobs.get.toDouble, "stages" -> stages.get.toDouble,
+      "tasks" -> tasks.get.toDouble, "task_s" -> taskMs.get / 1e3,
+      "max_task_s" -> maxTaskMs.get / 1e3, "shuffle_read_mb" -> readB.get / 1e6,
+      "shuffle_write_mb" -> writeB.get / 1e6, "spill_mb" -> spillB.get / 1e6)
+  }
+}
 
 object Bench {
+  /** Mirror file for a [[graft.tools.ProbeNorms.normKey]]: only the
+    * full sf0.1 suite writes `BENCH_LOCAL.json`, so runs on other
+    * fixtures or query subsets never overwrite that baseline.
+    */
+  private[graft] def mirrorName(normKey: String): String =
+    if (normKey == "sf0.1") "BENCH_LOCAL.json"
+    else s"BENCH_LOCAL.${normKey.replace('|', '.')}.json"
+
   private def newSession(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -30,8 +81,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    var spark = newSession(cpus)
+    val spark = newSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
+    val counters = new QueryCounters(spark.sparkContext)
     val only = args.toSet // optional query-name filter for local runs
     val picked = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -90,9 +142,13 @@ object Bench {
     // queries are GC/scheduling-noise-bound in a single shot, and the
     // min is the standard microbenchmark estimator of the code's actual
     // cost (the max measures the JVM's mood, not the plan)
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
-    def timedRun(s: SparkSession, name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    val reps = 2
+    type Layers = Seq[(String, Double)]
+    // (seconds, counters) of one rep, None when it failed; the counter
+    // reset and snapshot sit outside the timed region
+    def timedRun(s: SparkSession, c: QueryCounters, name: String,
+                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Layers)] = {
+      c.reset()
       val t0 = System.nanoTime()
       // noop sink forces FULL evaluation of every output column —
       // count() would let Spark prune the expensive projections and
@@ -106,26 +162,26 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      val layers = c.snapshot()
       // untimed gap: drop cache/checkpoint blocks the query left
       // behind so 77 queries don't accumulate memory pressure (GC
       // pauses were billed to whoever ran late in the r3 run)
       releaseState(s)
-      (dt, ok)
+      if (ok) Some((dt, layers)) else None
     }
     // a rep that FAILED cannot contribute a timing: an exception after
     // 10 ms would otherwise masquerade as a 100x speedup (this exact
     // shape confused the round-10 snapshot). A query with zero
-    // successful reps surfaces as -1 plus a "failed" list entry.
-    def minOk(s: SparkSession, name: String,
-              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, n: Int): Double = {
-      val oks = (0 until n).map(_ => timedRun(s, name, fn)).collect { case (dt, true) => dt }
-      if (oks.isEmpty) -1.0 else oks.min
-    }
+    // successful reps is None: -1 plus a "failed" list entry.
+    def minOk(s: SparkSession, c: QueryCounters, name: String,
+              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+              n: Int): Option[(Double, Layers)] =
+      (0 until n).flatMap(_ => timedRun(s, c, name, fn)).minByOption(_._1)
     val mid = picked.size / 2
     var probeMid = -1.0
     val firstPass = picked.zipWithIndex.map { case ((name, fn), i) =>
       if (i == mid) probeMid = driftProbe(spark)
-      (name, fn, minOk(spark, name, fn, reps))
+      (name, fn, minOk(spark, counters, name, fn, reps))
     }
     if (probeMid < 0) probeMid = driftProbe(spark) // tiny filtered runs
     // headline stability: the slowest queries carry the round-over-round
@@ -133,13 +189,13 @@ object Bench {
     // their own runtime — min-of-(reps+1) there keeps the ~±10% per-run
     // harness noise (r4->r5 drifted 55->60 s on byte-identical source)
     // from masquerading as a code regression
-    val headline = firstPass.sortBy(-_._3).take(10).map(_._1).toSet
-    val results = firstPass.map { case (name, fn, t) =>
-      if (headline(name) && t >= 0) {
-        val extra = timedRun(spark, name, fn)
-        name -> (if (extra._2) math.min(t, extra._1) else t)
-      } else name -> t
+    val headline = firstPass.sortBy(-_._3.fold(-1.0)(_._1)).take(10).map(_._1).toSet
+    val best = firstPass.map { case (name, fn, r) =>
+      if (headline(name) && r.nonEmpty)
+        name -> (r ++ timedRun(spark, counters, name, fn)).minByOption(_._1)
+      else name -> r
     }
+    val results = best.map { case (name, r) => name -> r.fold(-1.0)(_._1) }
     val probeEnd = driftProbe(spark)
     // Machine-readable window adjudication (the round-14 R14B lesson,
     // promoted from SCALE.md prose to protocol): compare this run's
@@ -191,9 +247,9 @@ object Bench {
     // window) — warm-up pass, then the same min-of-reps estimator —
     // and emit the pairs. probe_isolated (one probe reading in the
     // last isolated session) documents host health during this phase
-    // without touching the 3-reading median protocol above.
-    val isoOn = sys.env.get("SPARK_GRAFT_BENCH_ISOLATED")
-      .map(_ != "0").getOrElse(only.isEmpty)
+    // without touching the 3-reading median protocol above. Full
+    // suites only; its counters are not mirrored.
+    val isoOn = only.isEmpty
     var probeIso = -1.0
     val isolated: Seq[(String, Double)] =
       if (!isoOn) Seq.empty
@@ -208,7 +264,8 @@ object Bench {
             try fn(s2, warmDir).write.format("noop").mode("overwrite").save()
             catch { case _: Throwable => () }
             releaseState(s2)
-            val t = minOk(s2, name, fn, reps)
+            val t = minOk(s2, new QueryCounters(s2.sparkContext), name, fn, reps)
+              .fold(-1.0)(_._1)
             if (name == top5.last) probeIso = driftProbe(s2)
             name -> t
           } finally s2.stop()
@@ -222,7 +279,8 @@ object Bench {
     // keep the JSON line SHORT (trimmed decimals, basename sf) so the
     // driver's 2000-char output-tail capture holds the whole line —
     // r3's 3dp line was 1998 chars and still got truncated by the sbt
-    // prefix. Full precision is mirrored to BENCH_LOCAL.json.
+    // prefix. Full precision is mirrored to the file named by
+    // mirrorName, with the per-query counters of the reported rep.
     // Locale.ROOT: a comma-decimal default locale would emit 0,787 and
     // break every JSON consumer of this line
     def fmt(v: Double, dp: Int): String = {
@@ -245,23 +303,27 @@ object Bench {
       else isolated.map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
         .mkString(""","isolated":{""", ",", "}") +
         (if (probeIso >= 0) s""","probe_isolated":${fmt(probeIso, 3)}""" else "")
-    def line(dp: Int): String = {
+    def line(dp: Int, layers: String = ""): String = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
         .mkString("{", ",", "}")
       val sfName = sfDir.split('/').last
-      s"""{"metric":"total","value":${fmt(cleanTotal, 3)},"unit":"sec","queries":$qs,"sf":"$sfName"$probeJson$isoJson$failedJson}"""
+      s"""{"metric":"total","value":${fmt(cleanTotal, 3)},"unit":"sec","queries":$qs,"sf":"$sfName"$probeJson$isoJson$failedJson$layers}"""
     }
+    def layersJson: String = best.collect { case (q, Some((_, ls))) =>
+      ls.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }.mkString("\"" + q + "\":{", ",", "}")
+    }.mkString(""","layers":{""", ",", "}")
     // mirror full precision beside the build (cwd), not a hardcoded
     // absolute path; a failed write must be visible, not silently absent
+    val mirror = mirrorName(normKey)
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LOCAL.json").toAbsolutePath, line(3) + "\n")
+      java.nio.file.Paths.get(mirror).toAbsolutePath, line(3, layersJson) + "\n")
     catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] $mirror write failed: ${e.getMessage}")
     }
     // last-resort compaction: collapse entries under a threshold into
     // "_rest" (their sum) so the line keeps fitting as the query count
     // grows — the slow queries are the ones the per-query signal is
-    // for, and the full map is always mirrored to BENCH_LOCAL.json.
+    // for, and the full map is always mirrored to the mirror file.
     // The threshold adapts: smallest cut that fits the budget.
     def lineCompact(thresh: Double): String = {
       val (kept, rest) = results.partition(_._2 >= thresh)
@@ -281,7 +343,7 @@ object Bench {
   /** Unpersist every cached/localCheckpoint'd block and nudge the
     * ContextCleaner so per-query leftovers don't compound across the run.
     */
-  private def releaseState(spark: SparkSession): Unit = {
+  private[graft] def releaseState(spark: SparkSession): Unit = {
     try {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

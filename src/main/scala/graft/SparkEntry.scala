@@ -2324,7 +2324,7 @@ object SparkEntry {
     * simhash candidates on the minhash pair set that q_dedup_minhash
     * ALREADY computes and times as the operator's own entry —
     * recomputing it inside the simhash entry double-counted ~half the
-    * entry's sf10 time (SimhashProfile: truth 5.5 s of 11.2 s total).
+    * entry's sf10 time (SCALE.md round 15: truth 5.5 s of 11.2 s total).
     * The pair set is the planted near-dup inventory (~26k rows at
     * sf10, per-mille of the corpus), driver-bounded the way the
     * exact-pairs memo is, and survives Bench.releaseState's purge.
@@ -2380,8 +2380,8 @@ object SparkEntry {
     val docs = t(s, d, "documents")
     // truth via the staged memo — the minhash pipeline's own cost is
     // timed by q_dedup_minhash; this entry measures the SIMHASH side
-    // (round-15 task 3: SimhashProfile decomposed the old 4.3x/decade
-    // reading as ~half truth recomputation; the candidates themselves
+    // (round-15 task 3, SCALE.md: the old 4.3x/decade
+    // reading was ~half truth recomputation; the candidates themselves
     // are uncapped BY MEASUREMENT — maxBucket=64 reads recall 0.886 at
     // sf10, under the 0.9 gate, and cap=256 saves only 18% of
     // candidates; hot buckets are the corpus's own duplication

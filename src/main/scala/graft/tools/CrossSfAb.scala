@@ -29,17 +29,12 @@ object CrossSfAb {
       .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def release(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      System.gc()
-    }
     def timed(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      release()
+      graft.Bench.releaseState(spark)
       dt
     }
     names.foreach { name =>
