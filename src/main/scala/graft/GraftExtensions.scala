@@ -13,12 +13,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * or SparkSession.builder().withExtensions(new GraftExtensions).
-  * (The AI UDFs need a live session and are registered by
-  * [[Graft.init]] instead.)
+  * It also injects the optimizer rule [[graft.plans.CheapPredicatesFirst]]
+  * and the planner strategy [[graft.ai.AiEvalStrategy]], which keeps up
+  * to eight AI calls per task in flight. (The AI UDFs need a live
+  * session and are registered by [[Graft.init]] instead.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.plans.CheapPredicatesFirst)
+    e.injectPlannerStrategy(_ => graft.ai.AiEvalStrategy)
     e.injectFunction((
       FunctionIdentifier("vector_dot"),
       new ExpressionInfo(classOf[VectorExpressions.VectorDot].getName, "vector_dot"),

@@ -2681,10 +2681,10 @@ object SparkEntry {
     * model call for 80% of rows — the guarantee the reference gets by
     * construction (cheap file/class filters under the AI projection,
     * SURVEY §4 item 1) made structural for user-authored filters.
-    * [[graft.GraftExtensions]] injects the rule at builder time — and
-    * Bench/Verify/tests ALL build their sessions with it, so every
-    * entry runs under one uniform optimizer regardless of execution
-    * order. The `experimental.extraOptimizations` attach below is a
+    * [[graft.GraftExtensions]] injects the rule at builder time, and
+    * Bench, Verify, docbench and the tests' `SparkTestBase` session all
+    * build with it, so every entry runs under one uniform optimizer
+    * regardless of execution order. The `experimental.extraOptimizations` attach below is a
     * fallback for bare sessions only (idempotent — the rule no-ops on
     * already-sorted conjunctions, so a duplicate attach next to the
     * injected copy yields the identical plan). The reorder is

@@ -16,6 +16,20 @@ import org.apache.spark.sql.functions.udf
   * `CheapPredicatesFirst` only reorders deterministic conjuncts, and
   * cheap predicates must run before the model.
   *
+  * Where calls run: each function's UDF carries an [[AiCall]] marker,
+  * and [[AiEvalStrategy]] (injected by `GraftExtensions`) plans every
+  * Project holding one as a `ProjectExec` over an [[AiEvalExec]]. That
+  * operator computes a call's inputs on the task thread and runs only
+  * the backend call on a shared daemon pool, keeping up to
+  * [[AiEvalExec.MaxInFlight]] (8) rows per task in flight, in input
+  * order. The window opens at one row and grows by one per row emitted,
+  * so a LIMIT n starts at most 2n - 1 rows' calls. A nested call gets
+  * one operator per level, so the parse of a later row overlaps the
+  * extract of an earlier one. An AI UDF in a Filter, a Join condition,
+  * an aggregate's output, a conditional branch, or a session built
+  * without `GraftExtensions` still runs one row at a time on the task
+  * thread.
+  *
   * UDFs (not codegen Expressions) are the right call here: each call is
   * "model-inference" priced, so per-row JVM dispatch overhead is noise
   * (SURVEY §2.9). The rest of the plan stays whole-stage-codegen.
@@ -67,7 +81,9 @@ object AiFunctions {
     catch { case e: Exception => Map("error" -> String.valueOf(e.getMessage)) }
 
   private def mkExtractUdf(b: DocAiBackend) =
-    udf(extract(b, _: String, _: Map[String, String]))
+    udf(new AiCall2[String, Map[String, String], Map[String, String]] {
+      def apply(text: String, prompts: Map[String, String]) = extract(b, text, prompts)
+    })
 
   /** RFC-8259-complete JSON string escape: backslash, quote, and ALL
     * control chars — answers are raw document sentences, which can
@@ -113,17 +129,18 @@ object AiFunctions {
 
   private val envelopeUdf = udf(envelope _)
 
-  private def mkClassifyUdf(b: DocAiBackend) = udf { (text: String) =>
-    if (text == null) null else b.classify(text)
-  }
+  private def mkClassifyUdf(b: DocAiBackend) = udf(new AiCall1[String, String] {
+    def apply(text: String) = if (text == null) null else b.classify(text)
+  })
 
-  private def mkParseDocumentUdf(b: DocAiBackend) = udf { (content: Array[Byte]) =>
-    if (content == null) null else b.parse(content)
-  }
+  private def mkParseDocumentUdf(b: DocAiBackend) = udf(new AiCall1[Array[Byte], String] {
+    def apply(content: Array[Byte]) = if (content == null) null else b.parse(content)
+  })
 
-  private def mkCompleteUdf(b: DocAiBackend) = udf { (model: String, prompt: String) =>
-    if (prompt == null) null else b.complete(model, prompt)
-  }
+  private def mkCompleteUdf(b: DocAiBackend) = udf(new AiCall2[String, String, String] {
+    def apply(model: String, prompt: String) =
+      if (prompt == null) null else b.complete(model, prompt)
+  })
 
   /** Canonicalize a stored prompt-schema VARIANT (any of the accepted
     * shapes, app:162-183) into the flat {field -> question} map the
@@ -158,8 +175,10 @@ object AiFunctions {
   def register(spark: SparkSession): Unit = {
     val b = backendRef
     spark.udf.register("ai_extract", mkExtractUdf(b))
-    spark.udf.register("ai_extract_json", udf((t: String, p: Map[String, String]) =>
-      envelope(extract(b, t, p), p)))
+    spark.udf.register("ai_extract_json",
+      udf(new AiCall2[String, Map[String, String], String] {
+        def apply(t: String, p: Map[String, String]) = envelope(extract(b, t, p), p)
+      }))
     spark.udf.register("ai_classify", mkClassifyUdf(b))
     spark.udf.register("parse_document", mkParseDocumentUdf(b))
     spark.udf.register("ai_complete", mkCompleteUdf(b))

@@ -20,6 +20,14 @@ import java.security.MessageDigest
   *   classify -> {"response": {"document_class": c}}   (app:458-461)
   *   parse    -> {"content": text}                     (app:441-444)
   *   complete -> plain string (summary) or flat JSON {field: question}
+  *
+  * Backends must be safe to call from several threads at once:
+  * [[AiEvalExec]] keeps up to eight calls of one task in flight on pool
+  * threads, all against the task's one deserialized instance. Every
+  * backend here is: [[DeterministicLocalBackend]] is a pure function
+  * (its `MessageDigest` is per call), and [[HttpDocAiBackend]] shares a
+  * thread-safe `HttpClient` and Jackson mapper and keeps no per-call
+  * state in the instance.
   */
 trait DocAiBackend extends Serializable {
   /** Answer one question about a document's text. */

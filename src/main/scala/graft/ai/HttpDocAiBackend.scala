@@ -28,9 +28,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *     → {"completion": s}
   *
   * Cluster posture: the class is Serializable but the HttpClient is
-  * NOT — it is rebuilt per executor via @transient lazy (the standard
-  * Spark closure pattern), so the backend ships in UDF closures like
-  * the deterministic one. `answerAll` is ONE request per document
+  * NOT, so it is never shipped: every deserialized copy in a JVM takes
+  * the one client per `connectTimeoutMs` from [[HttpDocAiBackend]],
+  * with its one selector thread and connection pool. The client and
+  * the Jackson mapper are thread-safe and a call keeps no other state,
+  * so concurrent calls (the [[DocAiBackend]] contract) are safe.
+  * `answerAll` is ONE request per document
   * (the per-doc model call amortizes across fields, exactly why the
   * trait has the batch form). Retries: [[Retry.withRetry]] (AI4,
   * app:463-474) around transport errors and 5xx responses only —
@@ -47,9 +50,7 @@ final class HttpDocAiBackend(baseUrl: String,
   private val base = baseUrl.stripSuffix("/")
 
   // per-JVM (per-executor) transport state — never serialized
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofMillis(connectTimeoutMs))
-    .build()
+  @transient private lazy val client: HttpClient = HttpDocAiBackend.client(connectTimeoutMs)
   @transient private lazy val mapper = new ObjectMapper()
 
   private def post(path: String, body: Array[Byte],
@@ -115,6 +116,15 @@ final class HttpDocAiBackend(baseUrl: String,
 }
 
 object HttpDocAiBackend {
+  private val clients = new java.util.concurrent.ConcurrentHashMap[Long, HttpClient]()
+
+  /** The JVM's one client for a connect timeout, shared by every
+    * backend copy that tasks deserialize.
+    */
+  private def client(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, ms =>
+      HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
+
   /** Permanent (non-retryable) HTTP failure — 4xx responses. The
     * retry loop is gated on `retryIf = !isInstanceOf[HttpStatusError]`
     * so these escape on the FIRST attempt (a malformed request cannot

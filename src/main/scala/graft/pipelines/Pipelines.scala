@@ -12,8 +12,15 @@ import graft.ops.Relational
   * Interactive (app:356-604): one document through classify -> ensure
   * prompts -> extract -> OCR -> summarize -> persist x4. The reference
   * runs OCR on a side thread (app:450-452); here classify/extract/ocr/
-  * summary are sibling columns of one Dataset — Spark's task parallelism
-  * replaces the thread pool.
+  * summary are sibling columns of one Dataset.
+  *
+  * Model calls in flight: across documents, Spark's tasks and, within a
+  * task, `AiEvalExec` (planned by `GraftExtensions`), which keeps up to
+  * eight documents' calls in flight per task, the reference's batch
+  * fan-out width (app:881). Its inputs are computed on the task thread,
+  * so no expression evaluator is shared between threads. A request's
+  * extract and summary over its one-row local relation are evaluated
+  * while the optimizer folds that relation, one after the other.
   *
   * Batch-SQL (app:944-966): the purest "query" — one set-based plan:
   * directory scan -> ai_extract column -> explode -> pivot. At 100 TB

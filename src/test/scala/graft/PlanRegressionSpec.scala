@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -948,28 +950,85 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     assert(inFilters.isEmpty, s"$what: AI UDF inside an inferred Filter:\n$p")
   }
 
-  test("pipeline plans call each AI UDF once, never in an inferred Filter") {
-    import graft.pipelines.Pipelines
-    // a plain explode over the extract map lets InferFiltersFromGenerate
-    // copy ai_extract(parse_document(content)) into a pushed-down
-    // size/isnotnull Filter: three model calls per document
-    val prompts = Map("title" -> "What is the title?", "date" -> "What is the date?")
+  private val aiPrompts = Map("title" -> "What is the title?", "date" -> "What is the date?")
+
+  /** A fresh catalog with two documents staged in `docs`. */
+  private def stagedDocs(): graft.engine.Catalog = {
     val root = java.nio.file.Files.createTempDirectory("graft_plan_ai_").toString
     val cat = new graft.engine.Catalog(spark, root)
     cat.ensureTables()
     Seq("a.txt" -> "Invoice INV-9. Total $5.", "b.txt" -> "Contract. Term one year.")
       .foreach { case (f, t) => cat.putFile("docs", f, t.getBytes("UTF-8")) }
+    cat
+  }
+
+  /** The stream's last micro-batch over `cat`'s `docs` stage. */
+  private def lastMicroBatch(cat: graft.engine.Catalog) = {
+    val q = graft.pipelines.Pipelines.stream(cat, "docs", aiPrompts, cat.root + "/cp")
+    try q.processAllAvailable() finally q.stop()
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+  }
+
+  test("pipeline plans call each AI UDF once, never in an inferred Filter") {
+    import graft.pipelines.Pipelines
+    // a plain explode over the extract map lets InferFiltersFromGenerate
+    // copy ai_extract(parse_document(content)) into a pushed-down
+    // size/isnotnull Filter: three model calls per document
+    val cat = stagedDocs()
     assertAiOnce("batchSql",
-      Pipelines.batchSql(cat, "docs", prompts).queryExecution.optimizedPlan,
+      Pipelines.batchSql(cat, "docs", aiPrompts).queryExecution.optimizedPlan,
       Set("parse_document", "ai_extract"))
     assertAiOnce("batchSqlOverDocuments",
-      Pipelines.batchSqlOverDocuments(spark, sf, prompts).queryExecution.optimizedPlan,
+      Pipelines.batchSqlOverDocuments(spark, sf, aiPrompts).queryExecution.optimizedPlan,
       Set("ai_extract"))
-    val q = Pipelines.stream(cat, "docs", prompts, root + "/cp")
-    try q.processAllAvailable() finally q.stop()
-    val microBatch = q.asInstanceOf[StreamingQueryWrapper]
-      .streamingQuery.lastExecution.optimizedPlan
-    assertAiOnce("stream", microBatch, Set("parse_document", "ai_classify", "ai_extract"))
+    assertAiOnce("stream", lastMicroBatch(cat).optimizedPlan,
+      Set("parse_document", "ai_classify", "ai_extract"))
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The AI UDFs `p` evaluates in AiEvalExecs, by name, after asserting
+    * that no ProjectExec or FilterExec evaluates one (it would call the
+    * model one row at a time).
+    */
+  private def windowedAi(what: String, p: SparkPlan): Set[String] = {
+    val nodes = Aqe.collectWithSubqueries(p) { case n => n }
+    val inline = nodes.filter(n => n.isInstanceOf[ProjectExec] || n.isInstanceOf[FilterExec])
+      .flatMap(n => aiUdfs(n.expressions).map(_ => n.nodeName))
+    assert(inline.isEmpty, s"$what: AI UDF evaluated inline in $inline:\n$p")
+    nodes.collect { case e: graft.ai.AiEvalExec => aiUdfs(e.calls) }.flatten
+      .map(u => aiUdfNames(u.function.getClass)).toSet
+  }
+
+  test("pipeline physical plans run every AI UDF in an AiEvalExec") {
+    import graft.pipelines.Pipelines
+    val cat = stagedDocs()
+    val batch = Pipelines.batchSql(cat, "docs", aiPrompts).queryExecution.executedPlan
+    assert(windowedAi("batchSql", batch) == Set("parse_document", "ai_extract"))
+    val overDocs =
+      Pipelines.batchSqlOverDocuments(spark, sf, aiPrompts).queryExecution.executedPlan
+    assert(windowedAi("batchSqlOverDocuments", overDocs) == Set("ai_extract"))
+    // the scan under the operator still reads only what the projection needs
+    assert(overDocs.toString.contains("ReadSchema: struct<doc_id:bigint,text:string>"), overDocs)
+    assert(windowedAi("stream", lastMicroBatch(cat).executedPlan) ==
+      Set("parse_document", "ai_classify", "ai_extract"))
+    // the interactive request: every plan it executes, caught as it runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipelines.interactive(cat, "docs", "a.txt")
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val windowed = plans.asScala.toSeq.map(windowedAi("interactive", _))
+    assert(windowed.contains(Set("parse_document", "ai_classify")),
+      s"no interactive scan job in $windowed")
   }
 
   test("HITS surfaces the pinned final half-steps; no cartesian") {
