@@ -88,8 +88,9 @@ object AiFunctions {
   /** RFC-8259-complete JSON string escape: backslash, quote, and ALL
     * control chars — answers are raw document sentences, which can
     * embed newlines/tabs that would otherwise corrupt the envelope.
+    * Also escapes `graft.Verify`'s oracle_sql.json.
     */
-  private def jsonEscape(s: String): String = {
+  private[graft] def jsonEscape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {

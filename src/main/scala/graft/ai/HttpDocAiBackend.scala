@@ -36,10 +36,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * `answerAll` is ONE request per document
   * (the per-doc model call amortizes across fields, exactly why the
   * trait has the batch form). Retries: [[Retry.withRetry]] (AI4,
-  * app:463-474) around transport errors and 5xx responses only —
-  * a 4xx is a permanent protocol/request error and fails fast (wrapped
-  * as [[HttpDocAiBackend.HttpStatusError]]; the UDF layer's
-  * error-as-row contract turns it into an error column, X9).
+  * app:463-474) around transport errors, 5xx responses and 429 (rate
+  * limited: the first answer a throttled endpoint gives), on the same
+  * attempts × delay schedule. Any other 4xx is a permanent
+  * protocol/request error and fails fast (wrapped as
+  * [[HttpDocAiBackend.HttpStatusError]]; the UDF layer's error-as-row
+  * contract turns it into an error column, X9).
   */
 final class HttpDocAiBackend(baseUrl: String,
                              connectTimeoutMs: Long = 5000,
@@ -65,11 +67,11 @@ final class HttpDocAiBackend(baseUrl: String,
       val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
       val code = resp.statusCode()
       if (code >= 200 && code < 300) resp.body()
-      else if (code >= 500)
-        // transient server failure: throw a retryable exception
+      else if (code >= 500 || code == 429)
+        // transient server failure or rate limit: throw a retryable exception
         throw new java.io.IOException(s"HTTP $code from $path: ${resp.body().take(200)}")
       else
-        // 4xx is permanent — escape the retry loop immediately
+        // any other 4xx is permanent — escape the retry loop immediately
         throw new HttpDocAiBackend.HttpStatusError(code,
           s"HTTP $code from $path: ${resp.body().take(200)}")
     }
@@ -125,12 +127,13 @@ object HttpDocAiBackend {
     clients.computeIfAbsent(connectTimeoutMs, ms =>
       HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
 
-  /** Permanent (non-retryable) HTTP failure — 4xx responses. The
-    * retry loop is gated on `retryIf = !isInstanceOf[HttpStatusError]`
-    * so these escape on the FIRST attempt (a malformed request cannot
-    * succeed on attempt 2; burning attempts × delay on it would just
-    * stall the executor), while transport errors and 5xx keep the
-    * reference's 5 × 0.5 s retry posture (AI4).
+  /** Permanent (non-retryable) HTTP failure — 4xx responses other
+    * than 429. The retry loop is gated on
+    * `retryIf = !isInstanceOf[HttpStatusError]` so these escape on the
+    * FIRST attempt (a malformed request cannot succeed on attempt 2;
+    * burning attempts × delay on it would just stall the executor),
+    * while transport errors, 5xx and 429 keep the reference's
+    * 5 × 0.5 s retry posture (AI4).
     */
   final class HttpStatusError(val code: Int, msg: String)
     extends RuntimeException(msg)

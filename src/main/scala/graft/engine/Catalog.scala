@@ -32,14 +32,19 @@ final class Catalog(val spark: SparkSession, val root: String) {
     Files.createDirectories(Paths.get(s"$root/stages"))
     schemas.foreach { case (name, _) =>
       recover(name)
-      // an empty table is just its directory + _SUCCESS: table() reads
-      // with an explicit schema, so no parquet footer needs to exist
-      // and init costs zero Spark jobs (was: 5 empty-write jobs)
-      val dir = Paths.get(tablePath(name))
-      if (!Files.exists(dir.resolve("_SUCCESS"))) {
-        Files.createDirectories(dir)
-        Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
+      createEmptyIfAbsent(name)
+    }
+  }
+
+  /** An empty table is just its directory + _SUCCESS: table() reads
+    * with an explicit schema, so no parquet footer needs to exist and
+    * init costs zero Spark jobs.
+    */
+  private def createEmptyIfAbsent(name: String): Unit = {
+    val dir = Paths.get(tablePath(name))
+    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
     }
   }
 
@@ -220,17 +225,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val writer = df.write.mode(SaveMode.Overwrite)
     partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
       .parquet(tmp)
-    val target = Paths.get(tablePath(name))
-    val bak = Paths.get(s"$root/tables/.bak_$name")
-    // Re-point the table directory at the fresh data. Single-writer
-    // bak-swap: live -> .bak, tmp -> live, drop .bak. At no instant is
-    // the table deleted without its replacement staged — a crash leaves
-    // either the old live dir or the old data intact under .bak, never
-    // nothing. recover() (called on open) finishes an interrupted swap.
-    deleteRecursively(bak)
-    if (Files.exists(target)) Files.move(target, bak, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(bak)
+    // re-point the table directory at the fresh data
+    bakSwap(tmp, tablePath(name), s"$root/tables/.bak_$name")
     // a rewrite invalidates append-accumulated sizing stats — refresh
     // from the stored table (cluster/merge/deleteWhere all land here)
     refreshSizing(name)
@@ -254,6 +250,20 @@ final class Catalog(val spark: SparkSession, val root: String) {
     }
     if (Files.exists(tmp) && !Files.exists(tmp.resolve("_SUCCESS")))
       deleteRecursively(tmp)
+  }
+
+  /** Single-writer bak-swap of the staged `tmp` dir in as `target`:
+    * live -> .bak, tmp -> live, drop .bak. At no instant is the target
+    * deleted without its replacement staged — a crash leaves either the
+    * old live dir or the old data intact under .bak, never nothing.
+    * recover() (called on open) finishes an interrupted table swap.
+    */
+  private def bakSwap(tmp: String, target: String, bak: String): Unit = {
+    val (t, b) = (Paths.get(target), Paths.get(bak))
+    deleteRecursively(b)
+    if (Files.exists(t)) Files.move(t, b, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(Paths.get(tmp), t, StandardCopyOption.ATOMIC_MOVE)
+    deleteRecursively(b)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
@@ -317,12 +327,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val tmp = s"$root/tables/.tmp_${store}_$name"
     spark.createDataFrame(java.util.Collections.singletonList(row), schema)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = Paths.get(s"$root/tables/.${store}_$name")
-    val bak = Paths.get(s"$root/tables/.bak_${store}_$name")
-    deleteRecursively(bak)
-    if (Files.exists(target)) Files.move(target, bak, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(bak)
+    bakSwap(tmp, s"$root/tables/.${store}_$name",
+      s"$root/tables/.bak_${store}_$name")
   }
 
   private def readStore(store: String, name: String,
@@ -364,11 +370,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     extraSchemas.put(name, schema)
     edgeDecls.put(name, (srcCol, dstCol))
     recover(name)
-    val dir = Paths.get(tablePath(name))
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
-      Files.createDirectories(dir)
-      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
-    }
+    createEmptyIfAbsent(name)
     // first declaration: seed stats from whatever the table already
     // holds (one scan, the ingestion-time price; empty table → 0 rows
     // + null sketches). Re-declarations pick up the persisted store.
@@ -382,23 +384,28 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val (sc, dc) = edgeDecls(name)
     val prior = readSizing(name)
     val rows = prior.map(_.getLong(2)).getOrElse(0L) + batch.getLong(0)
-    def unioned(i: Int, pi: Int): Any = {
-      val b = if (batch.isNullAt(i)) null else batch.get(i)
-      val p = prior.filter(!_.isNullAt(pi)).map(_.get(pi)).orNull
-      (p, b) match {
-        case (null, x) => x
-        case (x, null) => x
-        case (x, y) =>
-          // two binary sketches → hll_union via one local-relation row
-          spark.createDataFrame(
-              java.util.Collections.singletonList(Row(x, y)),
-              StructType(Seq(StructField("a", BinaryType),
-                StructField("b", BinaryType))))
-            .select(hll_union(col("a"), col("b"))).head().get(0)
-      }
+    writeSizing(name, sc, dc, Row(rows,
+      unionSketch(prior, 3, batch, 1), unionSketch(prior, 4, batch, 2)))
+  }
+
+  /** HLL union of the prior store's sketch (column `pi`) and the
+    * batch's sketch (column `bi`); a null side leaves the other as is.
+    */
+  private def unionSketch(prior: Option[Row], pi: Int,
+                          batch: Row, bi: Int): Any = {
+    val b = if (batch.isNullAt(bi)) null else batch.get(bi)
+    val p = prior.filter(!_.isNullAt(pi)).map(_.get(pi)).orNull
+    (p, b) match {
+      case (null, x) => x
+      case (x, null) => x
+      case (x, y) =>
+        // two binary sketches → hll_union via one local-relation row
+        spark.createDataFrame(
+            java.util.Collections.singletonList(Row(x, y)),
+            StructType(Seq(StructField("a", BinaryType),
+              StructField("b", BinaryType))))
+          .select(hll_union(col("a"), col("b"))).head().get(0)
     }
-    writeSizing(name, sc, dc,
-      Row(rows, unioned(1, 3), unioned(2, 4)))
   }
 
   /** The catalog-recorded [[graft.ops.Graph.GraphSizing]] for a
@@ -469,11 +476,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     extraSchemas.put(name, schema)
     factDecls.put(name, keyCol)
     recover(name)
-    val dir = Paths.get(tablePath(name))
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
-      Files.createDirectories(dir)
-      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
-    }
+    createEmptyIfAbsent(name)
     if (readStore("factsizing", name, factSchema).isEmpty)
       writeFactSizing(name, keyCol, factBatchStats(table(name), keyCol))
   }
@@ -489,21 +492,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val rows = prior.map(_.getLong(1)).getOrElse(0L) + batch.getLong(0)
     val maxKey = math.max(prior.map(_.getLong(3)).getOrElse(0L),
       batch.getLong(2))
-    val sketch = {
-      val b = if (batch.isNullAt(1)) null else batch.get(1)
-      val p = prior.filter(!_.isNullAt(2)).map(_.get(2)).orNull
-      (p, b) match {
-        case (null, x) => x
-        case (x, null) => x
-        case (x, y) =>
-          spark.createDataFrame(
-              java.util.Collections.singletonList(Row(x, y)),
-              StructType(Seq(StructField("a", BinaryType),
-                StructField("b", BinaryType))))
-            .select(hll_union(col("a"), col("b"))).head().get(0)
-      }
-    }
-    writeFactSizing(name, keyCol, Row(rows, sketch, maxKey))
+    writeFactSizing(name, keyCol,
+      Row(rows, unionSketch(prior, 2, batch, 1), maxKey))
   }
 
   /** Recorded fact sizing: (rows, approx distinct keys, hottest-key

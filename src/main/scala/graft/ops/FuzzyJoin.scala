@@ -90,14 +90,13 @@ object FuzzyJoin {
     * delete-variant blocking — everything BEFORE the levenshtein
     * verify. The variant fan-out, its equi-join, and the shared-
     * variant dedup all carry two short strings — never the callers'
-    * payload. Exposed (package-private) so the candidate-multiplicity
-    * economics are measurable (tools.CandidateEconomics, SCALE.md):
-    * a quadratic candidate equi-join is invisible to plan-shape
-    * guards.
+    * payload. Its candidate multiplicity is measured in SCALE.md
+    * "Candidate-pair economics (round 11)": a quadratic candidate
+    * equi-join is invisible to plan-shape guards.
     */
-  private[graft] def candidateKeyPairs(left: DataFrame, right: DataFrame,
-                                       leftCol: String, rightCol: String,
-                                       maxDist: Int): DataFrame = {
+  private def candidateKeyPairs(left: DataFrame, right: DataFrame,
+                                leftCol: String, rightCol: String,
+                                maxDist: Int): DataFrame = {
     // spread the distinct key sets before the variant explode (round
     // 17, guide §2.5 input skew): the keys arrive via AQE-coalesced
     // exchanges that pack by BYTES, and a few hundred KB of short

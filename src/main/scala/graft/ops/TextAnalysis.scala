@@ -234,9 +234,10 @@ object TextAnalysis {
     * line through an exchange just to reassemble it.
     */
   /** Shape a token array into `width`-token line strings — the shared
-    * line-fixture primitive (SparkEntry's lined oracles, DedupStress's
-    * boilerplate stage). No emptiness guard needed: split() yields at
-    * least one element even for "", so the sequence bound is >= 0.
+    * line-fixture primitive (SparkEntry's lined oracles, the boilerplate
+    * stage of SCALE.md "Dup-heavy adversarial stress"). No emptiness
+    * guard needed: split() yields at least one element even for "", so
+    * the sequence bound is >= 0.
     */
   def lineChunks(toks: Column, width: Int): Column = {
     require(width > 0, "line width must be positive")

@@ -100,7 +100,7 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
       //
       // Deliberately NOT the staged narrow-pair shape IncrementalDedup
       // uses — measured, it loses here. On the sf3 embeddings streamed
-      // in 5 batches (DedupStress incremental_ann_batches), one
+      // in 5 batches (SCALE.md "Dup-heavy adversarial stress"), one
       // payload-carrying join + distinct runs 17.3 s at dim 64 and
       // 33.2 s FLAT per batch at dim 768 (REPEAT=12), while the staged
       // shape measured 70.3 s / 171.9 s with a GROWING curve. The

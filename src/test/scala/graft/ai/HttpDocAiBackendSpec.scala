@@ -10,16 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * deterministic local backend, so the HTTP path must reproduce the
   * local backend's answers byte-for-byte — protocol, escaping and
   * envelope handling are what's under test, with zero egress.
-  * Also pins the retry semantics: 5xx retries then succeeds, 4xx
-  * fails fast (exactly one request).
+  * Also pins the retry semantics: 5xx and 429 retry then succeed,
+  * any other 4xx fails fast (exactly one request).
   */
 class HttpDocAiBackendSpec extends AnyFunSuite {
 
   /** Delegates to the shared [[DocAiProtocolTestServer]] (also used by
     * the pipeline backend-swap e2e).
     */
-  private def startServer(failFirst: Boolean = false): (String, AtomicInteger, () => Unit) =
-    DocAiProtocolTestServer.start(failFirst)
+  private def startServer(failFirst: Boolean = false,
+                          firstStatus: Int = 503): (String, AtomicInteger, () => Unit) =
+    DocAiProtocolTestServer.start(failFirst, firstStatus)
 
   // text with every escape hazard: quotes, backslash, newline, tab,
   // non-ASCII — the round trip must survive JSON both ways
@@ -61,6 +62,15 @@ class HttpDocAiBackendSpec extends AnyFunSuite {
       }
       assert(e.code == 400, e.getMessage)
       assert(hits.get() == 1, s"4xx must not retry: ${hits.get()} requests")
+    } finally stop()
+  }
+
+  test("429 (rate limited) retries like a 5xx and then succeeds") {
+    val (url, hits, stop) = startServer(failFirst = true, firstStatus = 429)
+    try {
+      val http = new HttpDocAiBackend(url, attempts = 3, retryDelayMs = 10)
+      assert(http.classify(text) == DeterministicLocalBackend.classify(text))
+      assert(hits.get() == 2, s"expected 1 throttled reply + 1 retry, got ${hits.get()}")
     } finally stop()
   }
 
