@@ -937,11 +937,8 @@ object SparkEntry {
     (SparkSession, String, String), String]()
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     stagedMemo.values.forEach { dir =>
-      try {
-        java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      } catch { case _: Exception => () } // best-effort cleanup
+      try graft.engine.StoreSwap.deleteTree(dir)
+      catch { case _: Exception => () } // best-effort cleanup
     }))
 
   private def staged(s: SparkSession, d: String, key: String,
@@ -2913,7 +2910,7 @@ object SparkEntry {
         .orderBy(col("source"))
       s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
         .orderBy(col("source"))
-    } finally deleteTree(dir)
+    } finally graft.engine.StoreSwap.deleteTree(dir)
   }
 
   /** Export round-trip (S8): write an events slice to CSV and JSON
@@ -2945,7 +2942,7 @@ object SparkEntry {
       // NOW instead of leaking a temp tree per invocation
       s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
         .orderBy(col("source"), col("event_type"))
-    } finally deleteTree(dir)
+    } finally graft.engine.StoreSwap.deleteTree(dir)
   }
 
   /** Media geometry ops oracle-gated: resize planning (aspect-
@@ -3014,17 +3011,7 @@ object SparkEntry {
     try {
       val df = body(cat)
       s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    } finally deleteTree(cat.root)
-  }
-
-  private def deleteTree(root: String): Unit = {
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => java.nio.file.Files.delete(x))
-      finally walk.close()
-    }
+    } finally graft.engine.StoreSwap.deleteTree(cat.root)
   }
 
   /** Build a throwaway warehouse+stage populated with the first n

@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -48,17 +48,9 @@ final class Catalog(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Schemas visible to this catalog instance: the 5 fixed pipeline
-    * tables plus any [[declareEdgeTable]]-registered user tables.
-    */
-  private val extraSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private def schemaOf(name: String): StructType =
-    Option(extraSchemas.get(name)).getOrElse(schemas(name))
-
   /** Table scan (S5). Always schema-applied so empty tables read fine. */
   def table(name: String): DataFrame =
-    spark.read.schema(schemaOf(name)).parquet(tablePath(name))
+    spark.read.schema(schemas(name)).parquet(tablePath(name))
 
   /** Append sink (S7; write_pandas app:523-546). Timestamp defaults
     * stamped at write time (F12: parquet has no DEFAULT autofill).
@@ -68,89 +60,16 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * class's partitions.
     */
   def append(name: String, df: DataFrame): Unit = {
-    val shaped = withDefaults(name, df)
-    // declared edge/fact tables pay their sizing aggregate at WRITE
-    // time — the ingestion-side fact the rank loops consume as a
-    // GraphSizing hint instead of re-scanning the stored table. The
-    // aggregate reads back EXACTLY THE FILES THIS BATCH WROTE (data
-    // files present after the append minus those present before):
-    // stats are consistent with the stored rows even under a
-    // non-deterministic batch lineage (sampling, current_timestamp
-    // defaults), the write itself STREAMS — no localCheckpoint pin
-    // holding a 100M-row initial load in executor memory, the exact
-    // heap-bomb shape Graph.reliableEdgeThreshold exists to guard —
-    // and a columnar re-read of the batch's own parquet is the cheap
-    // side of that trade. The before/after file diff is sound because
-    // appends are single-writer like every catalog mutation (the
-    // overwrite bak-swap contract); a crash BETWEEN the data write
-    // and the stats merge leaves stats one batch behind — the stored
-    // rows, never the stats, are the source of truth, and
-    // [[refreshSizing]] (or any rewrite) re-derives them exactly.
-    val sized = edgeDecls.contains(name) || factDecls.contains(name)
-    val before = if (sized) listDataFiles(name) else Set.empty[String]
-    val writer = shaped.write.mode(SaveMode.Append)
+    val writer = withDefaults(name, df).write.mode(SaveMode.Append)
     partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
       .parquet(tablePath(name))
-    if (sized) {
-      val fresh = (listDataFiles(name) -- before).toSeq.sorted
-      // basePath restores partition columns dropped from partitioned
-      // tables' data files; an empty batch writes no data files and
-      // contributes empty-batch stats
-      val batchDf =
-        if (fresh.isEmpty)
-          spark.createDataFrame(new java.util.ArrayList[Row](), schemaOf(name))
-        else spark.read.option("basePath", tablePath(name))
-          .schema(schemaOf(name)).parquet(fresh: _*)
-      edgeDecls.get(name).foreach { case (sc, dc) =>
-        mergeSizing(name, batchSizing(batchDf, sc, dc))
-      }
-      factDecls.get(name).foreach(kc =>
-        mergeFactSizing(name, factBatchStats(batchDf, kc)))
-    }
-  }
-
-  /** Data files currently under `name`'s table dir (recursive — past
-    * partition subdirectories), excluding markers and hidden/staging
-    * entries: the before/after snapshot [[append]] diffs to read back
-    * exactly one batch.
-    */
-  private def listDataFiles(name: String): Set[String] = {
-    val dir = Paths.get(tablePath(name))
-    if (!Files.isDirectory(dir)) Set.empty
-    else {
-      val s = Files.walk(dir)
-      try {
-        val b = Set.newBuilder[String]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val fn = p.getFileName.toString
-          if (Files.isRegularFile(p) && !fn.startsWith(".") &&
-            !fn.startsWith("_")) b += p.toString
-        }
-        b.result()
-      } finally s.close()
-    }
-  }
-
-  /** Recompute a declared edge/fact table's sizing stats from the
-    * stored rows — the repair hook for stats lost to a crash between
-    * an append's data write and its stats merge (also turns the
-    * accumulated fact `max_key_rows` lower bound exact).
-    */
-  def refreshSizing(name: String): Unit = {
-    edgeDecls.get(name).foreach { case (sc, dc) =>
-      writeSizing(name, sc, dc, batchSizing(table(name), sc, dc))
-    }
-    factDecls.get(name).foreach(kc =>
-      writeFactSizing(name, kc, factBatchStats(table(name), kc)))
   }
 
   /** Fill schema columns missing from `df`: timestamps get the F12
     * write-time default, everything else NULL; project to DDL order.
     */
   private def withDefaults(name: String, df: DataFrame): DataFrame = {
-    val schema = schemaOf(name)
+    val schema = schemas(name)
     val filled = schema.fields.foldLeft(df) { (d, f) =>
       if (d.columns.contains(f.name)) d
       else if (f.dataType.isInstanceOf[TimestampType] || f.name.endsWith("_at"))
@@ -204,7 +123,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     }
     if (!Files.exists(target.resolve("_SUCCESS")))
       Files.write(target.resolve("_SUCCESS"), Array.emptyByteArray)
-    deleteRecursively(tmpPath)
+    StoreSwap.deleteTree(tmpPath)
   }
 
   /** MERGE upsert persisted (J5): anti-join + union, written to a temp
@@ -220,300 +139,41 @@ final class Catalog(val spark: SparkSession, val root: String) {
   def deleteWhere(name: String, pred: org.apache.spark.sql.Column): Unit =
     overwrite(name, table(name).filter(!pred))
 
+  /** Rewrite a table through the store module's bak-swap: the new
+    * data is staged complete at `.tmp_<name>`, then swapped in — a
+    * crash at any instant leaves the old or the new table for
+    * [[recover]] to restore, never nothing.
+    */
   private def overwrite(name: String, df: DataFrame): Unit = {
-    val tmp = s"$root/tables/.tmp_$name"
+    val live = Paths.get(tablePath(name))
     val writer = df.write.mode(SaveMode.Overwrite)
     partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
-      .parquet(tmp)
-    // re-point the table directory at the fresh data
-    bakSwap(tmp, tablePath(name), s"$root/tables/.bak_$name")
-    // a rewrite invalidates append-accumulated sizing stats — refresh
-    // from the stored table (cluster/merge/deleteWhere all land here)
-    refreshSizing(name)
+      .parquet(StoreSwap.stagePath(live).toString)
+    StoreSwap.swapIn(live)
   }
 
-  /** Crash recovery for an interrupted [[overwrite]] swap: if the live
-    * dir vanished mid-swap, restore whichever staged copy is COMPLETE
-    * (.tmp_ only counts when its _SUCCESS marker exists — a crash
-    * mid-parquet-write leaves a partial .tmp_ that must never become
-    * the live table; else .bak_ = the previous data). Incomplete .tmp_
-    * remnants are deleted either way so they cannot resurrect later.
+  /** Crash recovery for an interrupted [[overwrite]] swap
+    * ([[StoreSwap.recover]]): a complete `.tmp_` rolls forward, else
+    * the `.bak_` rolls back; leftovers are dropped.
     */
-  def recover(name: String): Unit = {
-    val target = Paths.get(tablePath(name))
-    val tmp = Paths.get(s"$root/tables/.tmp_$name")
-    val bak = Paths.get(s"$root/tables/.bak_$name")
-    val tmpComplete = Files.exists(tmp.resolve("_SUCCESS"))
-    if (!Files.exists(target)) {
-      if (tmpComplete) Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      else if (Files.exists(bak)) Files.move(bak, target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    if (Files.exists(tmp) && !Files.exists(tmp.resolve("_SUCCESS")))
-      deleteRecursively(tmp)
-  }
-
-  /** Single-writer bak-swap of the staged `tmp` dir in as `target`:
-    * live -> .bak, tmp -> live, drop .bak. At no instant is the target
-    * deleted without its replacement staged — a crash leaves either the
-    * old live dir or the old data intact under .bak, never nothing.
-    * recover() (called on open) finishes an interrupted table swap.
-    */
-  private def bakSwap(tmp: String, target: String, bak: String): Unit = {
-    val (t, b) = (Paths.get(target), Paths.get(bak))
-    deleteRecursively(b)
-    if (Files.exists(t)) Files.move(t, b, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), t, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(b)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-    }
-  }
+  def recover(name: String): Unit = StoreSwap.recover(Paths.get(tablePath(name)))
 
   /** DROP TABLE (S9; cleanup:14-28). Also removes swap remnants
     * (.tmp_/.bak_) so a dropped table can never be resurrected by
     * [[recover]] on the next warehouse open.
     */
   def dropTable(name: String): Unit = {
-    deleteRecursively(Paths.get(tablePath(name)))
-    deleteRecursively(Paths.get(s"$root/tables/.tmp_$name"))
-    deleteRecursively(Paths.get(s"$root/tables/.bak_$name"))
+    val live = Paths.get(tablePath(name))
+    Seq(live, StoreSwap.stagePath(live), StoreSwap.bakPath(live))
+      .foreach(StoreSwap.deleteTree)
   }
 
   /** DROP STAGE (cleanup:17-20): remove a stage directory and its files. */
-  def dropStage(stage: String): Unit = deleteRecursively(Paths.get(stageDir(stage)))
+  def dropStage(stage: String): Unit = StoreSwap.deleteTree(stageDir(stage))
 
   /** SHOW TABLES (S10; setup:148-161, cleanup:41-45): warehouse table
     * names present on disk (directory exists), sorted.
     */
-  // ------------------------------------------------------------------
-  // Declared edge tables: catalog-maintained GraphSizing stats
-  // (SURVEY §7-adjacent: the round-13 rank loops consume (edge rows,
-  // per-side HLL node counts) as sizing hints; this records those
-  // facts at WRITE time — one aggregate per appended batch, HLL
-  // sketches unioned incrementally — so a rank run on a stored edge
-  // table never pays its own sizing scan.)
-  // ------------------------------------------------------------------
-
-  private val edgeDecls =
-    new scala.collection.concurrent.TrieMap[String, (String, String)]()
-
-
-  /** One-row batch statistics: (rows, src HLL sketch, dst HLL sketch). */
-  private def batchSizing(df: DataFrame, srcCol: String,
-                          dstCol: String): Row =
-    df.agg(count(lit(1)).as("edge_rows"),
-      hll_sketch_agg(col(srcCol)).as("src_sketch"),
-      hll_sketch_agg(col(dstCol)).as("dst_sketch")).head()
-
-  private def sizingSchema: StructType = StructType(Seq(
-    StructField("src_col", StringType),
-    StructField("dst_col", StringType),
-    StructField("edge_rows", LongType),
-    StructField("src_sketch", BinaryType),
-    StructField("dst_sketch", BinaryType)))
-
-  /** Bak-swap a one-row stats frame into `.{store}_{name}` — the same
-    * crash posture as [[overwrite]]: the old delete-then-move left a
-    * window with NO store on disk; now a crash at any instant leaves
-    * either the live dir or a complete .bak for [[readStore]] to fall
-    * back to. Shared by the edge and fact sizing stores.
-    */
-  private def swapInStore(store: String, name: String, row: Row,
-                          schema: StructType): Unit = {
-    val tmp = s"$root/tables/.tmp_${store}_$name"
-    spark.createDataFrame(java.util.Collections.singletonList(row), schema)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    bakSwap(tmp, s"$root/tables/.${store}_$name",
-      s"$root/tables/.bak_${store}_$name")
-  }
-
-  private def readStore(store: String, name: String,
-                        schema: StructType): Option[Row] = {
-    def complete(dir: String) =
-      Files.exists(Paths.get(dir).resolve("_SUCCESS"))
-    val live = s"$root/tables/.${store}_$name"
-    val bak = s"$root/tables/.bak_${store}_$name"
-    val pick =
-      if (complete(live)) Some(live)
-      else if (complete(bak)) Some(bak) // interrupted swap: old stats
-      else None
-    pick.flatMap(d =>
-      spark.read.schema(schema).parquet(d).collect().headOption)
-  }
-
-  private def writeSizing(name: String, srcCol: String, dstCol: String,
-                          stats: Row): Unit =
-    swapInStore("sizing", name, Row(srcCol, dstCol, stats.getLong(0),
-      if (stats.isNullAt(1)) null else stats.get(1),
-      if (stats.isNullAt(2)) null else stats.get(2)), sizingSchema)
-
-  private def readSizing(name: String): Option[Row] =
-    readStore("sizing", name, sizingSchema)
-
-  /** Declare `name` a stored edge table with the given schema: the
-    * catalog creates it empty if absent and maintains (edge rows,
-    * per-side HLL node-count sketches) across [[append]]s and
-    * rewrites. Idempotent — re-opening a warehouse re-declares and
-    * picks up the persisted stats. An empty-sketch store reads as
-    * zero nodes; a batch append pays ONE extra aggregate over the
-    * batch (the ingestion-time price the sizing doc describes).
-    */
-  def declareEdgeTable(name: String, srcCol: String, dstCol: String,
-                       schema: StructType): Unit = {
-    require(schema.fieldNames.contains(srcCol) &&
-      schema.fieldNames.contains(dstCol),
-      s"edge schema must carry $srcCol and $dstCol")
-    extraSchemas.put(name, schema)
-    edgeDecls.put(name, (srcCol, dstCol))
-    recover(name)
-    createEmptyIfAbsent(name)
-    // first declaration: seed stats from whatever the table already
-    // holds (one scan, the ingestion-time price; empty table → 0 rows
-    // + null sketches). Re-declarations pick up the persisted store.
-    if (readSizing(name).isEmpty)
-      writeSizing(name, srcCol, dstCol,
-        batchSizing(table(name), srcCol, dstCol))
-  }
-
-  /** Union `batch` statistics into the stored sizing row. */
-  private def mergeSizing(name: String, batch: Row): Unit = {
-    val (sc, dc) = edgeDecls(name)
-    val prior = readSizing(name)
-    val rows = prior.map(_.getLong(2)).getOrElse(0L) + batch.getLong(0)
-    writeSizing(name, sc, dc, Row(rows,
-      unionSketch(prior, 3, batch, 1), unionSketch(prior, 4, batch, 2)))
-  }
-
-  /** HLL union of the prior store's sketch (column `pi`) and the
-    * batch's sketch (column `bi`); a null side leaves the other as is.
-    */
-  private def unionSketch(prior: Option[Row], pi: Int,
-                          batch: Row, bi: Int): Any = {
-    val b = if (batch.isNullAt(bi)) null else batch.get(bi)
-    val p = prior.filter(!_.isNullAt(pi)).map(_.get(pi)).orNull
-    (p, b) match {
-      case (null, x) => x
-      case (x, null) => x
-      case (x, y) =>
-        // two binary sketches → hll_union via one local-relation row
-        spark.createDataFrame(
-            java.util.Collections.singletonList(Row(x, y)),
-            StructType(Seq(StructField("a", BinaryType),
-              StructField("b", BinaryType))))
-          .select(hll_union(col("a"), col("b"))).head().get(0)
-    }
-  }
-
-  /** The catalog-recorded [[graft.ops.Graph.GraphSizing]] for a
-    * declared edge table — what a rank loop passes as `sizingHint`
-    * instead of scanning. None when the table was never declared or
-    * has no stats yet.
-    */
-  def sizingHint(name: String): Option[graft.ops.Graph.GraphSizing] =
-    readSizing(name).map { r =>
-      graft.ops.Graph.GraphSizing(r.getLong(2),
-        estimateSketch(r, 3), estimateSketch(r, 4))
-    }
-
-  private def estimateSketch(r: Row, i: Int): Long =
-    if (r.isNullAt(i)) 0L
-    else spark.createDataFrame(
-        java.util.Collections.singletonList(Row(r.get(i))),
-        StructType(Seq(StructField("s", BinaryType))))
-      .select(hll_sketch_estimate(col("s"))).head().getLong(0)
-
-  // ------------------------------------------------------------------
-  // Fact-table sizing (the edge-table machinery generalized, round-15
-  // task 8): a declared fact table maintains (rows, HLL key sketch,
-  // hottest-key row count) across appends — the three numbers
-  // [[graft.ops.Skew.adviseSalts]] turns into a measured salt
-  // suggestion, so the ingestion side records what the join side
-  // would otherwise re-scan 60M rows to learn.
-  // ------------------------------------------------------------------
-
-  private val factDecls =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
-  private def factSchema: StructType = StructType(Seq(
-    StructField("key_col", StringType),
-    StructField("rows", LongType),
-    StructField("key_sketch", BinaryType),
-    StructField("max_key_rows", LongType)))
-
-  /** One-row fact batch statistics: a per-key count aggregate feeding
-    * (total rows, key sketch, max per-key count) — the two-level
-    * shape is the ingestion price of knowing the hot-key mass.
-    * NULL-key rows are excluded throughout: they can never match in
-    * the equi-join [[graft.ops.Skew.saltedJoin]] performs, so counting
-    * the null group would both inflate `rows` against the
-    * null-ignoring key sketch and let a null-heavy table report the
-    * null group as its hottest key — over-advising salt for a key
-    * that carries no join work. `rows` therefore means
-    * JOIN-PARTICIPATING rows, the quantity salt advice is about.
-    */
-  private def factBatchStats(df: DataFrame, keyCol: String): Row =
-    df.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("__kn"))
-      .agg(coalesce(sum(col("__kn")), lit(0L)).as("rows"),
-        hll_sketch_agg(col(keyCol)).as("key_sketch"),
-        coalesce(max(col("__kn")), lit(0L)).as("max_key_rows")).head()
-
-  /** Declare `name` a stored fact table keyed by `keyCol`: creates it
-    * empty if absent and maintains [[FactSizing]] across appends and
-    * rewrites, crash-safe under the same bak-swap as the edge store.
-    * `max_key_rows` accumulated over appends is a LOWER BOUND (a key
-    * split across batches counts per batch); every rewrite — and
-    * [[refreshSizing]] — recomputes it exactly from the stored rows.
-    */
-  def declareFactTable(name: String, keyCol: String,
-                       schema: StructType): Unit = {
-    require(schema.fieldNames.contains(keyCol),
-      s"fact schema must carry $keyCol")
-    extraSchemas.put(name, schema)
-    factDecls.put(name, keyCol)
-    recover(name)
-    createEmptyIfAbsent(name)
-    if (readStore("factsizing", name, factSchema).isEmpty)
-      writeFactSizing(name, keyCol, factBatchStats(table(name), keyCol))
-  }
-
-  private def writeFactSizing(name: String, keyCol: String, stats: Row): Unit =
-    swapInStore("factsizing", name, Row(keyCol, stats.getLong(0),
-      if (stats.isNullAt(1)) null else stats.get(1),
-      stats.getLong(2)), factSchema)
-
-  private def mergeFactSizing(name: String, batch: Row): Unit = {
-    val keyCol = factDecls(name)
-    val prior = readStore("factsizing", name, factSchema)
-    val rows = prior.map(_.getLong(1)).getOrElse(0L) + batch.getLong(0)
-    val maxKey = math.max(prior.map(_.getLong(3)).getOrElse(0L),
-      batch.getLong(2))
-    writeFactSizing(name, keyCol,
-      Row(rows, unionSketch(prior, 2, batch, 1), maxKey))
-  }
-
-  /** Recorded fact sizing: (rows, approx distinct keys, hottest-key
-    * rows). None when never declared.
-    */
-  def factSizing(name: String): Option[Catalog.FactSizing] =
-    readStore("factsizing", name, factSchema).map { r =>
-      Catalog.FactSizing(r.getLong(1), estimateSketch(r, 2), r.getLong(3))
-    }
-
-  /** Measured salt suggestion for [[graft.ops.Skew.saltedJoin]] on a
-    * declared fact table — [[graft.ops.Skew.adviseSalts]] over the
-    * recorded sizing. None when the table was never declared.
-    */
-  def saltAdvice(name: String,
-                 hotCellRows: Long = graft.ops.Skew.defaultHotCellRows): Option[Int] =
-    factSizing(name).map(s =>
-      graft.ops.Skew.adviseSalts(s.rows, s.keysApprox, s.maxKeyRows,
-        hotCellRows))
-
   def listTables(): Seq[String] = {
     val d = Paths.get(s"$root/tables")
     if (!Files.exists(d)) Seq.empty
@@ -580,27 +240,6 @@ final class Catalog(val spark: SparkSession, val root: String) {
       df.repartitionByRange(parts, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*))
   }
-
-  /** Z-order rewrite on two numeric dimensions (ops.ZOrder): row-group
-    * stats prune selective filters on EITHER column, where [[cluster]]
-    * prunes only its leading sort column.
-    */
-  def clusterZ(name: String, dimA: String, dimB: String, numFiles: Int = 0): Unit = {
-    val parts =
-      if (numFiles > 0) numFiles
-      else spark.sessionState.conf.numShufflePartitions
-    overwrite(name, graft.ops.ZOrder.cluster(table(name), dimA, dimB, parts))
-  }
-
-  /** CSV / JSON export sinks (S8; app:574-579, app:766-790): the
-    * reference's download buttons, set-based. Headers on for CSV to
-    * match the pandas to_csv shape.
-    */
-  def exportCsv(df: DataFrame, outDir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(outDir)
-
-  def exportJson(df: DataFrame, outDir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(outDir)
 
   /** Session context probe (S4; app:90-96): who/where, as a one-row
     * frame like the reference's `SELECT CURRENT_ROLE(), CURRENT_DATABASE(),
@@ -672,13 +311,6 @@ final class Catalog(val spark: SparkSession, val root: String) {
 }
 
 object Catalog {
-  /** Recorded fact-table sizing (see [[Catalog.factSizing]]): total
-    * rows, HLL-approximate distinct key count, hottest-key row count
-    * (a lower bound between rewrites — see declareFactTable).
-    */
-  final case class FactSizing(rows: Long, keysApprox: Long,
-                              maxKeyRows: Long)
-
   /** Regex matching everything up to and including a stage's directory
     * in a file path. Stage names are Pattern-quoted so regex
     * metacharacters in them ("v1.2", "a+b") match literally. Shared by

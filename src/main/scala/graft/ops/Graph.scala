@@ -79,10 +79,8 @@ object Graph {
       else {
         val p = java.nio.file.Files.createTempDirectory("graft_ckpt")
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-          catch { case _: Exception => () }))
+          try graft.engine.StoreSwap.deleteTree(p)
+          catch { case _: Exception => () })) // best-effort cleanup
         p.toString
       }
     }
@@ -1558,9 +1556,9 @@ object Graph {
                 sizingHint: Option[GraphSizing] = None): DataFrame = {
     require(k >= 1, "k >= 1")
     require(rounds >= 1 && rounds <= 64, "rounds in [1, 64]")
-    // catalog sizing picks the pin mode like the rank loops: the peel
+    // the sizing hint picks the pin mode like the rank loops: the peel
     // re-pins a (shrinking) edge-sized table EVERY round, so a big
-    // declared table auto-selects disk checkpointing instead of
+    // staged table auto-selects disk checkpointing instead of
     // holding `rounds` generations of executor-memory blocks
     val pin = pinner(edges.sparkSession, checkpointDir,
       sizingHint.map(_.edgeRows).getOrElse(0L))

@@ -47,41 +47,4 @@ object Skew {
     saltedBig.join(replicatedSmall.hint("shuffle_hash"),
       keys :+ "__salt", joinType).drop("__salt")
   }
-
-  /** Default hot-cell granule for [[adviseSalts]]: ~50k rows of a
-    * narrow fact projection is ~2 MB of shuffle block — small enough
-    * that no single (key, salt) cell dominates a task, large enough
-    * that the salt replication tax on the small side stays trivial.
-    */
-  val defaultHotCellRows: Long = 50000L
-
-  /** Measured salt suggestion from catalog sizing (round-15 task 8):
-    * size `salts` so the HOTTEST key's rows split into cells of at
-    * most ~`hotCellRows`, rounded up to a power of two (salting
-    * composes with hash partitioning, and a pow2 keeps the modulo
-    * cheap and the suggestion stable under small stat drift).
-    *
-    * The hottest-key estimate takes the LARGER of two lower bounds
-    * the catalog records: the accumulated per-batch max (exact after
-    * any rewrite) and rows/keys (the uniform floor — on the 60M-event
-    * fixture, where every user is equally hot, it IS the max). On the
-    * 60M-row / ~150-key events table this yields
-    * ceil(400k / 50k) = 8 — exactly the hand-tuned value
-    * q_skew_salted_join shipped with (SaltAdviceSpec pins it).
-    * Unsalted data (hot key under one cell) advises 1 = no salting.
-    * Advisory, not binding: the caller still owns the trade against
-    * its small side's replication cost.
-    */
-  def adviseSalts(rows: Long, keysApprox: Long, maxKeyRows: Long,
-                  hotCellRows: Long = defaultHotCellRows): Int = {
-    require(hotCellRows > 0, "hotCellRows must be positive")
-    val uniformFloor = rows / math.max(1L, keysApprox)
-    val hottest = math.max(maxKeyRows, uniformFloor)
-    val raw = math.max(1L, (hottest + hotCellRows - 1) / hotCellRows)
-    val capped = math.min(raw, 256L)
-    Integer.highestOneBit(capped.toInt) match {
-      case h if h == capped => h
-      case h => h * 2
-    }
-  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
 import graft.ops.Similarity
 
 /** Incremental embedding near-duplicate filtering — the vector-space
@@ -35,23 +36,13 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
   // different nBits/nTables would silently never match buckets; the
   // marker exists to fail fast on exactly that.
   private val formatVersion = s"1:nBits=$nBits,nTables=$nTables"
-  locally {
-    StoreSwap.recover(Paths.get(storePath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(storePath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "0"
-      // bare pre-hyperparameter markers recorded the formula but NOT
-      // the params the store was built with — unconditionally
-      // incomparable (guessing defaults would silently admit a
-      // mismatched store)
-      require(v == formatVersion,
-        s"SRP store at $storeDir uses bucket format [$v], this build writes " +
-          s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  // bare pre-hyperparameter markers recorded the formula but NOT
+  // the params the store was built with — unconditionally
+  // incomparable (guessing defaults would silently admit a
+  // mismatched store)
+  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "0")(found =>
+    s"SRP store at $storeDir uses bucket format [$found], this build writes " +
+      s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
 
   private val storeSchema = StructType(Seq(
     StructField("id", LongType),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
+
 /** Incremental boilerplate-line detection for a growing corpus — the
   * streaming form of [[graft.ops.TextAnalysis.removeBoilerplateLines]]
   * (reference scope: the app's batch/stream ingestion modes, app:206):
@@ -39,19 +41,9 @@ final class IncrementalBoilerplate(spark: SparkSession, storeDir: String,
   // formula is format-relevant; minDocs is a read-time threshold and
   // may vary between batches/reopens without invalidating the store.
   private val formatVersion = "1:md5-lines"
-  locally {
-    StoreSwap.recover(Paths.get(storePath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(storePath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "?"
-      require(v == formatVersion,
-        s"boilerplate store at $storeDir uses line-hash format [$v], this build " +
-          s"writes [$formatVersion] — rebuild the store")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "?")(found =>
+    s"boilerplate store at $storeDir uses line-hash format [$found], this build " +
+      s"writes [$formatVersion] — rebuild the store")
 
   private val storeSchema = StructType(Seq(
     StructField("h", StringType),

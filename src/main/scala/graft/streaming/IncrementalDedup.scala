@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
 import graft.ops.Dedup
 
 /** Incremental near-duplicate filtering for a growing corpus — the
@@ -48,23 +49,13 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
   // fail fast on.
   private val formatVersion =
     s"2:shingleK=$shingleK,numHashes=$numHashes,bands=$bands"
-  locally {
-    StoreSwap.recover(Paths.get(storePath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(storePath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "1"
-      // bare pre-hyperparameter markers ("1"/"2") recorded the formula
-      // but NOT the params the store was built with — there is no way
-      // to know them, so such stores are unconditionally incomparable
-      // (guessing defaults would silently admit a mismatched store)
-      require(v == formatVersion,
-        s"signature store at $storeDir uses bucket format [$v], this build writes " +
-          s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  // bare pre-hyperparameter markers ("1"/"2") recorded the formula
+  // but NOT the params the store was built with — there is no way
+  // to know them, so such stores are unconditionally incomparable
+  // (guessing defaults would silently admit a mismatched store)
+  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "1")(found =>
+    s"signature store at $storeDir uses bucket format [$found], this build writes " +
+      s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
 
   private val storeSchema = StructType(Seq(
     StructField("id", LongType),

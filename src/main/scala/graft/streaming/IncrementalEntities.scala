@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
+
 /** Incremental entity resolution for a growing record stream — the
   * linkage sibling of the dedup/ANN/winnow/boilerplate/BM25 stores:
   * each batch's records are blocked into their SymSpell deletion-
@@ -33,21 +35,10 @@ final class IncrementalEntities(spark: SparkSession, storeDir: String,
   require(maxDist == 1 || maxDist == 2, "maxDist must be 1 or 2")
 
   private val formatVersion = s"1:del-neighborhood-d$maxDist"
-  locally {
-    StoreSwap.recover(Paths.get(variantsPath))
-    StoreSwap.recover(Paths.get(recordsPath))
-    StoreSwap.recover(Paths.get(edgesPath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(variantsPath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "?"
-      require(v == formatVersion,
-        s"entity store at $storeDir uses blocking format [$v], this build " +
-          s"writes [$formatVersion] — rebuild the store")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  StoreSwap.open(storeDir, Seq(variantsPath, recordsPath, edgesPath),
+      formatVersion, "?")(found =>
+    s"entity store at $storeDir uses blocking format [$found], this build " +
+      s"writes [$formatVersion] — rebuild the store")
 
   private def variantsPath = s"$storeDir/variants"
   private def recordsPath = s"$storeDir/records"

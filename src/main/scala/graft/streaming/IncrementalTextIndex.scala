@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
+
 /** Incremental lexical (BM25) index for a growing corpus — the
   * persisted-index sibling of the dedup/ANN/boilerplate/winnow
   * stores: each batch appends its POSTINGS (id, term, tf) and doc
@@ -31,20 +33,9 @@ import org.apache.spark.sql.types._
 final class IncrementalTextIndex(spark: SparkSession, storeDir: String) {
 
   private val formatVersion = "1:ws-lower-tf"
-  locally {
-    StoreSwap.recover(Paths.get(postingsPath))
-    StoreSwap.recover(Paths.get(lensPath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(postingsPath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "?"
-      require(v == formatVersion,
-        s"text index at $storeDir uses tokenization format [$v], this build " +
-          s"writes [$formatVersion] — rebuild the index")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  StoreSwap.open(storeDir, Seq(postingsPath, lensPath), formatVersion, "?")(found =>
+    s"text index at $storeDir uses tokenization format [$found], this build " +
+      s"writes [$formatVersion] — rebuild the index")
 
   private def postingsPath = s"$storeDir/postings"
   private def lensPath = s"$storeDir/lens"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.StoreSwap
 import graft.ops.Dedup
 
 /** Incremental PARTIAL-overlap detection for a growing corpus — the
@@ -40,19 +41,9 @@ final class IncrementalWinnow(spark: SparkSession, storeDir: String,
   // IncrementalDedup: a store built with other params silently never
   // matches)
   private val formatVersion = s"1:k=$k,w=$w"
-  locally {
-    StoreSwap.recover(Paths.get(storePath))
-    val marker = Paths.get(s"$storeDir/_FORMAT")
-    if (Files.exists(Paths.get(storePath)) || Files.exists(marker)) {
-      val v = if (Files.exists(marker)) Files.readString(marker).trim else "?"
-      require(v == formatVersion,
-        s"fingerprint store at $storeDir uses format [$v], this build writes " +
-          s"[$formatVersion] — rebuild the store (selections are not comparable)")
-    } else {
-      Files.createDirectories(Paths.get(storeDir))
-      Files.writeString(marker, formatVersion)
-    }
-  }
+  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "?")(found =>
+    s"fingerprint store at $storeDir uses format [$found], this build writes " +
+      s"[$formatVersion] — rebuild the store (selections are not comparable)")
 
   private val storeSchema = StructType(Seq(
     StructField("id", LongType),

@@ -80,6 +80,23 @@ class GraphScaleKnobsSpec extends AnyFunSuite with SparkTestBase {
     assert(a == b)
   }
 
+  test("triangles / clustering / k-core with a sizing hint == without") {
+    // a graph with real triangles: ring + chords over 60 nodes
+    val tri = (0L until 60L).flatMap(i => Seq(
+      (i, (i + 1) % 60), (i, (i + 2) % 60))).toDF("src", "dst")
+    val hint = Some(Graph.sizingOf(tri, "src", "dst"))
+    assert(hint.exists(_.edgeRows == 120L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").collect().toSeq
+    assert(rows(Graph.triangleCounts(tri, "src", "dst", sizingHint = hint)) ==
+      rows(Graph.triangleCounts(tri, "src", "dst")))
+    assert(rows(Graph.clusteringCoefficient(tri, "src", "dst", sizingHint = hint)) ==
+      rows(Graph.clusteringCoefficient(tri, "src", "dst")))
+    assert(rows(Graph.kCorePeel(tri, "src", "dst", k = 3, rounds = 4,
+        sizingHint = hint)) ==
+      rows(Graph.kCorePeel(tri, "src", "dst", k = 3, rounds = 4)))
+  }
+
   test("loop conf overrides are restored even when the body throws") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     intercept[IllegalArgumentException] {
