@@ -59,10 +59,17 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * 100 TB, per-class queries on the fields table touch only their
     * class's partitions.
     */
-  def append(name: String, df: DataFrame): Unit = {
-    val writer = withDefaults(name, df).write.mode(SaveMode.Append)
-    partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
-      .parquet(tablePath(name))
+  def append(name: String, df: DataFrame): Unit =
+    write(name, withDefaults(name, df), SaveMode.Append, tablePath(name))
+
+  /** The one parquet writer of table data: partitioned per
+    * [[partitionSpec]], with `file:` resolved to
+    * [[InProcessLocalFileSystem]] for this write only
+    * ([[Catalog.writeOptions]]).
+    */
+  private def write(name: String, df: DataFrame, mode: SaveMode, path: String): Unit = {
+    val writer = df.write.mode(mode).options(writeOptions)
+    partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*)).parquet(path)
   }
 
   /** Fill schema columns missing from `df`: timestamps get the F12
@@ -93,9 +100,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     // another token's files (e.g. "a-b1" vs "1"), deleting their data
     require(token.matches("[A-Za-z0-9_]+"), s"unsafe batch token: $token")
     val tmp = s"$root/tables/.stage_${name}_$token"
-    val writer = withDefaults(name, df).write.mode(SaveMode.Overwrite)
-    partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
-      .parquet(tmp)
+    write(name, withDefaults(name, df), SaveMode.Overwrite, tmp)
     val tmpPath = Paths.get(tmp)
     val target = Paths.get(tablePath(name))
     Files.createDirectories(target)
@@ -146,9 +151,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     */
   private def overwrite(name: String, df: DataFrame): Unit = {
     val live = Paths.get(tablePath(name))
-    val writer = df.write.mode(SaveMode.Overwrite)
-    partitionSpec.get(name).fold(writer)(cols => writer.partitionBy(cols: _*))
-      .parquet(StoreSwap.stagePath(live).toString)
+    write(name, df, SaveMode.Overwrite, StoreSwap.stagePath(live).toString)
     StoreSwap.swapIn(live)
   }
 
@@ -253,28 +256,56 @@ final class Catalog(val spark: SparkSession, val root: String) {
 
   def stageDir(stage: String): String = s"$root/stages/$stage"
 
-  /** File ingest (S2; put_stream app:379, app:918). */
+  /** File ingest (S2; put_stream app:379, app:918). A path holding
+    * `:` is refused before anything is written: Hadoop parses the
+    * checksum sibling `.x:y.crc` as a URI with a scheme, so one such
+    * file would fail every scan of its stage.
+    */
   def putFile(stage: String, relativePath: String, bytes: Array[Byte]): Unit = {
+    require(!relativePath.contains(':'),
+      s"stage @$stage cannot hold '$relativePath': Spark cannot read back a path with ':'")
     val p = Paths.get(stageDir(stage), relativePath)
     Files.createDirectories(p.getParent)
     Files.write(p, bytes)
   }
 
   /** Directory-table scan (S1; app:136-141): list stage files as rows
-    * (relative_path, file_url, size, content). Uses the binaryFile
-    * source so the same scan works on HDFS/S3 at scale; content column
-    * is pruned away by Catalyst unless actually referenced.
+    * (relative_path, file_url, size, content). Lists and reads the
+    * whole stage, nested directories included — the batch-SQL shape.
+    * Uses the binaryFile source so the same scan works on HDFS/S3 at
+    * scale; content column is pruned away by Catalyst unless actually
+    * referenced.
     */
-  def directory(stage: String): DataFrame = {
-    val dir = stageDir(stage)
-    val prefix = Catalog.stagePathPrefix(stage)
+  def directory(stage: String): DataFrame = stageRows(stage, stageDir(stage))
+
+  /** The [[directory]] row of ONE staged file (`TO_FILE('@stage', path)`,
+    * app:205-208), read by its path: an interactive request lists and
+    * reads one file, however large the stage. Hadoop's glob characters
+    * in the path are escaped, so `a[1].txt` or `b{x,y}.txt` name
+    * themselves. A path that names a directory yields no row. Throws
+    * NoSuchElementException when nothing exists at the path.
+    */
+  def stagedFile(stage: String, relativePath: String): DataFrame = {
+    val rows =
+      try stageRows(stage, globEscape(s"${stageDir(stage)}/$relativePath"))
+      catch {
+        case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+          throw new NoSuchElementException(s"no file '$relativePath' in stage @$stage")
+      }
+    rows.filter(col("relative_path") === relativePath)
+  }
+
+  /** binaryFile rows under `path` in the stage's directory-table shape;
+    * shared by [[directory]] and [[stagedFile]].
+    */
+  private def stageRows(stage: String, path: String): DataFrame = {
+    val relative = regexp_replace(col("path"), Catalog.stagePathPrefix(stage), "")
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true") // stages nest (FIXTURES A4)
-      .load(dir)
+      .load(path)
       .select(
-        regexp_replace(col("path"), prefix, "").as("relative_path"),
-        concat(lit(s"@$stage/"),
-          regexp_replace(col("path"), prefix, "")).as("file_url"),
+        relative.as("relative_path"),
+        concat(lit(s"@$stage/"), relative).as("file_url"),
         col("length"),
         col("content"))
   }
@@ -318,6 +349,21 @@ object Catalog {
     */
   def stagePathPrefix(stage: String): String =
     ".*/stages/" + java.util.regex.Pattern.quote(stage) + "/"
+
+  /** `path` with Hadoop's glob characters escaped by a backslash, so a
+    * load reads exactly the file it names.
+    */
+  private def globEscape(path: String): String =
+    path.replaceAll("""([\\*?\[\]{}])""", """\\$1""")
+
+  /** Write options of every catalog write: `file:` resolves to
+    * [[InProcessLocalFileSystem]] in this write's Hadoop conf, on the
+    * driver and in its tasks. The cache is bypassed because Hadoop's
+    * FileSystem cache keys by scheme, not implementation.
+    */
+  private val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[InProcessLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Fixed schema of Spark's binaryFile source — streaming file
     * sources require it explicitly.

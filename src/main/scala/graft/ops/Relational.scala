@@ -1,8 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 
 /** Relational core of the engine: the set-based algorithms the reference
   * expresses via Snowflake SQL (MERGE, NOT-EXISTS-guarded insert, QUALIFY
@@ -27,25 +31,43 @@ object Relational {
     * (app:188-194). Set-based: any source cardinality, though the
     * reference only ever merges a single literal row. Equi-join on the
     * key columns only; source rows replace matching target rows wholesale.
+    * A NULL key matches nothing: such target rows stay, such source rows
+    * are inserted.
     *
     * Scale note: the anti-join shuffles both sides on the key columns
-    * (or broadcasts the source when it is small, the common case here);
-    * the union is shuffle-free.
+    * (or broadcasts the source when it is small); the union is
+    * shuffle-free. A source that optimizes to a local relation of at
+    * most one row — the reference's shape (J5) — needs neither the
+    * dedup window nor the join: its key becomes a filter on the target,
+    * and the merge is one shuffle-free scan plus the row.
     */
-  def mergeInto(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    // Dedup source on keys (last-writer-wins needs one row per key; pick
-    // deterministically by the remaining columns to keep tests stable).
-    val srcCols = source.columns
-    val ordCols = srcCols.filterNot(keys.contains).map(col)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((if (ordCols.nonEmpty) ordCols else Array(lit(1))).map(_.desc): _*)
-    val dedupedSrc = source
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val aligned = dedupedSrc.select(target.columns.map(col): _*)
-    target.join(dedupedSrc.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(aligned)
-  }
+  def mergeInto(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    source.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.length <= 1 =>
+        val keep = l.data.headOption.fold(lit(true)) { row =>
+          val values = keys.map { k =>
+            val i = l.output.indexWhere(a => SQLConf.get.resolver(a.name, k))
+            require(i >= 0, s"merge key $k missing from the source")
+            Literal(row.get(i, l.output(i).dataType), l.output(i).dataType)
+          }
+          if (values.exists(_.value == null)) lit(true)
+          else !coalesce(keys.zip(values).map { case (k, v) =>
+            col(k) === ColumnBridge.column(v) }.reduce(_ && _), lit(false))
+        }
+        target.filter(keep).unionByName(source.select(target.columns.map(col): _*))
+      case _ =>
+        // Dedup source on keys (last-writer-wins needs one row per key; pick
+        // deterministically by the remaining columns to keep tests stable).
+        val ordCols = source.columns.filterNot(keys.contains).map(col)
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy((if (ordCols.nonEmpty) ordCols else Array(lit(1))).map(_.desc): _*)
+        val dedupedSrc = source
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        val aligned = dedupedSrc.select(target.columns.map(col): _*)
+        target.join(dedupedSrc.select(keys.map(col): _*), keys, "left_anti")
+          .unionByName(aligned)
+    }
 
   /** INSERT ... WHERE NOT EXISTS (app:481-489): append only the source
     * rows whose key is absent from the target. Idempotent.

@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalPropertiesBridge
 
 import graft.ai.AiFunctions._
 import graft.engine.Catalog
@@ -10,17 +11,19 @@ import graft.ops.Relational
 /** The reference's three processing modes (SURVEY §3), Spark-first.
   *
   * Interactive (app:356-604): one document through classify -> ensure
-  * prompts -> extract -> OCR -> summarize -> persist x4. The reference
-  * runs OCR on a side thread (app:450-452); here classify/extract/ocr/
-  * summary are sibling columns of one Dataset.
+  * prompts -> extract -> OCR -> summarize -> persist x4, in five Spark
+  * jobs: one scan of the one staged file, four persists. The reference
+  * runs OCR and the summary on a side thread (app:450-452); here the
+  * summary is called beside classify, in the scan job.
   *
   * Model calls in flight: across documents, Spark's tasks and, within a
   * task, `AiEvalExec` (planned by `GraftExtensions`), which keeps up to
   * eight documents' calls in flight per task, the reference's batch
-  * fan-out width (app:881). Its inputs are computed on the task thread,
-  * so no expression evaluator is shared between threads. A request's
-  * extract and summary over its one-row local relation are evaluated
-  * while the optimizer folds that relation, one after the other.
+  * fan-out width (app:881), and starts a row's independent calls
+  * together. Its inputs are computed on the task thread, so no
+  * expression evaluator is shared between threads. A request's extract
+  * needs the class, so it runs after the scan job, over the request's
+  * one-row local relation, while the optimizer folds that relation.
   *
   * Batch-SQL (app:944-966): the purest "query" — one set-based plan:
   * directory scan -> ai_extract column -> explode -> pivot. At 100 TB
@@ -48,13 +51,20 @@ object Pipelines {
     * before propagating the first failure — callers unpersist shared
     * cached frames right after, which must not happen under in-flight
     * sibling jobs (and partial writes stay deterministic per job).
+    * Each job runs under the caller's Spark local properties (job
+    * group, description, pool, tags), so cancelling the caller's group
+    * reaches its writes; a pooled thread's own would belong to
+    * whichever caller first started it.
     */
-  private def runConcurrently(tasks: Seq[() => Unit]): Unit = {
+  private def runConcurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.{Duration, DurationInt}
+    val sc = spark.sparkContext
+    val props = LocalPropertiesBridge.capture(sc)
     val settled = tasks.map(t =>
-      Future(t()).map(_ => None: Option[Throwable]).recover { case e => Some(e) })
+      Future(LocalPropertiesBridge.withProperties(sc, props)(t()))
+        .map(_ => None: Option[Throwable]).recover { case e => Some(e) })
     val all = Future.sequence(settled)
     val errs =
       try Await.result(all, 120.seconds)
@@ -104,41 +114,33 @@ object Pipelines {
     val spark = cat.spark
     import spark.implicits._
     // single-document flow: materialize the ONE row driver-side in a
-    // single job (scan + parse + classify), then work from a local
-    // relation — an interactive request is latency-bound by Spark job
-    // count, and a distributed 1-row frame pays a job per touch
-    val docRows = cat.directory(stage)
-      .filter(col("relative_path") === fileName)
+    // single job (read of the one file + parse, then classify and the
+    // summary, both over the text, called together), then work from a
+    // local relation — an interactive request is latency-bound by
+    // Spark job count, and a distributed 1-row frame pays a job per touch
+    val docRow = cat.stagedFile(stage, fileName)
       .withColumn("text", parse_document(col("content")))
-      .withColumn("class_name", ai_classify(col("text")))
-      .select("file_url", "relative_path", "text", "class_name")
-      .collect()
-    // relative_path is the stage's primary key (one directory row per
-    // PUT path — re-PUT overwrites); >1 match means a corrupted
-    // directory table, and silently processing only the first row
-    // would hide it
-    require(docRows.length <= 1,
-      s"stage @$stage has ${docRows.length} directory rows for " +
-        s"'$fileName' — relative_path must be unique per stage")
-    val docRow = docRows.headOption.getOrElse(
-      throw new NoSuchElementException(s"no file '$fileName' in stage @$stage"))
+      .select(col("file_url"), col("relative_path"), col("text"),
+        ai_classify(col("text")).as("class_name"),
+        ai_complete(lit("mistral-7b"), substring(col("text"), 1, 6000)).as("summary"))
+      .collect().headOption.getOrElse(
+        throw new NoSuchElementException(s"no file '$fileName' in stage @$stage"))
     val className = docRow.getString(3)
     ensurePrompts(cat, className)
     // canonicalized prompt map via the invalidation-based PromptStore
     // cache (app:490, app:162-183) — the warm path costs zero jobs
     val promptMap = PromptStore.get(cat, className)
     val derived = Seq((docRow.getString(0), docRow.getString(1),
-        docRow.getString(2), className))
-      .toDF("file_url", "relative_path", "text", "class_name")
+        docRow.getString(2), className, docRow.getString(4)))
+      .toDF("file_url", "relative_path", "text", "class_name", "summary")
       .withColumn("prompt_map", promptsLiteral(promptMap))
       .withColumn("result_map", ai_extract(col("text"), col("prompt_map")))
       .withColumn("extraction_result",
         extract_envelope(col("result_map"), col("prompt_map")))
       .withColumn("ocr", to_json(struct(col("text").as("content"))))
-      .withColumn("summary", ai_complete(lit("mistral-7b"),
-        substring(col("text"), 1, 6000)))
     // materialize the derived columns ONCE, single-threaded, before the
-    // concurrent fan-out: four jobs sharing one lazy local-relation plan
+    // concurrent fan-out (the extract call runs here, as the optimizer
+    // folds the one-row relation): four jobs sharing one lazy plan
     // would let ConvertToLocalRelation constant-fold the same to_json /
     // UDF expression INSTANCES from four optimizer threads at once, and
     // StructsToJsonEvaluator's JacksonGenerator is not thread-safe
@@ -146,10 +148,12 @@ object Pipelines {
       java.util.Arrays.asList(derived.collect(): _*), derived.schema)
     // persist x4 (app:523-554), ALL concurrent — the three appends and
     // the NEW_UPLOADS read-modify-swap touch four different tables —
-    // the engine's form of the reference's side-thread OCR/summary pool
+    // the engine's form of the reference's side-thread pool
     // (app:450-452), including its 120 s join timeout (app:515). The
     // writes project already-materialized values; no shared evaluators.
-    runConcurrently(Seq(
+    // One job each: NEW_UPLOADS' one-row source merges as a key filter
+    // on the table plus the row (Relational.mergeInto).
+    runConcurrently(spark, Seq(
       () => cat.append("DOCUMENTS_PROCESSED", extracted.select(
         col("file_url"), col("relative_path").as("file_ref"),
         col("class_name"), col("extraction_result"))),
@@ -291,7 +295,7 @@ object Pipelines {
     val b = batch.cache()
     try {
       // independent tables -> concurrent jobs (as in interactive)
-      runConcurrently(Seq(
+      runConcurrently(cat.spark, Seq(
         () => cat.appendBatch("DOCUMENTS_PROCESSED", b.select(
           col("file_url"), col("relative_path").as("file_ref"),
           col("class_name"), col("extraction_result")), token),

@@ -1027,8 +1027,16 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val windowed = plans.asScala.toSeq.map(windowedAi("interactive", _))
-    assert(windowed.contains(Set("parse_document", "ai_classify")),
+    assert(windowed.contains(Set("parse_document", "ai_classify", "ai_complete")),
       s"no interactive scan job in $windowed")
+    // the request reads its one staged file, not the stage (2 files)
+    val scans = plans.asScala.toSeq.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.fileFormat.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat] => s
+    })
+    assert(scans.nonEmpty && scans.forall(_.relation.inputFiles.toSeq.map(
+      f => f.substring(f.lastIndexOf('/') + 1)) == Seq("a.txt")), scans.map(_.relation.inputFiles.toSeq))
   }
 
   test("HITS surfaces the pinned final half-steps; no cartesian") {

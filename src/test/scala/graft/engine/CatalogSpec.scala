@@ -83,6 +83,75 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     val rows = cat.directory("v1.2+x")
       .select("relative_path", "file_url").as[(String, String)].collect()
     assert(rows.toSeq == Seq(("doc.txt", "@v1.2+x/doc.txt")))
+    // stagedFile reads exactly the named file: Hadoop glob characters
+    // name themselves, and neighbours a glob would match stay unread
+    val names = Seq("a[1].txt", "b{x,y}.txt", "c*.txt", "d?.txt", "sub/a.txt",
+      "sp ace.txt", "pct%20.txt")
+    (names ++ Seq("a1.txt", "bx.txt", "cat.txt", "d1.txt", "sub/b.txt"))
+      .foreach(n => cat.putFile("v1.2+x", n, n.getBytes(StandardCharsets.UTF_8)))
+    for (n <- names) {
+      val one = cat.stagedFile("v1.2+x", n)
+      assert(one.inputFiles.length == 1, s"$n: ${one.inputFiles.toSeq}")
+      assert(one.select(col("relative_path"), col("file_url"), col("content").cast("string"))
+        .as[(String, String, String)].collect().toSeq == Seq((n, s"@v1.2+x/$n", n)))
+    }
+    // the same rows as the stage listing gives them
+    val listed = cat.directory("v1.2+x").filter(col("relative_path").isin(names: _*))
+      .select("relative_path", "file_url", "length").as[(String, String, Long)].collect()
+    assert(listed.toSet == names.map(n => (n, s"@v1.2+x/$n", n.length.toLong)).toSet)
+  }
+
+  test("stagedFile: a missing file throws, a directory yields no row") {
+    val cat = freshCat()
+    cat.putFile("s", "sub/a.txt", "x".getBytes(StandardCharsets.UTF_8))
+    val e = intercept[NoSuchElementException](cat.stagedFile("s", "nope.txt"))
+    assert(e.getMessage.contains("nope.txt") && e.getMessage.contains("@s"), e.getMessage)
+    intercept[NoSuchElementException](cat.stagedFile("s", "b[1].txt"))
+    assert(cat.stagedFile("s", "sub").count() == 0)
+  }
+
+  test("putFile refuses a path Spark cannot read back and writes nothing") {
+    val cat = freshCat()
+    cat.putFile("s", "ok.txt", "x".getBytes(StandardCharsets.UTF_8))
+    val e = intercept[IllegalArgumentException](
+      cat.putFile("s", "d/x:y.txt", "x".getBytes(StandardCharsets.UTF_8)))
+    assert(e.getMessage.contains("d/x:y.txt"), e.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(cat.stageDir("s"), "d")))
+    assert(cat.directory("s").select("relative_path").as[String].collect().toSeq ==
+      Seq("ok.txt"))
+  }
+
+  test("a catalog write's Hadoop conf resolves file: to the in-process filesystem") {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val cat = freshCat()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[InsertIntoHadoopFsRelationCommand]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        qe.logical.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => writes.add(c)
+          case _ =>
+        }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      cat.append("CLASS_PROMPTS", Seq(("a", "{}")).toDF("class_name", "prompts"))
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!writes.isEmpty, "no write seen")
+    writes.forEach { c =>
+      val conf = spark.sessionState.newHadoopConfWithOptions(c.options)
+      val fs = new org.apache.hadoop.fs.Path(cat.root).getFileSystem(conf)
+      assert(fs.isInstanceOf[InProcessLocalFileSystem], fs.getClass)
+      assert(fs.asInstanceOf[org.apache.hadoop.fs.LocalFileSystem].getRawFileSystem
+        .isInstanceOf[InProcessRawLocalFileSystem])
+    }
+    // a session-wide read still sees Hadoop's own cached filesystem
+    val plain = new org.apache.hadoop.fs.Path(cat.root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!plain.isInstanceOf[InProcessLocalFileSystem])
   }
 
   test("listStages unions filesystem stages with NEW_UPLOADS references") {

@@ -138,7 +138,42 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
         Relational.mergeInto(df, b.toDF("k", "v"), Seq("k"))
       }.as[(Int, String)].collect().toMap
       assert(got == model, s"batches=$batches")
+      // the same batches one row at a time, key 5 standing for NULL, over
+      // a target holding a NULL key: a one-row local source (key filter +
+      // union) and the same row behind repartition(1) (window + anti-join)
+      // both give the sequential model, where a NULL key matches nothing
+      val rows = batches.map(_.map { case (k, v) => (Option(k).filter(_ != 5), v) })
+      val init1 = Seq((Option(0), "z0"), (Option(1), "z1"), (None, "zn"))
+      val rowModel = rows.flatten.foldLeft(init1) { case (t, (k, v)) =>
+        (if (k.isEmpty) t else t.filterNot(_._1 == k)) :+ (k -> v)
+      }.sortBy(_.toString)
+      for (spread <- Seq(false, true)) {
+        val byRow = rows.foldLeft(init1) { (t, b) =>
+          b.foldLeft(t.toDF("k", "v")) { (df, r) =>
+            val src = Seq(r).toDF("k", "v")
+            Relational.mergeInto(df, if (spread) src.repartition(1) else src, Seq("k"))
+          }.as[(Option[Int], String)].collect().toSeq
+        }.sortBy(_.toString)
+        assert(byRow == rowModel, s"spread=$spread rows=$rows")
+      }
     }
+  }
+
+  test("a one-row local merge source plans no Exchange") {
+    val root = java.nio.file.Files.createTempDirectory("graft_merge_")
+    val dir = root.resolve("t").toString
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v").write.parquet(dir)
+    val target = spark.read.parquet(dir)
+    val row = Seq((2, "B")).toDF("k", "v")
+    val one = Relational.mergeInto(target, row, Seq("k"))
+    val plan = one.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(one.orderBy("k").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "B"), (3, "c")))
+    // the general path over the same row still shuffles for its window
+    val spread = Relational.mergeInto(target, row.repartition(1), Seq("k"))
+    assert(spread.queryExecution.executedPlan.toString.contains("Exchange"))
+    graft.engine.StoreSwap.deleteTree(root)
   }
 
   test("widen is monotone in the key set (X5 property)") {

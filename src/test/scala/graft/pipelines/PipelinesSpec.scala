@@ -57,6 +57,45 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     assert(HistoryQueries.classSummary(cat).collect()(0).getAs[Long]("docs") == 1L)
   }
 
+  test("interactive persists run under the caller's Spark local properties") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val cat = stagedCat()
+    val key = "graft.test.caller"
+    // write executions of this warehouse, and every job's (execution, caller)
+    val writes = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.sql.execution.id")).foreach(id =>
+          jobs.add(id.toLong -> e.properties.getProperty(key)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+              s.physicalPlanDescription.contains(cat.root) => writes.add(s.executionId)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def call(value: String, file: String): Seq[String] = {
+      org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+      jobs.clear(); writes.clear()
+      sc.setLocalProperty(key, value)
+      try Pipelines.interactive(cat, "docs", file)
+      finally sc.setLocalProperty(key, null)
+      org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+      jobs.asScala.toSeq.collect { case (id, v) if writes.contains(id) => v }
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(call("first", "a.txt").toSet == Set("first"))
+      val second = call("second", "b.txt")
+      // three appends and the NEW_UPLOADS rewrite, each one job or more
+      assert(second.size >= 4 && second.forall(_ == "second"), second)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("batchSql pipeline produces one wide row per staged file") {
     val cat = stagedCat()
     val wide = Pipelines.batchSql(cat, "docs",
