@@ -928,26 +928,13 @@ object SparkEntry {
     * breaks a staging invariant fails LOUDLY at build time instead of
     * silently aliasing nodes.
     */
-  // LIFETIME: one short-lived driver JVM (Bench/Verify/test run) — the
-  // memo never evicts by design (a staged table stays valid for the
-  // whole run), and the shutdown hook below reclaims the temp parquet
-  // dirs at JVM exit. A long-lived multi-session server would want
-  // session-close eviction instead; nothing here is one.
-  private val stagedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    stagedMemo.values.forEach { dir =>
-      try graft.engine.StoreSwap.deleteTree(dir)
-      catch { case _: Exception => () } // best-effort cleanup
-    }))
-
   private def staged(s: SparkSession, d: String, key: String,
                      validate: DataFrame => Unit = _ => (),
                      partitions: Option[Int] = None)
                     (build: => DataFrame): DataFrame = {
-    val path = stagedMemo.computeIfAbsent((s, d, key), _ => {
+    val path = memoized(s, d, s"staged:$key") {
       val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_$key").toString
+        .createTempDirectory(stagingRoot, s"graft_$key").toString
       // `partitions` runs the BUILD's exchanges (the orders⋈lineitem
       // sort-merge, the dedup/collapse aggregate) at a row-scaled
       // partition count instead of the session's fixed conf — the
@@ -961,8 +948,50 @@ object SparkEntry {
       partitions.fold(doWrite())(p => withShufflePartitions(s, p)(doWrite()))
       validate(s.read.parquet(dir))
       dir
-    })
+    }
     s.read.parquet(path)
+  }
+
+  // LIFETIME: one short-lived driver JVM (Bench/Verify/test run) — the
+  // memo never evicts by design (a staged table stays valid for the
+  // whole run), and a shutdown hook deletes the staged tables' one temp
+  // root at JVM exit. A long-lived multi-session server would want
+  // session-close eviction instead; nothing here is one.
+  private final class Memo(build: => AnyRef) { lazy val value: AnyRef = build }
+  private val memo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), Memo]()
+
+  /** `build`'s value, computed once per (session, sfDir, key) — the
+    * one memo behind every staged table, replayed result and sizing
+    * stat. Builds nest (a sizing stat reads its staged table), so the
+    * map only ever inserts a holder; the holder's lazy val runs the
+    * build once, concurrent callers of the same key wait for it, and a
+    * build that throws is retried by the next caller.
+    */
+  private def memoized[A <: AnyRef](s: SparkSession, d: String, key: String)
+                                   (build: => A): A =
+    memo.computeIfAbsent((s, d, key), _ => new Memo(build)).value.asInstanceOf[A]
+
+  private lazy val stagingRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_staged")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try graft.engine.StoreSwap.deleteTree(root)
+      catch { case _: Exception => () })) // best-effort cleanup
+    root
+  }
+
+  /** A small result collected once per (session, sfDir, key) and
+    * replayed as a local relation. Unlike a cached or checkpointed
+    * frame, it survives Bench.releaseState's purge between timed
+    * queries.
+    */
+  private def replayed(s: SparkSession, d: String, key: String)
+                      (build: => DataFrame): DataFrame = {
+    val (rows, schema) = memoized(s, d, s"replayed:$key") {
+      val df = build
+      (df.collect(), df.schema)
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Session-conf shuffle-partition override for a staging build's
@@ -981,10 +1010,8 @@ object SparkEntry {
     * number the row-scaled partition rules need. The first timed rep
     * pays it once per session, like the staging memo itself.
     */
-  private val tableRowsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), java.lang.Long]()
   private def tableRows(s: SparkSession, d: String, name: String): Long =
-    tableRowsMemo.computeIfAbsent((s, d, name), _ => t(s, d, name).count())
+    memoized[java.lang.Long](s, d, s"rows:$name")(t(s, d, name).count())
 
   /** Shuffle partitions scaled to ~2M rows per task (the
     * [[graft.ops.Graph]] scaledPartitions rule), floored at the
@@ -1001,12 +1028,9 @@ object SparkEntry {
     * so consumers size their plans without re-scanning. Fed to the
     * rank family as [[graft.ops.Graph.GraphSizing]] hints.
     */
-  private val stagedSizingMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.ops.Graph.GraphSizing]()
   private def stagedSizing(s: SparkSession, d: String, key: String,
                            df: => DataFrame): graft.ops.Graph.GraphSizing =
-    stagedSizingMemo.computeIfAbsent((s, d, key),
-      _ => graft.ops.Graph.sizingOf(df, "src", "dst"))
+    memoized(s, d, s"sizing:$key")(graft.ops.Graph.sizingOf(df, "src", "dst"))
 
   /** The deduped symmetric co-purchase edge table ([[staged]]) — the
     * unweighted rank entries and assortativity all read it.
@@ -1874,16 +1898,6 @@ object SparkEntry {
       stagedRagEmbeddings(s, d), ragQueryEmbeddings(s, d), k = 3)
       .orderBy(col("query_id"), col("rank"))
 
-  /** Chunk + hash-embed the corpus ONCE per (session, sfDir), staged
-    * to a temp parquet table both RAG entries read (judge r7 item 4)
-    * — mirroring a real RAG deployment, where ingestion materializes
-    * the chunk-embedding table and every retrieval reads it. Parquet
-    * rather than cache/checkpoint so the staging survives
-    * Bench.releaseState's purge between timed queries.
-    */
-  private val ragEmbMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   /** The ingestion-side pipeline the staging materializes — exposed
     * un-staged so PlanRegressionSpec can guard its shape (chunk text
     * stays map-side; only (id, dim, sum) embedding rows shuffle).
@@ -1899,22 +1913,21 @@ object SparkEntry {
       .hashEmbedding(chunks, "chunk_text", "vec_id", dim = 32)
   }
 
-  private[graft] def stagedRagEmbeddings(s: SparkSession, d: String): DataFrame = {
-    val path = ragEmbMemo.computeIfAbsent((s, d), _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_rag_emb").toString
-      // spread the STORED layout (post-embedding — (id, vec) rows only,
-      // chunk text stays map-side per PlanRegressionSpec): hashEmbedding
-      // ends in an aggregate whose AQE-coalesced output is ~one
-      // partition at small scale, and a one-file staged table would
-      // serialize every downstream k-means pass / quadratic re-rank
-      // that reads it (parquet can't parallelize one row group)
-      graft.ops.Similarity.spread(ragEmbeddingPipeline(s, d), col("vec_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
-  }
+  /** Chunk + hash-embed the corpus ONCE per (session, sfDir), staged
+    * ([[staged]]) to the parquet table both RAG entries read (judge r7
+    * item 4) — mirroring a real RAG deployment, where ingestion
+    * materializes the chunk-embedding table and every retrieval reads
+    * it.
+    */
+  private[graft] def stagedRagEmbeddings(s: SparkSession, d: String): DataFrame =
+    // spread the STORED layout (post-embedding — (id, vec) rows only,
+    // chunk text stays map-side per PlanRegressionSpec): hashEmbedding
+    // ends in an aggregate whose AQE-coalesced output is ~one
+    // partition at small scale, and a one-file staged table would
+    // serialize every downstream k-means pass / quadratic re-rank
+    // that reads it (parquet can't parallelize one row group)
+    staged(s, d, "rag_emb")(
+      graft.ops.Similarity.spread(ragEmbeddingPipeline(s, d), col("vec_id")))
 
   /** FIXED probe set (the EmbAuditCap pattern): retrieval demand is a
     * workload property, not a corpus property — a corpus-proportional
@@ -1938,18 +1951,9 @@ object SparkEntry {
     * is actually measured (judge r8 advice: memoizing the final
     * answer rows would benchmark a constant).
     */
-  private val ragExactMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)]()
-
-  private def stagedRagExact(s: SparkSession, d: String): DataFrame = {
-    val (rows, schema) = ragExactMemo.computeIfAbsent((s, d), _ => {
-      val res = graft.ops.Similarity.bruteForceTopK(
-        stagedRagEmbeddings(s, d), ragQueryEmbeddings(s, d), k = 3)
-      (res.collect(), res.schema)
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+  private def stagedRagExact(s: SparkSession, d: String): DataFrame =
+    replayed(s, d, "rag_exact")(graft.ops.Similarity.bruteForceTopK(
+      stagedRagEmbeddings(s, d), ragQueryEmbeddings(s, d), k = 3))
 
   /** RAG retrieval through the IVF SCALE path (q_rag_retrieve_ivf):
     * the same chunk + hash-embedding pipeline as q_rag_retrieve, but
@@ -2290,27 +2294,15 @@ object SparkEntry {
     * q_emb_near_dups_lsh and q_semdedup all gate on the SAME exact
     * all-pairs cosine>=0.4 pair set — the O(n²) side of each contract,
     * bounded by [[EmbAuditCap]]. Compute it once per (session, sfDir)
-    * and replay the collected pairs as a local relation. Collecting is
-    * driver-bounded (the pair set is the planted-dup fixture, 59 rows
-    * at sf0.01), and — unlike a cached/checkpointed frame — survives
-    * Bench.releaseState's cache/checkpoint purge between timed queries.
+    * and replay the collected pairs ([[replayed]]). Collecting is
+    * driver-bounded: the pair set is the planted-dup fixture, 59 rows
+    * at sf0.01.
     */
-  private val exactPairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[org.apache.spark.sql.Row]]()
-
-  private def stagedExactPairs(s: SparkSession, d: String): DataFrame = {
-    val rows = exactPairsMemo.computeIfAbsent((s, d), _ =>
-      Similarity.exactNearDupPairs(
-          t(s, d, "embeddings").filter(col("vec_id") < EmbAuditCap),
-          threshold = 0.4)
-        .select(col("id_a"), col("id_b")).collect())
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType))))
-  }
+  private def stagedExactPairs(s: SparkSession, d: String): DataFrame =
+    replayed(s, d, "exact_pairs")(Similarity.exactNearDupPairs(
+        t(s, d, "embeddings").filter(col("vec_id") < EmbAuditCap),
+        threshold = 0.4)
+      .select(col("id_a"), col("id_b")))
 
   private def qEmbNearDups(s: SparkSession, d: String): DataFrame =
     stagedExactPairs(s, d)
@@ -2324,24 +2316,13 @@ object SparkEntry {
     * entry's sf10 time (SCALE.md round 15: truth 5.5 s of 11.2 s total).
     * The pair set is the planted near-dup inventory (~26k rows at
     * sf10, per-mille of the corpus), driver-bounded the way the
-    * exact-pairs memo is, and survives Bench.releaseState's purge.
+    * exact pairs are, and [[replayed]] the same way.
     * The UNBOUNDED path remains [[Dedup.minhashNearDups]].
     */
-  private val minhashTruthMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[org.apache.spark.sql.Row]]()
-
-  private def stagedMinhashTruth(s: SparkSession, d: String): DataFrame = {
-    val rows = minhashTruthMemo.computeIfAbsent((s, d), _ =>
-      Dedup.minhashNearDups(t(s, d, "documents"), "text", "doc_id",
-          threshold = 0.5, shingleK = 3, numHashes = 32, bands = 16)
-        .select(col("id_a"), col("id_b")).collect())
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType))))
-  }
+  private def stagedMinhashTruth(s: SparkSession, d: String): DataFrame =
+    replayed(s, d, "minhash_truth")(Dedup.minhashNearDups(t(s, d, "documents"),
+        "text", "doc_id", threshold = 0.5, shingleK = 3, numHashes = 32, bands = 16)
+      .select(col("id_a"), col("id_b")))
 
   // ---- contract-oracled approximate operators ----
   // The corpus carries generator-planted near-duplicates (all true

@@ -149,11 +149,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * crash at any instant leaves the old or the new table for
     * [[recover]] to restore, never nothing.
     */
-  private def overwrite(name: String, df: DataFrame): Unit = {
-    val live = Paths.get(tablePath(name))
-    write(name, df, SaveMode.Overwrite, StoreSwap.stagePath(live).toString)
-    StoreSwap.swapIn(live)
-  }
+  private def overwrite(name: String, df: DataFrame): Unit =
+    StoreSwap.rewrite(Paths.get(tablePath(name)))(write(name, df, SaveMode.Overwrite, _))
 
   /** Crash recovery for an interrupted [[overwrite]] swap
     * ([[StoreSwap.recover]]): a complete `.tmp_` rolls forward, else
@@ -165,11 +162,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * (.tmp_/.bak_) so a dropped table can never be resurrected by
     * [[recover]] on the next warehouse open.
     */
-  def dropTable(name: String): Unit = {
-    val live = Paths.get(tablePath(name))
-    Seq(live, StoreSwap.stagePath(live), StoreSwap.bakPath(live))
-      .foreach(StoreSwap.deleteTree)
-  }
+  def dropTable(name: String): Unit = StoreSwap.drop(Paths.get(tablePath(name)))
 
   /** DROP STAGE (cleanup:17-20): remove a stage directory and its files. */
   def dropStage(stage: String): Unit = StoreSwap.deleteTree(stageDir(stage))
@@ -313,15 +306,6 @@ final class Catalog(val spark: SparkSession, val root: String) {
   /** Stage catalog listing (S3; app:108-133): registered stage dirs
     * unioned with distinct stage names referenced by NEW_UPLOADS.
     */
-  // stage-list TTL memo (X7; app:108's 60 s stage-list cache)
-  private val stageListCache = new TtlCache[String, Seq[String]](ttlMs = 60000)
-
-  /** [[listStages]] behind a 60 s TTL memo — the metadata-read path UIs
-    * poll (app:108).
-    */
-  def listStagesCached(): Seq[String] =
-    stageListCache.getOrElseUpdate("stages")(listStages())
-
   def listStages(): Seq[String] = {
     val d = Paths.get(s"$root/stages")
     val fsStages =

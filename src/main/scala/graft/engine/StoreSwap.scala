@@ -2,8 +2,12 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** The one crash-safe store module: every directory swap, format
-  * marker and recursive delete in the library goes through here.
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** The one crash-safe store module: every store table, directory
+  * swap, format marker and recursive delete in the library goes
+  * through here.
   *
   * Swap discipline (single writer): new data is staged complete (with
   * Spark's `_SUCCESS`) at the sibling `.tmp_<name>`, the live dir steps
@@ -14,8 +18,53 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * a tmp without `_SUCCESS` is a partial write and never goes live.
   * The dot-prefixed names are skipped by `Catalog.listTables` and by
   * Spark's file listing.
+  *
+  * Store tables ([[Table]]): the incremental stores append one batch
+  * at a time from `foreachBatch`, and a crashed batch is replayed, so
+  * a table can hold duplicate rows of its `keys`. Every store's reads
+  * are replay-correct regardless (each store's scaladoc says how);
+  * duplicates cost only storage and scan time. [[Table.compact]]
+  * drops them with one `dropDuplicates(keys)` rewrite through the swap
+  * above. Stores whose duplicates tax every later batch also compact
+  * on their own ([[Table.autoCompact]]) once their bloat test passes.
+  * All of it is single-writer: compact between batches, never during
+  * one.
   */
 private[graft] object StoreSwap {
+
+  /** One persisted table of a store: parquet under `path`, read with
+    * `schema`, unique on `keys` once compacted.
+    */
+  final case class Table(spark: SparkSession, path: String, schema: StructType,
+                         keys: Seq[String]) {
+
+    /** The table's rows, schema-applied; empty while the directory is absent. */
+    def read(): DataFrame =
+      if (Files.exists(Paths.get(path))) spark.read.schema(schema).parquet(path)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+    def append(df: DataFrame): Unit = df.write.mode(SaveMode.Append).parquet(path)
+
+    /** Drop replayed duplicates of `keys` with a crash-safe rewrite. */
+    def compact(): Unit = {
+      val live = Paths.get(path)
+      if (Files.exists(live))
+        rewrite(live)(read().dropDuplicates(keys).write.mode(SaveMode.Overwrite).parquet(_))
+    }
+
+    /** `kept` after compacting the table if `bloated` says its rows
+      * are worth a rewrite (`slack` <= 0 disables the check). The
+      * frame is pinned with localCheckpoint first: it must not lazily
+      * re-read the files the swap is about to replace.
+      */
+    def autoCompact(kept: DataFrame, slack: Double)(bloated: => Boolean): DataFrame =
+      if (slack <= 0 || !bloated) kept
+      else {
+        val pinned = kept.localCheckpoint()
+        compact()
+        pinned
+      }
+  }
 
   /** Where new data for `live` is staged before [[swapIn]]. */
   def stagePath(live: Path): Path = live.resolveSibling(".tmp_" + live.getFileName)
@@ -49,6 +98,19 @@ private[graft] object StoreSwap {
     move(tmp, live)
     deleteTree(bak)
   }
+
+  /** Crash-safe rewrite of `live`: `write` puts the complete new
+    * contents at the path it is given, then they [[swapIn]].
+    */
+  def rewrite(live: Path)(write: String => Unit): Unit = {
+    write(stagePath(live).toString)
+    swapIn(live)
+  }
+
+  /** Delete `live` and its swap leftovers, so [[recover]] can never
+    * bring it back.
+    */
+  def drop(live: Path): Unit = Seq(live, stagePath(live), bakPath(live)).foreach(deleteTree)
 
   /** Open a store directory: [[recover]] each of its `parts`, then
     * check the `_FORMAT` marker. A store with data (its first part) or

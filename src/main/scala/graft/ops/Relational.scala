@@ -88,10 +88,6 @@ object Relational {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Dynamic conjunctive predicate builder (app:662-674). The reference
-    * assembles `WHERE 1=1 AND ...` strings; the Column algebra needs no
-    * `1=1` fallback or string surgery.
-    */
   /** Snapshot diff (CDC between two table versions): one full-outer
     * join on the key, change classified with null-safe column
     * comparison — inserted (key only in `newDf`), deleted (only in
@@ -156,6 +152,10 @@ object Relational {
       .drop(tsCol)
   }
 
+  /** Dynamic conjunctive predicate builder (app:662-674). The reference
+    * assembles `WHERE 1=1 AND ...` strings; the Column algebra needs no
+    * `1=1` fallback or string surgery.
+    */
   def conjunction(preds: Seq[Column]): Column =
     preds.reduceOption(_ && _).getOrElse(lit(true))
 

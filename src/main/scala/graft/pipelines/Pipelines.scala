@@ -154,15 +154,8 @@ object Pipelines {
     // One job each: NEW_UPLOADS' one-row source merges as a key filter
     // on the table plus the row (Relational.mergeInto).
     runConcurrently(spark, Seq(
-      () => cat.append("DOCUMENTS_PROCESSED", extracted.select(
-        col("file_url"), col("relative_path").as("file_ref"),
-        col("class_name"), col("extraction_result"))),
-      () => cat.append("DOCUMENTS_EXTRACTED_FIELDS",
-        Relational.unpivotMap(
-          extracted.select(col("file_url"), col("relative_path").as("file_ref"),
-            col("class_name"), col("result_map")),
-          "result_map", "field_name", "field_value")
-          .withColumn("confidence", lit(null).cast("double"))),
+      () => cat.append("DOCUMENTS_PROCESSED", processedRows(extracted)),
+      () => cat.append("DOCUMENTS_EXTRACTED_FIELDS", fieldRows(extracted)),
       () => cat.append("DOCUMENT_OCR", extracted.select(
         col("relative_path").as("file_name"), col("relative_path").as("file_ref"),
         col("ocr"), col("summary"))),
@@ -296,16 +289,23 @@ object Pipelines {
     try {
       // independent tables -> concurrent jobs (as in interactive)
       runConcurrently(cat.spark, Seq(
-        () => cat.appendBatch("DOCUMENTS_PROCESSED", b.select(
-          col("file_url"), col("relative_path").as("file_ref"),
-          col("class_name"), col("extraction_result")), token),
-        () => cat.appendBatch("DOCUMENTS_EXTRACTED_FIELDS",
-          Relational.unpivotMap(
-            b.select(col("file_url"), col("relative_path").as("file_ref"),
-              col("class_name"), col("result_map")),
-            "result_map", "field_name", "field_value")
-            .withColumn("confidence", lit(null).cast("double")), token)))
+        () => cat.appendBatch("DOCUMENTS_PROCESSED", processedRows(b), token),
+        () => cat.appendBatch("DOCUMENTS_EXTRACTED_FIELDS", fieldRows(b), token)))
     } finally b.unpersist()
     ()
   }
+
+  /** DOCUMENTS_PROCESSED rows of extracted documents. */
+  private def processedRows(docs: DataFrame): DataFrame =
+    docs.select(col("file_url"), col("relative_path").as("file_ref"),
+      col("class_name"), col("extraction_result"))
+
+  /** DOCUMENTS_EXTRACTED_FIELDS rows (app:531-538): one per extracted
+    * field; the catalog fills `confidence` with NULL (app:537).
+    */
+  private def fieldRows(docs: DataFrame): DataFrame =
+    Relational.unpivotMap(
+      docs.select(col("file_url"), col("relative_path").as("file_ref"),
+        col("class_name"), col("result_map")),
+      "result_map", "field_name", "field_value")
 }

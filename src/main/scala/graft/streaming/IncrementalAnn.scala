@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,12 +22,22 @@ import graft.ops.Similarity
   * through the shared srp_signatures expression). Designed for use
   * inside foreachBatch of an embedding stream. Replay of a crashed
   * batch is OUTPUT-correct (self-matches excluded); duplicate store
-  * rows from a replay only re-derive the same candidates.
+  * rows from a replay only re-derive the same candidates, and
+  * auto-compaction drops them past `autoCompactSlack`x bloat (a clean
+  * store holds exactly `nTables` rows per id).
   */
 final class IncrementalAnn(spark: SparkSession, storeDir: String,
                            nBits: Int = 8, nTables: Int = 8,
                            threshold: Double = 0.9,
                            autoCompactSlack: Double = 1.5) {
+
+  private val store = StoreSwap.Table(spark, s"$storeDir/srp_signatures", StructType(Seq(
+      StructField("id", LongType),
+      StructField("table", IntegerType),
+      StructField("bucket", LongType),
+      StructField("embedding", ArrayType(DoubleType, containsNull = false)),
+      StructField("norm", DoubleType))),
+    Seq("id", "table", "bucket"))
 
   // Bucket values are persisted, so EVERYTHING that determines them is
   // part of the on-disk format — the SRP hyperplane scheme version AND
@@ -40,24 +49,9 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
   // the params the store was built with — unconditionally
   // incomparable (guessing defaults would silently admit a
   // mismatched store)
-  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "0")(found =>
+  StoreSwap.open(storeDir, Seq(store.path), formatVersion, "0")(found =>
     s"SRP store at $storeDir uses bucket format [$found], this build writes " +
       s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
-
-  private val storeSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("table", IntegerType),
-    StructField("bucket", LongType),
-    StructField("embedding", ArrayType(DoubleType, containsNull = false)),
-    StructField("norm", DoubleType)))
-
-  private def storePath = s"$storeDir/srp_signatures"
-
-  private def store(): DataFrame =
-    if (Files.exists(Paths.get(storePath)))
-      spark.read.schema(storeSchema).parquet(storePath)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), storeSchema)
 
   /** (id, table, bucket, embedding, norm) rows for a batch — the same
     * bucketing as Similarity's SRP operators.
@@ -104,7 +98,7 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
       // collisions, and KB-scale shingle sets that dedup away before
       // payload attaches.
       val vsCorpus = sigs.join(
-          store().select(col("table"), col("bucket"), col("id").as("__cid"),
+          store.read().select(col("table"), col("bucket"), col("id").as("__cid"),
             col("embedding").as("__ce"), col("norm").as("__cn")),
           Seq("table", "bucket"))
         .filter(col("id") =!= col("__cid"))
@@ -127,32 +121,13 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
       val kept = batch.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
       val keptSigs = sigs.join(
         kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      keptSigs.select(col("id"), col("table"), col("bucket"),
-          col("embedding"), col("norm"))
-        .write.mode(SaveMode.Append).parquet(storePath)
-      maybeAutoCompact(kept)
+      store.append(keptSigs.select(col("id"), col("table"), col("bucket"),
+        col("embedding"), col("norm")))
+      store.autoCompact(kept, autoCompactSlack) {
+        val (rows, ids) = storeStats()
+        rows > (autoCompactSlack * ids * nTables).toLong
+      }
     } finally sigs.unpersist()
-  }
-
-  /** Auto-compaction (between-batch maintenance folded into the append
-    * path): a clean store holds exactly `nTables` rows per id, so
-    * total > slack x ids x nTables means foreachBatch replays have
-    * accumulated duplicate signature rows worth a rewrite. The bloat
-    * probe reads only the id column (column-pruned scan). Before the
-    * rewrite the batch result is pinned with localCheckpoint — the
-    * returned plan must not lazily re-read store files the bak-swap is
-    * about to replace. Set autoCompactSlack <= 0 to disable and manage
-    * [[compactStore]] manually.
-    */
-  private def maybeAutoCompact(kept: DataFrame): DataFrame = {
-    if (autoCompactSlack <= 0) return kept
-    val r = store().agg(count(lit(1)), count_distinct(col("id"))).head()
-    if (r.getLong(0) <= (autoCompactSlack * r.getLong(1) * nTables).toLong) kept
-    else {
-      val pinned = kept.localCheckpoint()
-      compactStore()
-      pinned
-    }
   }
 
   /** State-store size probe: (total signature rows, distinct ids) —
@@ -160,21 +135,10 @@ final class IncrementalAnn(spark: SparkSession, storeDir: String,
     * maintenance ledger surfaces it per batch. Column-pruned id scan.
     */
   def storeStats(): (Long, Long) = {
-    val r = store().agg(count(lit(1)), count_distinct(col("id"))).head()
+    val r = store.read().agg(count(lit(1)), count_distinct(col("id"))).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Store maintenance: drop the duplicate signature rows that
-    * foreachBatch replays accumulate — dedupe by (id, table, bucket),
-    * rewrite via the crash-safe bak-swap. A replayed batch leaves the
-    * compacted store's row count unchanged. Single-writer: run between
-    * batches, not during one.
-    */
-  def compactStore(): Unit = {
-    val live = Paths.get(storePath)
-    if (!Files.exists(live)) return
-    store().dropDuplicates("id", "table", "bucket")
-      .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(live).toString)
-    StoreSwap.swapIn(live)
-  }
+  /** Drop replayed duplicate signature rows (by (id, table, bucket)). */
+  def compactStore(): Unit = store.compact()
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,8 +21,7 @@ import graft.engine.StoreSwap
   * duplicate sighting rows but can never inflate a frequency or flip
   * a drop decision (replay-idempotent by construction, unlike a
   * persisted running counter, which would double-count). Replay bloat
-  * is storage-only; [[compactStore]] dedups it via the same crash-safe
-  * bak-swap the other stores use.
+  * is storage-only; [[compactStore]] dedups it.
   *
   * Work per batch: one map-side explode of the batch, one hash
   * aggregate over (line-md5) keyed rows of store + batch, one
@@ -37,25 +35,18 @@ final class IncrementalBoilerplate(spark: SparkSession, storeDir: String,
                                    minDocs: Int) {
   require(minDocs > 1, "minDocs must be > 1 (1 would drop every line)")
 
+  private val store = StoreSwap.Table(spark, s"$storeDir/sightings", StructType(Seq(
+      StructField("h", StringType),
+      StructField("id", LongType))),
+    Seq("h", "id"))
+
   // md5-of-raw-line is the only thing persisted, so only the hash
   // formula is format-relevant; minDocs is a read-time threshold and
   // may vary between batches/reopens without invalidating the store.
   private val formatVersion = "1:md5-lines"
-  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "?")(found =>
+  StoreSwap.open(storeDir, Seq(store.path), formatVersion, "?")(found =>
     s"boilerplate store at $storeDir uses line-hash format [$found], this build " +
       s"writes [$formatVersion] — rebuild the store")
-
-  private val storeSchema = StructType(Seq(
-    StructField("h", StringType),
-    StructField("id", LongType)))
-
-  private def storePath = s"$storeDir/sightings"
-
-  private def store(): DataFrame =
-    if (Files.exists(Paths.get(storePath)))
-      spark.read.schema(storeSchema).parquet(storePath)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), storeSchema)
 
   /** Clean one batch against everything seen so far and persist this
     * batch's sightings. Returns (idCol, clean_text, n_lines, n_kept).
@@ -71,7 +62,7 @@ final class IncrementalBoilerplate(spark: SparkSession, storeDir: String,
     // that floods in WITHIN one batch is caught immediately); the
     // boilerplate set is small by construction — bounded by actual
     // boilerplate, not corpus size — and broadcasts under AQE
-    val boiler = store().unionByName(sightings)
+    val boiler = store.read().unionByName(sightings)
       .groupBy(col("h"))
       .agg(count_distinct(col("id")).as("__df"))
       .filter(col("__df") >= minDocs)
@@ -95,24 +86,18 @@ final class IncrementalBoilerplate(spark: SparkSession, storeDir: String,
     // pin the result before the append: the cleaned plan must not
     // lazily re-read store files a later compaction may replace
     val out = cleaned.localCheckpoint()
-    sightings.write.mode(SaveMode.Append).parquet(storePath)
+    store.append(sightings)
     out
   }
 
   /** Storage-only maintenance: dedup replay-duplicated sighting rows.
     * Results never depend on it (frequencies are count-DISTINCT).
     */
-  def compactStore(): Unit = {
-    val live = Paths.get(storePath)
-    if (!Files.exists(live)) return
-    store().dropDuplicates("h", "id")
-      .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(live).toString)
-    StoreSwap.swapIn(live)
-  }
+  def compactStore(): Unit = store.compact()
 
   /** (total sighting rows, distinct sightings) — the replay-bloat probe. */
   def storeStats(): (Long, Long) = {
-    val s = store()
-    (s.count(), s.dropDuplicates("h", "id").count())
+    val s = store.read()
+    (s.count(), s.dropDuplicates(store.keys).count())
   }
 }

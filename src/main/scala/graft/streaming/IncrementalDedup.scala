@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,8 +26,8 @@ import graft.ops.Dedup
   * of a crashed batch is OUTPUT-correct (self-matches are excluded, so
   * survivors survive again); the store may then hold duplicate
   * signature rows for those ids, which only re-derives the same
-  * candidates — run [[compactStore]] between batches if replays
-  * accumulate.
+  * candidates; auto-compaction drops them past `autoCompactSlack`x
+  * bloat (a clean store holds exactly `bands` rows per id).
   */
 final class IncrementalDedup(spark: SparkSession, storeDir: String,
                              shingleK: Int = 3, numHashes: Int = 16,
@@ -39,6 +38,13 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
   require(maxStoreBucket > 0, "maxStoreBucket must be positive")
 
   private val rowsPerBand = numHashes / bands
+
+  private val store = StoreSwap.Table(spark, s"$storeDir/signatures", StructType(Seq(
+      StructField("id", LongType),
+      StructField("band", IntegerType),
+      StructField("bucket", LongType),
+      StructField("shingle_set", ArrayType(StringType, containsNull = false)))),
+    Seq("id", "band", "bucket"))
 
   // Bucket values are persisted, so EVERYTHING that determines them is
   // part of the on-disk format: the hash formula version (v2 = native
@@ -53,23 +59,9 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
   // but NOT the params the store was built with — there is no way
   // to know them, so such stores are unconditionally incomparable
   // (guessing defaults would silently admit a mismatched store)
-  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "1")(found =>
+  StoreSwap.open(storeDir, Seq(store.path), formatVersion, "1")(found =>
     s"signature store at $storeDir uses bucket format [$found], this build writes " +
       s"[$formatVersion] — rebuild the store (bucket hashes are not comparable)")
-
-  private val storeSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("band", IntegerType),
-    StructField("bucket", LongType),
-    StructField("shingle_set", ArrayType(StringType, containsNull = false))))
-
-  private def storePath = s"$storeDir/signatures"
-
-  private def store(): DataFrame =
-    if (Files.exists(Paths.get(storePath)))
-      spark.read.schema(storeSchema).parquet(storePath)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), storeSchema)
 
   /** Banded (id, band, bucket, shingle_set) rows for a batch — same
     * bucketing as Dedup.minhashCandidates via Dedup.bandBuckets.
@@ -125,7 +117,7 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
       // other bands' doc-specific buckets. Default Int.MaxValue =
       // exact (no cap).
       val storeBuckets = {
-        val sb = store().select(col("band"), col("bucket"), col("id").as("__cid"))
+        val sb = store.read().select(col("band"), col("bucket"), col("id").as("__cid"))
         if (maxStoreBucket == Int.MaxValue) sb
         else sb.join(
           // distinct members, not rows: foreachBatch replays can leave
@@ -142,7 +134,7 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
         .filter(col("id") =!= col("__cid"))
         .select(col("id"), col("__cid")).distinct()
       val candPartners = candPairs.select(col("__cid")).distinct()
-      val corpusSets = store()
+      val corpusSets = store.read()
         .select(col("id").as("__cid"), col("shingle_set").as("__corpus_set"))
         .join(candPartners.hint("shuffle_hash"), Seq("__cid"), "left_semi")
         .dropDuplicates("__cid")
@@ -171,31 +163,12 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
       // persist the survivors' signatures for future batches
       val keptSigs = sigs.join(
         kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      keptSigs.select(col("id"), col("band"), col("bucket"), col("shingle_set"))
-        .write.mode(SaveMode.Append).parquet(storePath)
-      maybeAutoCompact(kept)
+      store.append(keptSigs.select(col("id"), col("band"), col("bucket"), col("shingle_set")))
+      store.autoCompact(kept, autoCompactSlack) {
+        val (rows, ids) = storeStats()
+        rows > (autoCompactSlack * ids * bands).toLong
+      }
     } finally sigs.unpersist()
-  }
-
-  /** Auto-compaction (between-batch maintenance folded into the append
-    * path): a clean store holds exactly `bands` rows per id, so
-    * total > slack x ids x bands means foreachBatch replays have
-    * accumulated duplicate signature rows worth a rewrite. The bloat
-    * probe reads only the id column (column-pruned scan of the already-
-    * open store). Before the rewrite the batch result is pinned with
-    * localCheckpoint — the returned plan must not lazily re-read store
-    * files the bak-swap is about to replace. Set autoCompactSlack <= 0
-    * to disable and manage [[compactStore]] manually.
-    */
-  private def maybeAutoCompact(kept: DataFrame): DataFrame = {
-    if (autoCompactSlack <= 0) return kept
-    val r = store().agg(count(lit(1)), count_distinct(col("id"))).head()
-    if (r.getLong(0) <= (autoCompactSlack * r.getLong(1) * bands).toLong) kept
-    else {
-      val pinned = kept.localCheckpoint()
-      compactStore()
-      pinned
-    }
   }
 
   /** State-store size probe: (total signature rows, distinct ids) —
@@ -205,22 +178,10 @@ final class IncrementalDedup(spark: SparkSession, storeDir: String,
     * per batch.
     */
   def storeStats(): (Long, Long) = {
-    val r = store().agg(count(lit(1)), count_distinct(col("id"))).head()
+    val r = store.read().agg(count(lit(1)), count_distinct(col("id"))).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Store maintenance: drop the duplicate signature rows that
-    * foreachBatch replays accumulate (a replayed batch re-appends its
-    * survivors' signatures). Dedupes by (id, band, bucket) and rewrites
-    * the store via the crash-safe bak-swap — a replayed batch leaves
-    * the compacted store's row count unchanged. Single-writer, like
-    * every store mutation here: run it between batches, not during one.
-    */
-  def compactStore(): Unit = {
-    val live = Paths.get(storePath)
-    if (!Files.exists(live)) return
-    store().dropDuplicates("id", "band", "bucket")
-      .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(live).toString)
-    StoreSwap.swapIn(live)
-  }
+  /** Drop replayed duplicate signature rows (by (id, band, bucket)). */
+  def compactStore(): Unit = store.compact()
 }

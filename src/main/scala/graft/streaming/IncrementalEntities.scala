@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,7 +22,7 @@ import graft.engine.StoreSwap
   * records and edges are pure functions of the batch rows, so a
   * crashed batch re-appends bit-identical rows and reads deduplicate
   * by key — resolution can never drift under replay. Replay bloat is
-  * storage-only; [[compactStore]] dedups via the crash-safe bak-swap.
+  * storage-only; [[compactStore]] dedups it.
   *
   * `maxDist` is part of the store format (variants depend on it):
   * reopening with a different distance fails loudly instead of
@@ -34,29 +32,22 @@ final class IncrementalEntities(spark: SparkSession, storeDir: String,
                                 maxDist: Int = 1) {
   require(maxDist == 1 || maxDist == 2, "maxDist must be 1 or 2")
 
+  private val variants = StoreSwap.Table(spark, s"$storeDir/variants", StructType(Seq(
+      StructField("variant", StringType), StructField("id", LongType),
+      StructField("name", StringType))),
+    Seq("variant", "id"))
+  private val records = StoreSwap.Table(spark, s"$storeDir/records", StructType(Seq(
+      StructField("id", LongType), StructField("name", StringType))),
+    Seq("id"))
+  private val edges = StoreSwap.Table(spark, s"$storeDir/edges", StructType(Seq(
+      StructField("id_a", LongType), StructField("id_b", LongType))),
+    Seq("id_a", "id_b"))
+  private val tables = Seq(variants, records, edges)
+
   private val formatVersion = s"1:del-neighborhood-d$maxDist"
-  StoreSwap.open(storeDir, Seq(variantsPath, recordsPath, edgesPath),
-      formatVersion, "?")(found =>
+  StoreSwap.open(storeDir, tables.map(_.path), formatVersion, "?")(found =>
     s"entity store at $storeDir uses blocking format [$found], this build " +
       s"writes [$formatVersion] — rebuild the store")
-
-  private def variantsPath = s"$storeDir/variants"
-  private def recordsPath = s"$storeDir/records"
-  private def edgesPath = s"$storeDir/edges"
-
-  private val variantsSchema = StructType(Seq(
-    StructField("variant", StringType), StructField("id", LongType),
-    StructField("name", StringType)))
-  private val recordsSchema = StructType(Seq(
-    StructField("id", LongType), StructField("name", StringType)))
-  private val edgesSchema = StructType(Seq(
-    StructField("id_a", LongType), StructField("id_b", LongType)))
-
-  private def read(path: String, schema: StructType): DataFrame =
-    if (Files.exists(Paths.get(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 
   /** Block, match (vs the index AND within the batch), and append one
     * batch. The batch is pinned before the three writes so a
@@ -75,8 +66,7 @@ final class IncrementalEntities(spark: SparkSession, storeDir: String,
       // candidates vs everything indexed SO FAR: the join touches only
       // the persisted rows sharing a batch variant (PushedFilters on
       // the variant slice at scale via bucketing; never a name rescan)
-      val existing = read(variantsPath, variantsSchema)
-        .dropDuplicates("variant", "id")
+      val existing = variants.read().dropDuplicates(variants.keys)
         .select(col("variant"), col("id").as("eid"), col("name").as("ename"))
       val crossEdges = bVars.join(existing, "variant")
         .filter(col("id") =!= col("eid"))
@@ -91,11 +81,9 @@ final class IncrementalEntities(spark: SparkSession, storeDir: String,
           "na", "nb", maxDist)
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"))
-      crossEdges.union(selfEdges).distinct()
-        .write.mode(SaveMode.Append).parquet(edgesPath)
-      bVars.select(col("variant"), col("id"), col("name"))
-        .write.mode(SaveMode.Append).parquet(variantsPath)
-      recs.write.mode(SaveMode.Append).parquet(recordsPath)
+      edges.append(crossEdges.union(selfEdges).distinct())
+      variants.append(bVars.select(col("variant"), col("id"), col("name")))
+      records.append(recs)
     } finally recs.unpersist()
   }
 
@@ -104,34 +92,18 @@ final class IncrementalEntities(spark: SparkSession, storeDir: String,
     * unmatched records are their own entity.
     */
   def resolve(): DataFrame = {
-    val recs = read(recordsPath, recordsSchema).dropDuplicates("id")
-    val edges = read(edgesPath, edgesSchema).dropDuplicates("id_a", "id_b")
-    val clusters = graft.ops.Dedup.clusterPairs(edges)
+    val recs = records.read().dropDuplicates(records.keys)
+    val clusters = graft.ops.Dedup.clusterPairs(edges.read().dropDuplicates(edges.keys))
     recs.join(clusters, recs("id") === clusters("id"), "left")
       .select(recs("id"), col("name"),
         coalesce(col("cluster_id"), recs("id")).as("entity_id"))
   }
 
   /** Storage-only maintenance: dedup replay-duplicated rows. */
-  def compactStore(): Unit = {
-    Seq((variantsPath, variantsSchema, Seq("variant", "id")),
-      (recordsPath, recordsSchema, Seq("id")),
-      (edgesPath, edgesSchema, Seq("id_a", "id_b")))
-      .foreach { case (path, schema, keys) =>
-        val p = Paths.get(path)
-        if (Files.exists(p)) {
-          read(path, schema).dropDuplicates(keys)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(StoreSwap.stagePath(p).toString)
-          StoreSwap.swapIn(p)
-        }
-      }
-  }
+  def compactStore(): Unit = tables.foreach(_.compact())
 
   /** (n_records, n_edges) rows currently persisted (replay bloat
     * included — compact to shrink).
     */
-  def storeStats(): (Long, Long) =
-    (read(recordsPath, recordsSchema).count(),
-      read(edgesPath, edgesSchema).count())
+  def storeStats(): (Long, Long) = (records.read().count(), edges.read().count())
 }

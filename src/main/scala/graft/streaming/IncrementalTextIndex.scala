@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +19,7 @@ import graft.engine.StoreSwap
   * deduplicate by (term, id) / (id) — tf and len are pure functions
   * of the doc text, so duplicates are bit-identical and results can
   * never drift. Replay bloat is storage-only; [[compactStore]] dedups
-  * via the same crash-safe bak-swap as the other stores.
+  * it.
   *
   * Search work is posting-bounded: the term filter prunes the posting
   * scan to the query slice (PushedFilters on `term`), corpus stats
@@ -32,25 +30,18 @@ import graft.engine.StoreSwap
   */
 final class IncrementalTextIndex(spark: SparkSession, storeDir: String) {
 
+  private val postings = StoreSwap.Table(spark, s"$storeDir/postings", StructType(Seq(
+      StructField("term", StringType), StructField("id", LongType),
+      StructField("tf", DoubleType))),
+    Seq("term", "id"))
+  private val lens = StoreSwap.Table(spark, s"$storeDir/lens", StructType(Seq(
+      StructField("id", LongType), StructField("len", DoubleType))),
+    Seq("id"))
+
   private val formatVersion = "1:ws-lower-tf"
-  StoreSwap.open(storeDir, Seq(postingsPath, lensPath), formatVersion, "?")(found =>
+  StoreSwap.open(storeDir, Seq(postings.path, lens.path), formatVersion, "?")(found =>
     s"text index at $storeDir uses tokenization format [$found], this build " +
       s"writes [$formatVersion] — rebuild the index")
-
-  private def postingsPath = s"$storeDir/postings"
-  private def lensPath = s"$storeDir/lens"
-
-  private val postingsSchema = StructType(Seq(
-    StructField("term", StringType), StructField("id", LongType),
-    StructField("tf", DoubleType)))
-  private val lensSchema = StructType(Seq(
-    StructField("id", LongType), StructField("len", DoubleType)))
-
-  private def read(path: String, schema: StructType): DataFrame =
-    if (Files.exists(Paths.get(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 
   /** Tokenize one batch and append its postings + lengths. The batch
     * is pinned with localCheckpoint before the two write jobs: a
@@ -63,12 +54,10 @@ final class IncrementalTextIndex(spark: SparkSession, storeDir: String) {
       split(lower(trim(col(textCol))), "\\s+").as("__toks"))
       .localCheckpoint(true)
     try {
-      toks.select(col("id"), explode(col("__toks")).as("term"))
+      postings.append(toks.select(col("id"), explode(col("__toks")).as("term"))
         .groupBy(col("term"), col("id"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-        .write.mode(SaveMode.Append).parquet(postingsPath)
-      toks.select(col("id"), size(col("__toks")).cast("double").as("len"))
-        .write.mode(SaveMode.Append).parquet(lensPath)
+        .agg(count(lit(1)).cast("double").as("tf")))
+      lens.append(toks.select(col("id"), size(col("__toks")).cast("double").as("len")))
     } finally toks.unpersist()
   }
 
@@ -76,34 +65,20 @@ final class IncrementalTextIndex(spark: SparkSession, storeDir: String) {
   def search(query: Seq[String], k: Int,
              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(query.nonEmpty, "empty query")
-    val tf = read(postingsPath, postingsSchema)
+    val tf = postings.read()
       .filter(col("term").isin(query: _*))
-      .dropDuplicates("term", "id")
-    val lens = read(lensPath, lensSchema).dropDuplicates("id")
-    graft.ops.TextAnalysis.bm25FromPostings(tf, lens, k, k1, b)
+      .dropDuplicates(postings.keys)
+    graft.ops.TextAnalysis.bm25FromPostings(tf, lens.read().dropDuplicates(lens.keys), k, k1, b)
   }
 
   /** Storage-only maintenance: dedup replay-duplicated rows. Results
     * never depend on it (reads deduplicate).
     */
-  def compactStore(): Unit = {
-    val p = Paths.get(postingsPath)
-    if (Files.exists(p)) {
-      read(postingsPath, postingsSchema).dropDuplicates("term", "id")
-        .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(p).toString)
-      StoreSwap.swapIn(p)
-    }
-    val l = Paths.get(lensPath)
-    if (Files.exists(l)) {
-      read(lensPath, lensSchema).dropDuplicates("id")
-        .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(l).toString)
-      StoreSwap.swapIn(l)
-    }
-  }
+  def compactStore(): Unit = Seq(postings, lens).foreach(_.compact())
 
   /** (posting rows, distinct postings) — the replay-bloat probe. */
   def storeStats(): (Long, Long) = {
-    val p = read(postingsPath, postingsSchema)
-    (p.count(), p.dropDuplicates("term", "id").count())
+    val p = postings.read()
+    (p.count(), p.dropDuplicates(postings.keys).count())
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,26 +35,19 @@ final class IncrementalWinnow(spark: SparkSession, storeDir: String,
   require(k > 0 && w > 0, "window sizes must be positive")
   require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
 
+  private val store = StoreSwap.Table(spark, s"$storeDir/fingerprints", StructType(Seq(
+      StructField("id", LongType),
+      StructField("fp", StringType))),
+    Seq("id", "fp"))
+
   // fingerprint selection is determined by (k, w) and the md5 window
   // hash — all part of the on-disk format (same fail-fast contract as
   // IncrementalDedup: a store built with other params silently never
   // matches)
   private val formatVersion = s"1:k=$k,w=$w"
-  StoreSwap.open(storeDir, Seq(storePath), formatVersion, "?")(found =>
+  StoreSwap.open(storeDir, Seq(store.path), formatVersion, "?")(found =>
     s"fingerprint store at $storeDir uses format [$found], this build writes " +
       s"[$formatVersion] — rebuild the store (selections are not comparable)")
-
-  private val storeSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("fp", StringType)))
-
-  private def storePath = s"$storeDir/fingerprints"
-
-  private def store(): DataFrame =
-    if (Files.exists(Paths.get(storePath)))
-      spark.read.schema(storeSchema).parquet(storePath)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), storeSchema)
 
   /** Process one batch: returns rows whose fingerprint overlap with the
     * accepted corpus (and with earlier rows of the same batch) stays
@@ -71,7 +63,7 @@ final class IncrementalWinnow(spark: SparkSession, storeDir: String,
       // corpus-side hits: a batch fp counts once if ANY other doc's
       // stored fp equals it (self rows excluded -> replay-correct)
       val corpusHits = fps
-        .join(store().select(col("fp").as("__sfp"), col("id").as("__sid")),
+        .join(store.read().select(col("fp").as("__sfp"), col("id").as("__sid")),
           col("__fp") === col("__sfp"))
         .filter(col("__sid") =!= col("id"))
         .select(col("id"), col("__fp")).distinct()
@@ -89,38 +81,17 @@ final class IncrementalWinnow(spark: SparkSession, storeDir: String,
         .select(col("id"))
       val kept = batch.join(dropIds.withColumnRenamed("id", idCol),
         Seq(idCol), "left_anti")
-      fps.join(kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .select(col("id"), col("__fp").as("fp"))
-        .write.mode(SaveMode.Append).parquet(storePath)
-      maybeAutoCompact(kept)
+      store.append(fps.join(kept.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .select(col("id"), col("__fp").as("fp")))
+      // bloat: total rows past `autoCompactSlack` x the distinct (id, fp)
+      store.autoCompact(kept, autoCompactSlack) {
+        val r = store.read()
+          .agg(count(lit(1)), count_distinct(col("id"), col("fp"))).head()
+        r.getLong(0) > (autoCompactSlack * r.getLong(1)).toLong
+      }
     } finally fps.unpersist()
   }
 
-  /** Auto-compaction: duplicate (id, fp) rows only ever come from
-    * foreachBatch replays; when total rows exceed `autoCompactSlack` x
-    * the distinct count, rewrite. Probe reads the two hash columns of
-    * the already-open store only.
-    */
-  private def maybeAutoCompact(kept: DataFrame): DataFrame = {
-    if (autoCompactSlack <= 0) return kept
-    val r = store()
-      .agg(count(lit(1)), count_distinct(col("id"), col("fp"))).head()
-    if (r.getLong(0) <= (autoCompactSlack * r.getLong(1)).toLong) kept
-    else {
-      val pinned = kept.localCheckpoint()
-      compactStore()
-      pinned
-    }
-  }
-
-  /** Drop replay-accumulated duplicate (id, fp) rows via the crash-safe
-    * bak-swap. Single-writer: run between batches.
-    */
-  def compactStore(): Unit = {
-    val live = Paths.get(storePath)
-    if (!Files.exists(live)) return
-    store().dropDuplicates("id", "fp")
-      .write.mode(SaveMode.Overwrite).parquet(StoreSwap.stagePath(live).toString)
-    StoreSwap.swapIn(live)
-  }
+  /** Drop replay-accumulated duplicate (id, fp) rows. */
+  def compactStore(): Unit = store.compact()
 }

@@ -91,10 +91,6 @@ object RecallCurve {
                 exact: Option[DataFrame] = None): Double =
     ivfCell(spark, dir, index, nProbe, nProbes, exact)._1
 
-  def ivfCandidateFrac(spark: SparkSession, dir: String, index: Ivf.IvfIndex,
-                       nProbe: Int, nProbes: Int = DefaultProbes): Double =
-    ivfCell(spark, dir, index, nProbe, nProbes)._2
-
   /** PQ recall@5 for one (m, shortlist) point: the flat-ADC search's
     * final top-5 vs brute force. The cost axis here is not candidate
     * volume (a flat code scan touches every code) but bytes and ops

@@ -10,6 +10,14 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Output field names of every oracle-backed query, built once: a
+    * query's construction runs eager work (kernels, loops, staging),
+    * and both schema lints below read the same names.
+    */
+  private lazy val oracleFields: Map[String, Seq[String]] =
+    SparkEntry.oracleSql.keySet.map(name =>
+      name -> SparkEntry.queries(name)(spark, sf).schema.fieldNames.toSeq).toMap
+
   test("every oracle entry has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle SQL without a query: $missing")
@@ -21,9 +29,7 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
 
   test("oracle-backed queries have unique, non-empty column names") {
     // analysis only (schema) — no jobs for the relational queries
-    val oracleBacked = SparkEntry.oracleSql.keySet
-    oracleBacked.foreach { name =>
-      val cols = SparkEntry.queries(name)(spark, sf).schema.fieldNames
+    oracleFields.foreach { case (name, cols) =>
       assert(cols.forall(_.nonEmpty), s"$name has an empty column name")
       assert(cols.distinct.length == cols.length,
         s"$name has duplicate column names: ${cols.toSeq} (driver sorts by name before hashing)")
@@ -34,7 +40,7 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
     // heuristic: every alias in the SQL (AS x) must appear in the Spark schema
     val aliasRe = "(?i)\\bAS\\s+([a-z_][a-z0-9_]*)".r
     SparkEntry.oracleSql.foreach { case (name, sql) =>
-      val sparkCols = SparkEntry.queries(name)(spark, sf).schema.fieldNames.toSet
+      val sparkCols = oracleFields(name).toSet
       val finalSelect = sql // aliases in subqueries may not surface; only check surfaced ones
       val aliased = aliasRe.findAllMatchIn(finalSelect).map(_.group(1).toLowerCase).toSet
       val surfaced = aliased.intersect(sparkCols.map(_.toLowerCase)) ++

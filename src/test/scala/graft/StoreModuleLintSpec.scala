@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lint over the library sources: directory swaps (`ATOMIC_MOVE`),
-  * store format markers (`_FORMAT`) and recursive deletes
-  * (`reverseOrder` walks) live only in the store module,
-  * `graft/engine/StoreSwap.scala`.
+/** Lint over the library sources: directory swaps (`ATOMIC_MOVE`,
+  * and the staging steps `stagePath`, `bakPath`, `swapIn`), store
+  * format markers (`_FORMAT`) and recursive deletes (`reverseOrder`
+  * walks) live only in the store module, `graft/engine/StoreSwap.scala`;
+  * everything else rewrites through its `rewrite`, `drop` and store
+  * tables.
   *
   * Why: the crash-recovery protocol is only as good as its one copy.
   * A second hand-rolled swap or marker check drifts from it — a
@@ -19,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class StoreModuleLintSpec extends AnyFunSuite {
 
   private val storeModule = Paths.get("graft", "engine", "StoreSwap.scala")
-  private val protocol = "ATOMIC_MOVE|_FORMAT|reverseOrder".r
+  private val protocol = """ATOMIC_MOVE|_FORMAT|reverseOrder|\b(stagePath|bakPath|swapIn)\b""".r
 
   /** (file, 1-based line) of every protocol token outside the module. */
   private def offenders(sources: Seq[(Path, String)]): Seq[(Path, Int)] =
@@ -49,11 +51,17 @@ class StoreModuleLintSpec extends AnyFunSuite {
   test("the lint catches a hand-rolled swap, marker or tree delete") {
     val op = Paths.get("src/main/scala/graft/ops/Op.scala") ->
       """Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-        |val ok = StoreSwap.swapIn(live)
+        |val ok = StoreSwap.rewrite(live)(write)
         |val marker = Paths.get(s"$dir/_FORMAT")
-        |walk.sorted(java.util.Comparator.reverseOrder())""".stripMargin
+        |walk.sorted(java.util.Comparator.reverseOrder())
+        |df.write.parquet(StoreSwap.stagePath(live).toString)
+        |StoreSwap.swapIn(live)
+        |Files.move(live, StoreSwap.bakPath(live))
+        |val re = Catalog.stagePathPrefix(stage)""".stripMargin
     val module = Paths.get("src/main/scala/graft/engine/StoreSwap.scala") ->
-      "Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)"
-    assert(offenders(Seq(op, module)) == Seq(op._1 -> 1, op._1 -> 3, op._1 -> 4))
+      """Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+        |def swapIn(live: Path): Unit = move(stagePath(live), live)""".stripMargin
+    assert(offenders(Seq(op, module)) ==
+      Seq(1, 3, 4, 5, 6, 7).map(op._1 -> _))
   }
 }
