@@ -2,7 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.LocalPropertiesBridge
+import org.apache.spark.sql.graft.{LocalPropertiesBridge, SessionBridge}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.ai.AiFunctions._
 import graft.engine.Catalog
@@ -54,16 +55,19 @@ object Pipelines {
     * Each job runs under the caller's Spark local properties (job
     * group, description, pool, tags), so cancelling the caller's group
     * reaches its writes; a pooled thread's own would belong to
-    * whichever caller first started it.
+    * whichever caller first started it. Each job waits in `blocking`:
+    * Spark's job wait does not, so on the global pool (one thread per
+    * core) at most that many persists in the whole JVM ran at once, and
+    * two concurrent requests' eight persists ran in two waves.
     */
-  private def runConcurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
+  private[pipelines] def runConcurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.{Duration, DurationInt}
     val sc = spark.sparkContext
     val props = LocalPropertiesBridge.capture(sc)
     val settled = tasks.map(t =>
-      Future(LocalPropertiesBridge.withProperties(sc, props)(t()))
+      Future(blocking(LocalPropertiesBridge.withProperties(sc, props)(t())))
         .map(_ => None: Option[Throwable]).recover { case e => Some(e) })
     val all = Future.sequence(settled)
     val errs =
@@ -218,19 +222,50 @@ object Pipelines {
       knownKeys = prompts.keys.toSeq.sorted)
   }
 
+  /** Files per stream trigger (X2's pacing). Also the stream reader's
+    * listing threshold: see [[stream]].
+    */
+  private val FilesPerTrigger = 64
+
   /** Batch stream mode (§3.2/X2): Structured Streaming over the stage
     * dir; per-batch persists into DOCUMENTS_PROCESSED + exploded
-    * DOCUMENTS_EXTRACTED_FIELDS (best-effort per batch, X8: failures
-    * surface as an error row, not a silent drop — X9).
+    * DOCUMENTS_EXTRACTED_FIELDS. A model failure in `ai_extract`
+    * becomes an `{"error": ...}` row (X9); a failure in parse or
+    * classify fails the batch, and the query stops with it.
     * Returns the started query; caller stops it.
+    *
+    * Each trigger's files are listed on the driver. The file source
+    * resolves a trigger's files as that many root paths, and lists them
+    * in a Spark job of one task per file when they outnumber
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 by
+    * default), read from the READER session's conf at every trigger.
+    * That job made no model call; with it, getting a batch took 0.61 s
+    * of a 2.50 s micro-batch, without it 0.05 s (traced docbench
+    * `doc_bulk`, 4 vCPU). So the source is read through a clone of the
+    * catalog's session whose threshold is [[FilesPerTrigger]], and the
+    * frame is rebuilt in the catalog's session: the query runs on the
+    * caller's `StreamingQueryManager` (its listeners see it) and the
+    * caller's conf is never written.
+    * Measured and rejected (traced `doc_bulk`):
+    *  - `maxFilesPerTrigger` 32 avoids the listing job but is slower,
+    *    26.8 -> 23.5 docs/s: the per-batch costs repeat over 4 batches;
+    *  - setting the threshold on the caller's session around `start()`
+    *    changes nothing (`spark.tasks` still 163): the source reads
+    *    the conf at each trigger, after the reset;
+    *  - a plain cloned-session reader moves the query to the clone's
+    *    `StreamingQueryManager`, so a listener on the caller's sees no
+    *    batch (docbench's `pipelines.stream.batches` read 0).
     */
   def stream(cat: Catalog, stage: String, prompts: Map[String, String],
              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val src = cat.spark.readStream.format("binaryFile")
+    val reader = SessionBridge.cloneSession(cat.spark)
+    reader.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, FilesPerTrigger.toLong)
+    val files = reader.readStream.format("binaryFile")
       .schema(Catalog.binaryFileSchema)
       .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", 64) // pacing knob (X2)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
       .load(cat.stageDir(stage))
+    val src = SessionBridge.ofRows(cat.spark, files)
     val run = runToken(checkpoint)
     streamColumns(src, stage, prompts).writeStream
       .option("checkpointLocation", checkpoint)

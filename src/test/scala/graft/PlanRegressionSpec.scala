@@ -20,18 +20,9 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
-  private def withTempDir[A](prefix: String)(body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir.toString)
-    finally {
-      val walk = java.nio.file.Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(x => java.nio.file.Files.deleteIfExists(x))
-      } finally walk.close()
-    }
-  }
+  private def withTempDir[A](prefix: String)(body: String => A): A =
+    body(tempDir(prefix).toString)
+
 
   test("dynamic predicates reach the parquet scan (P6)") {
     val p = plan("q_p6_dynamic_where")
@@ -954,7 +945,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   /** A fresh catalog with two documents staged in `docs`. */
   private def stagedDocs(): graft.engine.Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_plan_ai_").toString
+    val root = tempDir("graft_plan_ai_").toString
     val cat = new graft.engine.Catalog(spark, root)
     cat.ensureTables()
     Seq("a.txt" -> "Invoice INV-9. Total $5.", "b.txt" -> "Contract. Term one year.")

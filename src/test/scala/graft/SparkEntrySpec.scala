@@ -60,8 +60,7 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
     // silently fuse customer and supplier nodes — the staging guard
     // must reject it at build time, not alias it (round-11 ADVICE
     // class: the old 1e6/1e7 offsets collided from sf≈7 / sf≈2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_collide_fixture").toString
+    val dir = tempDir("graft_collide_fixture").toString
     Seq((1L, 2000000000000L), (2L, 3L))
       .toDF("o_orderkey", "o_custkey")
       .write.parquet(s"$dir/orders.parquet")
@@ -77,8 +76,7 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
     }
     assert(e2.getMessage.contains("node spaces collide"), e2.getMessage)
     // HITS guards on orderkey (its src space) via the staged table
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_collide_fixture2").toString
+    val dir2 = tempDir("graft_collide_fixture2").toString
     Seq((2000000000000L, 8L, 3.0, 12L))
       .toDF("l_orderkey", "l_suppkey", "l_quantity", "l_partkey")
       .write.parquet(s"$dir2/lineitem.parquet")

@@ -10,7 +10,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private def freshCat(): Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_cat_test_").toString
+    val root = tempDir("graft_cat_test_").toString
     val cat = new Catalog(spark, root)
     cat.ensureTables()
     cat

@@ -11,10 +11,12 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSyst
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestBase
+
 /** Filesystem only, no SparkSession: what the in-process filesystem
   * creates carries the permissions Hadoop's forked `chmod` gives.
   */
-class InProcessLocalFileSystemSpec extends AnyFunSuite {
+class InProcessLocalFileSystemSpec extends AnyFunSuite with SparkTestBase {
 
   private def open(fs: FileSystem, umask: String): FileSystem = {
     val conf = new Configuration()
@@ -49,14 +51,12 @@ class InProcessLocalFileSystemSpec extends AnyFunSuite {
 
   test("creates what RawLocalFileSystem creates, with the same permissions") {
     for (umask <- Seq("022", "077", "002")) {
-      val hadoopRoot = Files.createTempDirectory("graft_fs_hadoop_")
-      val ownRoot = Files.createTempDirectory("graft_fs_own_")
-      try {
-        val hadoop = exercise(open(new LocalFileSystem(new RawLocalFileSystem), umask), hadoopRoot)
-        val own = exercise(open(new InProcessLocalFileSystem, umask), ownRoot)
-        assert(hadoop.keySet.exists(_.endsWith(".crc")), hadoop)
-        assert(own == hadoop, s"umask $umask")
-      } finally Seq(hadoopRoot, ownRoot).foreach(StoreSwap.deleteTree)
+      val hadoopRoot = tempDir("graft_fs_hadoop_")
+      val ownRoot = tempDir("graft_fs_own_")
+      val hadoop = exercise(open(new LocalFileSystem(new RawLocalFileSystem), umask), hadoopRoot)
+      val own = exercise(open(new InProcessLocalFileSystem, umask), ownRoot)
+      assert(hadoop.keySet.exists(_.endsWith(".crc")), hadoop)
+      assert(own == hadoop, s"umask $umask")
     }
   }
 

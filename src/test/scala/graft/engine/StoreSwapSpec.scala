@@ -4,12 +4,15 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The store module on the bare filesystem: no SparkSession, so a
-  * "complete" staged dir is one with a hand-written `_SUCCESS`.
-  */
-class StoreSwapSpec extends AnyFunSuite {
+import graft.SparkTestBase
 
-  private def fresh(): Path = Files.createTempDirectory("graft_storeswap_")
+/** The store module on the bare filesystem: no SparkSession (only
+  * [[SparkTestBase]]'s temp dirs), so a "complete" staged dir is one
+  * with a hand-written `_SUCCESS`.
+  */
+class StoreSwapSpec extends AnyFunSuite with SparkTestBase {
+
+  private def fresh(): Path = tempDir("graft_storeswap_")
 
   /** A dir holding one data file `part` with `body`; complete when it
     * carries `_SUCCESS`.

@@ -80,7 +80,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // memory localCheckpoint (fast, dies with an executor) to a
     // recoverable filesystem checkpoint (the cluster-grade option for
     // long jobs); the rounded recurrence is identical either way
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt").toString
     val e = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L)).toDF("src", "dst")
     val a = Graph.pageRank(e, "src", "dst", iters = 3)
       .as[(Long, Double)].collect().toMap

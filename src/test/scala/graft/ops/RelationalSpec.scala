@@ -160,7 +160,7 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a one-row local merge source plans no Exchange") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_")
+    val root = tempDir("graft_merge_")
     val dir = root.resolve("t").toString
     Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v").write.parquet(dir)
     val target = spark.read.parquet(dir)

@@ -36,7 +36,7 @@ class ZOrderSpec extends AnyFunSuite with SparkTestBase {
     val df = (0 until n).map { i =>
       (i.toLong, (i * 2654435761L % n).toDouble)
     }.toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder").toString
 
     ZOrder.cluster(df, "x", "y", numFiles = 16)
       .write.mode("overwrite").parquet(s"$dir/z")

@@ -73,7 +73,7 @@ class AiCallCountSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def stagedCat(): Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_calls_test_").toString
+    val root = tempDir("graft_calls_test_").toString
     val cat = new Catalog(spark, root)
     cat.ensureTables()
     docs.foreach { case (f, t) => cat.putFile("docs", f, t.getBytes(StandardCharsets.UTF_8)) }
@@ -119,7 +119,7 @@ class AiCallCountSpec extends AnyFunSuite with SparkTestBase {
 
   test("batchSqlOverDocuments: extract runs once per document") {
     withBackend(CountingBackend) {
-      val sfDir = java.nio.file.Files.createTempDirectory("graft_calls_sf_").toString
+      val sfDir = tempDir("graft_calls_sf_").toString
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
         .write.parquet(s"$sfDir/documents.parquet")
       val wide = Pipelines.batchSqlOverDocuments(spark, sfDir, prompts).collect()

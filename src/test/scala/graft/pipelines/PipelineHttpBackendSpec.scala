@@ -23,7 +23,7 @@ class PipelineHttpBackendSpec extends AnyFunSuite with SparkTestBase {
   private val docB = "Contract between Foo and Bar. Effective date 2023-12-31. Term two years."
 
   private def stagedCat(): Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_pipe_http_").toString
+    val root = tempDir("graft_pipe_http_").toString
     val cat = new Catalog(spark, root)
     cat.ensureTables()
     cat.putFile("docs", "a.txt", docA.getBytes(StandardCharsets.UTF_8))

@@ -18,7 +18,7 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
   private val docB = "Contract between Foo and Bar. Effective date 2023-12-31. Term two years."
 
   private def stagedCat(): Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_pipe_test_").toString
+    val root = tempDir("graft_pipe_test_").toString
     val cat = new Catalog(spark, root)
     cat.ensureTables()
     cat.putFile("docs", "a.txt", docA.getBytes(StandardCharsets.UTF_8))
@@ -122,6 +122,55 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
       "checkpoint must prevent reprocessing of a.txt/b.txt")
   }
 
+  test("a stream trigger of more files than the listing threshold lists them on the driver") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val cat = new Catalog(spark, tempDir("graft_pipe_list_").toString)
+    cat.ensureTables()
+    // 40 files, past the default threshold (32), in one trigger (64)
+    val n = 40
+    (0 until n).foreach(i =>
+      cat.putFile("docs", f"d$i%02d.txt", s"Memo $i. Short.".getBytes(StandardCharsets.UTF_8)))
+    val thresholdKey = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+    val threshold = spark.conf.getOption(thresholdKey)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.job.description")).foreach(descriptions.add)
+    }
+    val inputRows = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]()
+    val progress = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.merge(e.progress.id, e.progress.numInputRows, (a, b) => a + b)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobs)
+    cat.spark.streams.addListener(progress)
+    val q = try {
+      val q = Pipelines.stream(cat, "docs", Map("t" -> "What is the title?"), cat.root + "/cp")
+      try q.processAllAvailable() finally q.stop()
+      ListenerBridge.drain(sc)
+      q
+    } finally {
+      cat.spark.streams.removeListener(progress)
+      sc.removeSparkListener(jobs)
+    }
+    assert(!descriptions.asScala.exists(_.startsWith("Listing leaf files")),
+      descriptions.asScala.filter(_.startsWith("Listing")).toSeq)
+    val processed = cat.table("DOCUMENTS_PROCESSED")
+    assert(processed.count() == n)
+    assert(processed.select("file_url").distinct().count() == n)
+    assert(inputRows.get(q.id) == n.toLong,
+      "the query reports its progress to the catalog session's listeners")
+    assert(spark.conf.getOption(thresholdKey) == threshold)
+  }
+
   test("a stream restarted with a FRESH checkpoint never clobbers prior data") {
     val cat = stagedCat()
     val q1 = Pipelines.stream(cat, "docs", Map("t" -> "What is the title?"),
@@ -174,6 +223,19 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     val t1 = Pipelines.runToken(ck1)
     assert(Pipelines.runToken(ck1) == t1, "same checkpoint must reuse its token")
     assert(Pipelines.runToken(ck2) != t1, "new checkpoint must mint a new token")
+  }
+
+  test("concurrent persists do not wait for one another's pool threads") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // one task more than the global pool has threads: all must run at
+    // once even though each blocks without telling the pool, as
+    // Spark's job wait does
+    val n = Runtime.getRuntime.availableProcessors + 1
+    val met = new CountDownLatch(n)
+    Pipelines.runConcurrently(spark, Seq.fill(n)(() => {
+      met.countDown()
+      assert(met.await(10, TimeUnit.SECONDS), s"$n tasks did not all run at once")
+    }))
   }
 
   test("interactive pipeline canonicalizes non-flat prompt schemas on read") {

@@ -8,7 +8,7 @@ import graft.engine.Catalog
 class PromptStoreSpec extends AnyFunSuite with SparkTestBase {
 
   private def freshCat(): Catalog = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ps_test_").toString
+    val root = tempDir("graft_ps_test_").toString
     val cat = new Catalog(spark, root)
     cat.ensureTables()
     cat

@@ -38,8 +38,8 @@ class AnomalyStreamSpec extends AnyFunSuite with SparkTestBase {
   /** Drive the stream from parquet batches written as separate files. */
   private def run(batches: Seq[Seq[Event]], z: Double,
                   minN: Long, name: String): Set[(Long, Double)] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_anom_cp_").toString
+    val dir = tempDir("graft_anom_").toString
+    val cp = tempDir("graft_anom_cp_").toString
     batches.head.toDS().coalesce(1).write.parquet(dir + "/b0")
     val src = spark.readStream.schema(batches.head.toDS().schema)
       .option("maxFilesPerTrigger", "1").parquet(dir + "/*")

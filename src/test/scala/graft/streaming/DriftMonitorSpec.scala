@@ -52,8 +52,8 @@ class DriftMonitorSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("streaming: watermark finalizes a window's counts exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_ev_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_drift_cp_").toString
+    val dir = tempDir("graft_drift_ev_").toString
+    val cp = tempDir("graft_drift_cp_").toString
     balanced.toDF("ts", "value").write.parquet(dir + "/b1")
     val src = spark.readStream
       .schema(balanced.toDF("ts", "value").schema)

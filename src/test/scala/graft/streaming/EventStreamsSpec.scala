@@ -47,7 +47,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming end-to-end: watermarked tumbling counts over the events fixture") {
     // file streaming sources need a directory: stage the fixture file
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev_fixture_")
+    val dir = tempDir("graft_ev_fixture_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -72,7 +72,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
       .select("event_id").as[Long].collect().sorted
     assert(out.toSeq == Seq(1L, 2L))
     // real stream: duplicates within the watermark horizon dropped
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_ev_").toString
+    val dir = tempDir("graft_dedup_ev_").toString
     rows.toDS().write.parquet(dir + "/b1")
     val src = spark.readStream.schema(rows.toDS().schema).parquet(dir + "/*")
     val q = streamingDedup(src, Seq("event_id"))
@@ -95,7 +95,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
       .select("view_id", "purchase_id").as[(Long, Long)].collect()
     assert(out.toSeq == Seq((1L, 2L)))
     // streaming: same result through a real stream-stream join
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_ev_").toString
+    val dir = tempDir("graft_attr_ev_").toString
     rows.toDS().write.parquet(dir + "/b1")
     val src = spark.readStream.schema(rows.toDS().schema).parquet(dir + "/*")
     val q = purchaseAttribution(src)
@@ -108,8 +108,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("stateful sessionize on a real stream emits closed sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ev_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_stream_cp_").toString
+    val dir = tempDir("graft_stream_ev_").toString
+    val cp = tempDir("graft_stream_cp_").toString
     // two files -> two micro-batches (maxFilesPerTrigger=1)
     Seq(Event(1, tsOf("2024-01-01 10:00:00"), 1, "click", 1.0),
         Event(2, tsOf("2024-01-01 10:10:00"), 1, "click", 2.0))
@@ -136,8 +136,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sessionizeWithTimeout closes idle sessions via event-time timeout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_to_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_stream_tocp_").toString
+    val dir = tempDir("graft_stream_to_").toString
+    val cp = tempDir("graft_stream_tocp_").toString
     // user 1's session goes idle; only OTHER users' events arrive later,
     // so the session can only close through the event-time timeout
     Seq(Event(1, tsOf("2024-01-01 10:00:00"), 1, "click", 1.0),
@@ -173,8 +173,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sessionizeWithTimeout never shrinks a session on cross-batch late events") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_late_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_stream_latecp_").toString
+    val dir = tempDir("graft_stream_late_").toString
+    val cp = tempDir("graft_stream_latecp_").toString
     // batch 1 establishes lastSeen = 10:20 for user 1
     Seq(Event(1, tsOf("2024-01-01 10:00:00"), 1, "click", 1.0),
         Event(2, tsOf("2024-01-01 10:20:00"), 1, "click", 2.0))
@@ -213,8 +213,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("funnelStream emits exact per-user reach after the horizon closes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_ev_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_funnel_cp_").toString
+    val dir = tempDir("graft_funnel_ev_").toString
+    val cp = tempDir("graft_funnel_cp_").toString
     // user 1 completes the funnel OUT OF ORDER across batches (purchase
     // arrives before the click); user 2 clicks and purchases but never
     // views; user 3 only views
@@ -272,8 +272,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     val shuffled = rnd.shuffle(events)
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_pp_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_funnel_ppcp_").toString
+    val dir = tempDir("graft_funnel_pp_").toString
+    val cp = tempDir("graft_funnel_ppcp_").toString
     val chunks = shuffled.grouped(math.max(1, shuffled.size / 4 + 1)).toSeq
     chunks.zipWithIndex.foreach { case (c, i) =>
       c.toDS().coalesce(1).write.parquet(s"$dir/b$i")
@@ -319,8 +319,8 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("funnelStream re-enters deterministically after the horizon closes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel2_ev_").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_funnel2_cp_").toString
+    val dir = tempDir("graft_funnel2_ev_").toString
+    val cp = tempDir("graft_funnel2_cp_").toString
     // user 1: chain 1 = view@10:00 + click@10:20 (reaches 2); a second
     // view@11:30 is AFTER the 1h horizon close and must open chain 2,
     // completed by click@11:40 — two emissions for one user, decided

@@ -13,7 +13,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   private val other = Array(-0.5, 1.0, -0.3, 0.1)
 
   test("embedding near-dups are dropped across batches and within a batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_").toString
+    val dir = tempDir("graft_incann_").toString
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16, threshold = 0.98)
 
     // batch 1: base accepted; in-batch near-dup (id 2) dropped
@@ -38,7 +38,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("replaying a crashed batch keeps its survivors (no self-match drop)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_rp_").toString
+    val dir = tempDir("graft_incann_rp_").toString
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16, threshold = 0.98)
     val b = Seq((1L, base.toSeq), (2L, other.toSeq)).toDF("vec_id", "embedding")
     val first = ann.processBatch(b, "embedding", "vec_id")
@@ -51,7 +51,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compactStore removes replay duplicates and preserves matching") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_cp_").toString
+    val dir = tempDir("graft_incann_cp_").toString
     // autoCompactSlack = 0: this test exercises the MANUAL compaction
     // path, so the automatic trigger must not fire mid-assert
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16,
@@ -72,7 +72,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("auto-compaction keeps a long replay run bounded with no explicit compact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_ac_").toString
+    val dir = tempDir("graft_incann_ac_").toString
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16,
       threshold = 0.98) // default slack
     val b = Seq((1L, base.toSeq), (2L, other.toSeq)).toDF("vec_id", "embedding")
@@ -95,7 +95,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
     // embedding has no direction — it must pass through (cosine 0 to
     // everything) and must never make OTHER rows look like its dups,
     // across batches included
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_z_").toString
+    val dir = tempDir("graft_incann_z_").toString
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16, threshold = 0.9)
     val zero = Array(0.0, 0.0, 0.0, 0.0)
     val b1 = Seq((1L, zero.toSeq), (2L, base.toSeq)).toDF("vec_id", "embedding")
@@ -111,7 +111,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("reopening a store with different hyperparameters fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incann_hp_").toString
+    val dir = tempDir("graft_incann_hp_").toString
     val ann = new IncrementalAnn(spark, dir, nBits = 4, nTables = 16)
     ann.processBatch(Seq((1L, base.toSeq)).toDF("vec_id", "embedding"),
       "embedding", "vec_id")

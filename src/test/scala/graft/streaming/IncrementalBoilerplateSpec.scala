@@ -11,7 +11,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
     ids.map(i => (i.toLong, s"unique line $i\n$footer"))
 
   test("boilerplate crossing minDocs is dropped in-batch and in later batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incboiler_").toString
+    val dir = tempDir("graft_incboiler_").toString
     val inc = new IncrementalBoilerplate(spark, dir, minDocs = 5)
 
     // batch 1: 6 docs share the footer (>= 5 distinct) -> dropped from
@@ -38,7 +38,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("crash replay never inflates frequencies; compaction is storage-only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incboiler_").toString
+    val dir = tempDir("graft_incboiler_").toString
     val inc = new IncrementalBoilerplate(spark, dir, minDocs = 5)
 
     // 3 docs with a shared footer: below the bar, nothing dropped
@@ -68,7 +68,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("reopening with a different format marker fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incboiler_").toString
+    val dir = tempDir("graft_incboiler_").toString
     new IncrementalBoilerplate(spark, dir, minDocs = 5)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/_FORMAT"), "0:xxh-lines")

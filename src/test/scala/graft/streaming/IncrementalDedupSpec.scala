@@ -12,7 +12,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   private val other = "a completely different corpus row about distributed query engines and shuffle partitioning strategies"
 
   test("near-dups are dropped across batches and within a batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_").toString
+    val dir = tempDir("graft_incdedup_").toString
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.5)
 
     // batch 1: base accepted; in-batch near-dup (id 2) dropped
@@ -36,7 +36,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("replaying a crashed batch keeps its survivors (no self-match drop)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_rp_").toString
+    val dir = tempDir("graft_incdedup_rp_").toString
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.5)
     val b = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
     val first = dedup.processBatch(b, "text", "doc_id")
@@ -52,7 +52,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compactStore removes replay duplicates and preserves matching") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_cp_").toString
+    val dir = tempDir("graft_incdedup_cp_").toString
     // autoCompactSlack = 0: this test exercises the MANUAL compaction
     // path, so the automatic trigger must not fire mid-assert
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.5,
@@ -80,7 +80,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("auto-compaction keeps a long replay run bounded with no explicit compact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_ac_").toString
+    val dir = tempDir("graft_incdedup_ac_").toString
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.5) // default slack
     val b = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
     val bands = 8 // constructor default; a clean store = ids x bands rows
@@ -109,7 +109,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // the short-doc rule, so they ARE mutual exact dups (J=1): the first
     // is accepted, later ones drop — deterministic, no crash, and real
     // docs are never affected
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_deg_").toString
+    val dir = tempDir("graft_incdedup_deg_").toString
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.7)
     val b1 = Seq((1L, ""), (2L, "solo"), (3L, base)).toDF("doc_id", "text")
     val kept1 = dedup.processBatch(b1, "text", "doc_id")
@@ -135,7 +135,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val crowd = (1L to 10L).map(i => (i, s"$boiler unique$i"))
     val lone = (50L, other)
     def run(cap: Int): (Seq[Long], Seq[Long]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_cap_").toString
+      val dir = tempDir("graft_incdedup_cap_").toString
       val dedup = new IncrementalDedup(spark, dir, threshold = 0.95,
         maxStoreBucket = cap)
       val k1 = dedup.processBatch((crowd :+ lone).toDF("doc_id", "text"),
@@ -173,7 +173,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("reopening a store with different hyperparameters fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup_hp_").toString
+    val dir = tempDir("graft_incdedup_hp_").toString
     val dedup = new IncrementalDedup(spark, dir, threshold = 0.5)
     dedup.processBatch(Seq((1L, base)).toDF("doc_id", "text"), "text", "doc_id")
     // same params: reopens fine

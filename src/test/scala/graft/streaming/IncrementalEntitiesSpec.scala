@@ -8,7 +8,7 @@ class IncrementalEntitiesSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_ent_").toString
+    tempDir("graft_ent_").toString
 
   private def resolveMap(st: IncrementalEntities): Map[Long, Long] =
     st.resolve().select("id", "entity_id")

@@ -16,7 +16,7 @@ class IncrementalTextIndexSpec extends AnyFunSuite with SparkTestBase {
     (4L, "completely unrelated words only"))
 
   test("two-batch index search equals corpus-scan BM25 exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ix_").toString
+    val dir = tempDir("graft_ix_").toString
     val ix = new IncrementalTextIndex(spark, dir)
     ix.indexBatch(b1.toDF("doc_id", "text"), "text", "doc_id")
     ix.indexBatch(b2.toDF("doc_id", "text"), "text", "doc_id")
@@ -30,7 +30,7 @@ class IncrementalTextIndexSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("crash replay cannot drift results; compaction is storage-only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ix_rp_").toString
+    val dir = tempDir("graft_ix_rp_").toString
     val ix = new IncrementalTextIndex(spark, dir)
     ix.indexBatch(b1.toDF("doc_id", "text"), "text", "doc_id")
     val before = ix.search(Seq("hash"), 10).as[(Long, Double, Long)].collect().toSet
@@ -48,7 +48,7 @@ class IncrementalTextIndexSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("format marker guards against tokenization drift") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ix_fmt_").toString
+    val dir = tempDir("graft_ix_fmt_").toString
     val ix = new IncrementalTextIndex(spark, dir)
     ix.indexBatch(b1.toDF("doc_id", "text"), "text", "doc_id")
     java.nio.file.Files.writeString(

@@ -18,7 +18,7 @@ class IncrementalWinnowSpec extends AnyFunSuite with SparkTestBase {
     ((1 to 4).map(i => s"b$i") ++ (1 to 16).map(i => s"g$i")).mkString(" ")
 
   test("partial verbatim overlap is caught across batches; grazes survive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incwin_").toString
+    val dir = tempDir("graft_incwin_").toString
     val win = new IncrementalWinnow(spark, dir, k = 3, w = 3, threshold = 0.4)
 
     val b1 = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
@@ -50,7 +50,7 @@ class IncrementalWinnowSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("intra-batch wholesale copy drops; first occurrence wins") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incwin_ib_").toString
+    val dir = tempDir("graft_incwin_ib_").toString
     val win = new IncrementalWinnow(spark, dir, k = 3, w = 3, threshold = 0.4)
     val b = Seq((1L, base), (2L, base), (3L, other)).toDF("doc_id", "text")
     val kept = win.processBatch(b, "text", "doc_id")
@@ -59,7 +59,7 @@ class IncrementalWinnowSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("replaying a crashed batch keeps its survivors (self-exclusion)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incwin_rp_").toString
+    val dir = tempDir("graft_incwin_rp_").toString
     val win = new IncrementalWinnow(spark, dir, k = 3, w = 3, threshold = 0.4)
     val b = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
     assert(win.processBatch(b, "text", "doc_id").count() == 2)
@@ -77,7 +77,7 @@ class IncrementalWinnowSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("short docs carry no overlap evidence and always survive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incwin_sd_").toString
+    val dir = tempDir("graft_incwin_sd_").toString
     val win = new IncrementalWinnow(spark, dir, k = 3, w = 3, threshold = 0.4)
     val b = Seq((1L, base)).toDF("doc_id", "text")
     win.processBatch(b, "text", "doc_id").count()
@@ -90,7 +90,7 @@ class IncrementalWinnowSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("reopening with different selection parameters fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incwin_fm_").toString
+    val dir = tempDir("graft_incwin_fm_").toString
     val win = new IncrementalWinnow(spark, dir, k = 3, w = 3)
     win.processBatch(Seq((1L, base)).toDF("doc_id", "text"), "text", "doc_id").count()
     val e = intercept[IllegalArgumentException] {

@@ -59,14 +59,14 @@ class MaintenanceCoRunRestartSpec extends AnyFunSuite with SparkTestBase {
       (0 until 100).map(i => i.toDouble).toDF("value"), "value", k = 5)
 
     // --- control: one uninterrupted process over its own root ---
-    val rootA = java.nio.file.Files.createTempDirectory("graft_corun_ctl_").toString
+    val rootA = tempDir("graft_corun_ctl_").toString
     val control = new MaintenanceCoRun(spark, rootA, cuts, refShares,
       textThreshold = 0.5, vecThreshold = 0.98)
     val ctl = runBatches(control,
       Seq(1L -> batch1, 2L -> batch2, 3L -> batch3))
 
     // --- resumed: process 1 dies after batch 2 ---
-    val rootB = java.nio.file.Files.createTempDirectory("graft_corun_res_").toString
+    val rootB = tempDir("graft_corun_res_").toString
     val proc1 = new MaintenanceCoRun(spark, rootB, cuts, refShares,
       textThreshold = 0.5, vecThreshold = 0.98)
     val p1 = runBatches(proc1, Seq(1L -> batch1, 2L -> batch2))

@@ -37,7 +37,7 @@ class MaintenanceCoRunSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text", "embedding", "ts", "value")
 
   test("gates compose, replays stay idempotent, stores stay bounded, monitor fires") {
-    val root = java.nio.file.Files.createTempDirectory("graft_corun_").toString
+    val root = tempDir("graft_corun_").toString
     // frozen reference: uniform 0..99 quality values, 5 bins
     val (cuts, refShares) = DriftMonitor.freezeReference(
       (0 until 100).map(i => i.toDouble).toDF("value"), "value", k = 5)

@@ -8,7 +8,7 @@ class StreamMetricsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   test("listener records batch progress and health rolls it up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_metrics_").toString
+    val dir = tempDir("graft_metrics_").toString
     (1 to 50).map(i => (i.toLong, s"row $i")).toDF("id", "payload")
       .write.parquet(s"$dir/in/b1")
 
@@ -39,7 +39,7 @@ class StreamMetricsSpec extends AnyFunSuite with SparkTestBase {
   test("ring is bounded per query") {
     // three restarts of the same checkpointed query = three batches
     // through one queryId; keep=1 must retain only the newest
-    val dir = java.nio.file.Files.createTempDirectory("graft_metrics2_").toString
+    val dir = tempDir("graft_metrics2_").toString
     val one = new StreamMetrics(keep = 1).attach(spark)
     try {
       (1 to 3).foreach { i =>

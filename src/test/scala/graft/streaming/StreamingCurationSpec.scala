@@ -29,7 +29,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     "the third subject is about the migration of birds across the southern hemisphere"
 
   test("streaming curation gates quality per batch and dedups across batches") {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_cur_").toString
+    val root = tempDir("graft_stream_cur_").toString
     val in = s"$root/in"
     val store = s"$root/store"
     val outDir = s"$root/out"
@@ -70,7 +70,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
 
   test("e2e: quality + decontamination + incremental dedup + metrics replays " +
     "idempotently across a forced mid-batch crash") {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_e2e_").toString
+    val root = tempDir("graft_stream_e2e_").toString
     val in = s"$root/in"
     val store = s"$root/store"
     val outDir = s"$root/out"

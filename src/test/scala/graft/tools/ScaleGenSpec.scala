@@ -22,7 +22,7 @@ class ScaleGenSpec extends AnyFunSuite with SparkTestBase {
 
   private val src = "/root/testdata/sf0.001"
   private lazy val dst = {
-    val d = java.nio.file.Files.createTempDirectory("graft_scalegen_").toString
+    val d = tempDir("graft_scalegen_").toString
     ScaleGen.scale(spark, src, d, factor = 3)
     d
   }
