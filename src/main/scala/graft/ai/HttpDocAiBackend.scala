@@ -58,7 +58,11 @@ final class HttpDocAiBackend(baseUrl: String,
   private def post(path: String, body: Array[Byte],
                    contentType: String): String =
     Retry.withRetry(attempts, retryDelayMs,
-      retryIf = !_.isInstanceOf[HttpDocAiBackend.HttpStatusError]) {
+      retryIf = !_.isInstanceOf[HttpDocAiBackend.HttpStatusError],
+      delayOf = {
+        case e: HttpDocAiBackend.Transient => e.retryAfterMs
+        case _ => None
+      }) {
       val req = HttpRequest.newBuilder(URI.create(s"$base$path"))
         .timeout(Duration.ofMillis(requestTimeoutMs))
         .header("Content-Type", contentType)
@@ -69,12 +73,22 @@ final class HttpDocAiBackend(baseUrl: String,
       if (code >= 200 && code < 300) resp.body()
       else if (code >= 500 || code == 429)
         // transient server failure or rate limit: throw a retryable exception
-        throw new java.io.IOException(s"HTTP $code from $path: ${resp.body().take(200)}")
+        throw new HttpDocAiBackend.Transient(s"HTTP $code from $path: ${resp.body().take(200)}",
+          if (code == 429 || code == 503) retryAfterMs(resp) else None)
       else
         // any other 4xx is permanent — escape the retry loop immediately
         throw new HttpDocAiBackend.HttpStatusError(code,
           s"HTTP $code from $path: ${resp.body().take(200)}")
     }
+
+  /** `Retry-After` delta-seconds in ms, capped at the request timeout;
+    * None when the header is absent, an HTTP-date or malformed.
+    */
+  private def retryAfterMs(resp: HttpResponse[_]): Option[Long] = {
+    val value = resp.headers().firstValue("Retry-After").orElse("").trim
+    if (value.matches("[0-9]{1,9}")) Some(math.min(value.toLong * 1000, requestTimeoutMs))
+    else None
+  }
 
   private def postJson(path: String, json: String): String =
     post(path, json.getBytes(StandardCharsets.UTF_8), "application/json")
@@ -137,4 +151,10 @@ object HttpDocAiBackend {
     */
   final class HttpStatusError(val code: Int, msg: String)
     extends RuntimeException(msg)
+
+  /** Retryable failure — transport, 5xx or 429 — with the wait the
+    * server asked for, if it named one.
+    */
+  final class Transient(msg: String, val retryAfterMs: Option[Long])
+    extends java.io.IOException(msg)
 }

@@ -10,10 +10,12 @@ object Retry {
     * PERMANENT error (4xx protocol failure, bad request shape) should
     * escape immediately rather than burn attempts × delay on a result
     * that cannot change. Default retries everything (the original
-    * eventually-consistent-stage behavior).
+    * eventually-consistent-stage behavior). `delayOf`: the wait a
+    * failure asks for (a server's `Retry-After`), else `delayMs`.
     */
   def withRetry[A](attempts: Int = 5, delayMs: Long = 500,
-                   retryIf: Throwable => Boolean = _ => true)(f: => A): A = {
+                   retryIf: Throwable => Boolean = _ => true,
+                   delayOf: Throwable => Option[Long] = _ => None)(f: => A): A = {
     var last: Throwable = null
     var i = 0
     while (i < attempts) {
@@ -30,7 +32,7 @@ object Retry {
           if (!retryIf(e)) throw e
           last = e
           i += 1
-          if (i < attempts) Thread.sleep(delayMs)
+          if (i < attempts) Thread.sleep(delayOf(e).getOrElse(delayMs))
       }
     }
     throw last

@@ -1,7 +1,12 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,12 +21,19 @@ import org.apache.spark.sql.types._
   * app:750). Timestamps use the canonical setup-DDL shape; the app's
   * reduced runtime DDL (no timestamps) is handled by schema probing in
   * HistoryQueries, not by try/except query rewriting (SURVEY §1.3).
+  *
+  * Every write of a table holds that table's JVM-wide lock
+  * ([[Catalog.locked]]), so concurrent requests on one warehouse
+  * serialize per table: a merge reads no file a concurrent rewrite
+  * removes, and no two writes of a table share a job's `_temporary`.
   */
 final class Catalog(val spark: SparkSession, val root: String) {
 
   import Catalog._
 
   private def tablePath(name: String): String = s"$root/tables/$name"
+
+  private def locked[A](name: String)(body: => A): A = Catalog.locked(Paths.get(tablePath(name)))(body)
 
   /** CREATE TABLE IF NOT EXISTS x5 (S6; app:38-78, setup:46-90).
     * Also the warehouse-open hook: finishes any overwrite swap a crash
@@ -60,7 +72,53 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * class's partitions.
     */
   def append(name: String, df: DataFrame): Unit =
-    write(name, withDefaults(name, df), SaveMode.Append, tablePath(name))
+    locked(name)(write(name, withDefaults(name, df), SaveMode.Append, tablePath(name)))
+
+  /** [[append]] of rows the driver already holds, with no Spark job:
+    * Spark's parquet writer runs here, on the Hadoop conf of
+    * [[writeOptions]], one file per partition value, each written under
+    * [[StoreSwap.pendingPath]] and then published into the table
+    * ([[StoreSwap.publish]]). Format, partition directories and file
+    * names are a job write's. `rows` hold every column of the table's
+    * schema in DDL order: the caller stamps the timestamps (F12).
+    * Files of different partitions are published one by one.
+    */
+  def appendRows(name: String, rows: Seq[Row]): Unit = {
+    val schema = schemas(name)
+    val parts = partitionSpec.getOrElse(name, Nil).map(schema.fieldIndex)
+    val data = schema.indices.filterNot(parts.contains)
+    val dataSchema = StructType(data.map(schema.fields))
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOptions))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, writeOptions, dataSchema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    // Spark names a partitioned write's files `.c000`, others `-c000`
+    val counter = if (parts.isEmpty) "-c000" else ".c000"
+    val file = s"part-00000-${java.util.UUID.randomUUID()}$counter${factory.getFileExtension(context)}"
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dataSchema)
+    val live = Paths.get(tablePath(name))
+    val written = rows.groupBy(partitionDir(schema, parts, _)).toSeq.zipWithIndex.map {
+      case ((dir, group), i) =>
+        val pending = StoreSwap.pendingPath(live, s"$i-$file")
+        val writer = factory.newInstance(pending.toString, dataSchema, context)
+        try group.foreach(r =>
+          writer.write(toCatalyst(Row.fromSeq(data.map(r.get))).asInstanceOf[InternalRow]))
+        finally writer.close()
+        pending -> live.resolve(dir).resolve(file)
+    }
+    locked(name)(written.foreach { case (pending, target) => StoreSwap.publish(pending, target) })
+  }
+
+  /** The partition directory of `row` (relative, `""` when unpartitioned)
+    * as Spark's writer names it: escaped `col=value` segments, and an
+    * empty or null value as the default partition.
+    */
+  private def partitionDir(schema: StructType, parts: Seq[Int], row: Row): String =
+    parts.map { i =>
+      val value = Option(row.get(i)).map(_.toString).filter(_.nonEmpty).orNull
+      ExternalCatalogUtils.getPartitionPathString(schema(i).name, value)
+    }.mkString("/")
 
   /** The one parquet writer of table data: partitioned per
     * [[partitionSpec]], with `file:` resolved to
@@ -94,7 +152,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * final state after any number of replays is exactly one copy.
     * Partition subdirectories (partitionSpec) are preserved.
     */
-  def appendBatch(name: String, df: DataFrame, token: String): Unit = {
+  def appendBatch(name: String, df: DataFrame, token: String): Unit = locked(name) {
     // no '-' in tokens: replay cleanup matches files by the "-b<token>"
     // suffix, and a '-' inside one token could make it a suffix of
     // another token's files (e.g. "a-b1" vs "1"), deleting their data
@@ -135,14 +193,12 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * directory then atomically swapped in (SURVEY §7.4 risk 1 — no table
     * format offline, so single-writer directory swap).
     */
-  def merge(name: String, source: DataFrame, keys: Seq[String]): Unit = {
-    val merged = graft.ops.Relational.mergeInto(table(name), source, keys)
-    overwrite(name, merged)
-  }
+  def merge(name: String, source: DataFrame, keys: Seq[String]): Unit =
+    locked(name)(overwrite(name, graft.ops.Relational.mergeInto(table(name), source, keys)))
 
   /** DELETE WHERE (app:198): rewrite without matching rows. */
   def deleteWhere(name: String, pred: org.apache.spark.sql.Column): Unit =
-    overwrite(name, table(name).filter(!pred))
+    locked(name)(overwrite(name, table(name).filter(!pred)))
 
   /** Rewrite a table through the store module's bak-swap: the new
     * data is staged complete at `.tmp_<name>`, then swapped in — a
@@ -206,16 +262,17 @@ final class Catalog(val spark: SparkSession, val root: String) {
     * files via the same atomic temp-swap as merge. Run out-of-band
     * (single-writer, like merge).
     */
-  def compact(name: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
+  def compact(name: String, targetBytes: Long = 128L * 1024 * 1024): Unit = locked(name) {
     val dir = Paths.get(tablePath(name))
-    if (!Files.exists(dir)) return
-    val walk = Files.walk(dir)
-    val bytes =
-      try walk.filter(p => p.toString.endsWith(".parquet"))
-        .mapToLong(p => Files.size(p)).sum()
-      finally walk.close()
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    overwrite(name, table(name).repartition(parts))
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      val bytes =
+        try walk.filter(p => p.toString.endsWith(".parquet"))
+          .mapToLong(p => Files.size(p)).sum()
+        finally walk.close()
+      val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+      overwrite(name, table(name).repartition(parts))
+    }
   }
 
   /** Cluster a table's data layout by sort key (the sorted-rewrite half
@@ -228,13 +285,12 @@ final class Catalog(val spark: SparkSession, val root: String) {
     */
   def cluster(name: String, cols: Seq[String], numFiles: Int = 0): Unit = {
     require(cols.nonEmpty, "cluster needs at least one sort column")
-    val df = table(name)
     val parts =
       if (numFiles > 0) numFiles
       else spark.sessionState.conf.numShufflePartitions
-    overwrite(name,
-      df.repartitionByRange(parts, cols.map(col): _*)
-        .sortWithinPartitions(cols.map(col): _*))
+    locked(name)(overwrite(name,
+      table(name).repartitionByRange(parts, cols.map(col): _*)
+        .sortWithinPartitions(cols.map(col): _*)))
   }
 
   /** Session context probe (S4; app:90-96): who/where, as a one-row
@@ -326,6 +382,14 @@ final class Catalog(val spark: SparkSession, val root: String) {
 }
 
 object Catalog {
+  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[Path, AnyRef]()
+
+  /** `body` holding the JVM-wide lock of the table directory `live`
+    * (reentrant: a merge rewrites under the lock it read under).
+    */
+  private def locked[A](live: Path)(body: => A): A =
+    tableLocks.computeIfAbsent(live.toAbsolutePath.normalize, _ => new Object).synchronized(body)
+
   /** Regex matching everything up to and including a stage's directory
     * in a file path. Stage names are Pattern-quoted so regex
     * metacharacters in them ("v1.2", "a+b") match literally. Shared by

@@ -19,6 +19,12 @@ import org.apache.spark.sql.types.StructType
   * The dot-prefixed names are skipped by `Catalog.listTables` and by
   * Spark's file listing.
   *
+  * Single files ([[publish]]): a file the driver writes for `live` is
+  * written complete under [[pendingPath]], in the hidden sibling
+  * `.append_<name>`, then moved into `live` with its Hadoop `.crc`.
+  * A crash before the move leaves nothing visible; [[recover]] and
+  * [[drop]] clear what it left.
+  *
   * Store tables ([[Table]]): the incremental stores append one batch
   * at a time from `foreachBatch`, and a crashed batch is replayed, so
   * a table can hold duplicate rows of its `keys`. Every store's reads
@@ -71,12 +77,31 @@ private[graft] object StoreSwap {
 
   def bakPath(live: Path): Path = live.resolveSibling(".bak_" + live.getFileName)
 
+  /** Where the file `name` for `live` is written before [[publish]]. */
+  def pendingPath(live: Path, name: String): Path = pendingDir(live).resolve(name)
+
+  private def pendingDir(live: Path): Path = live.resolveSibling(".append_" + live.getFileName)
+
+  /** Hadoop's checksum sibling of `file`: `.<name>.crc`. */
+  private def crcPath(file: Path): Path = file.resolveSibling(s".${file.getFileName}.crc")
+
+  /** Make the complete file `pending` visible as `target`, its `.crc`
+    * moved first: a reader never sees the file without its checksum.
+    */
+  def publish(pending: Path, target: Path): Unit = {
+    Files.createDirectories(target.getParent)
+    if (Files.exists(crcPath(pending))) move(crcPath(pending), crcPath(target))
+    move(pending, target)
+  }
+
   private def complete(dir: Path): Boolean = Files.exists(dir.resolve("_SUCCESS"))
 
   private def move(from: Path, to: Path): Unit =
     Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
 
-  /** Restore the live dir after a crash mid-swap; drop leftover staging. */
+  /** Restore the live dir after a crash mid-swap; drop leftover
+    * staging and unpublished files.
+    */
   def recover(live: Path): Unit = {
     val (tmp, bak) = (stagePath(live), bakPath(live))
     if (!Files.exists(live)) {
@@ -85,6 +110,7 @@ private[graft] object StoreSwap {
     }
     deleteTree(tmp)
     deleteTree(bak)
+    deleteTree(pendingDir(live))
   }
 
   /** Replace `live` with the complete contents staged at [[stagePath]]. */
@@ -110,7 +136,8 @@ private[graft] object StoreSwap {
   /** Delete `live` and its swap leftovers, so [[recover]] can never
     * bring it back.
     */
-  def drop(live: Path): Unit = Seq(live, stagePath(live), bakPath(live)).foreach(deleteTree)
+  def drop(live: Path): Unit =
+    Seq(live, stagePath(live), bakPath(live), pendingDir(live)).foreach(deleteTree)
 
   /** Open a store directory: [[recover]] each of its `parts`, then
     * check the `_FORMAT` marker. A store with data (its first part) or

@@ -20,10 +20,11 @@ object DocAiProtocolTestServer {
 
   /** Start a protocol server; returns (baseUrl, hit-counter, stop).
     * `failFirst` makes the first request fail with `firstStatus`
-    * (retry-path exercise). A `/badrequest` context always answers 400.
+    * (retry-path exercise), with a `Retry-After: retryAfter` header
+    * when one is given. A `/badrequest` context always answers 400.
     */
-  def start(failFirst: Boolean = false,
-            firstStatus: Int = 503): (String, AtomicInteger, () => Unit) = {
+  def start(failFirst: Boolean = false, firstStatus: Int = 503,
+            retryAfter: Option[String] = None): (String, AtomicInteger, () => Unit) = {
     val hits = new AtomicInteger(0)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val d = DeterministicLocalBackend
@@ -37,7 +38,10 @@ object DocAiProtocolTestServer {
       server.createContext(path, (ex: HttpExchange) => {
         val n = hits.incrementAndGet()
         val body = ex.getRequestBody.readAllBytes()
-        if (failFirst && n == 1) reply(ex, firstStatus, "warming up")
+        if (failFirst && n == 1) {
+          retryAfter.foreach(ex.getResponseHeaders.set("Retry-After", _))
+          reply(ex, firstStatus, "warming up")
+        }
         else reply(ex, 200, f(body))
       })
     def json(b: Array[Byte]) = mapper.readTree(new String(b, StandardCharsets.UTF_8))

@@ -74,6 +74,35 @@ class HttpDocAiBackendSpec extends AnyFunSuite {
     } finally stop()
   }
 
+  /** Seconds one classify takes against a server whose first answer
+    * is `status` with `retryAfter`.
+    */
+  private def retriedCall(status: Int, retryAfter: Option[String],
+                          retryDelayMs: Long, requestTimeoutMs: Long = 30000): Double = {
+    val (url, hits, stop) = DocAiProtocolTestServer.start(failFirst = true, status, retryAfter)
+    try {
+      val http = new HttpDocAiBackend(url, attempts = 3, retryDelayMs = retryDelayMs,
+        requestTimeoutMs = requestTimeoutMs)
+      val t0 = System.nanoTime()
+      assert(http.classify(text) == DeterministicLocalBackend.classify(text))
+      assert(hits.get() == 2, s"expected 1 refusal + 1 retry, got ${hits.get()}")
+      (System.nanoTime() - t0) / 1e9
+    } finally stop()
+  }
+
+  test("429 and 503 wait out Retry-After delta-seconds, capped at the request timeout") {
+    assert(retriedCall(429, Some("1"), retryDelayMs = 10) >= 1.0)
+    val capped = retriedCall(503, Some("120"), retryDelayMs = 10, requestTimeoutMs = 300)
+    assert(capped >= 0.3 && capped < 5, capped)
+  }
+
+  test("a 503 without a usable Retry-After keeps the retry schedule") {
+    for (header <- Seq(None, Some("Wed, 21 Oct 2015 07:28:00 GMT"), Some("soon"))) {
+      val secs = retriedCall(503, header, retryDelayMs = 200)
+      assert(secs >= 0.2 && secs < 5, s"$header: $secs")
+    }
+  }
+
   test("transport errors exhaust attempts then surface (error-as-row upstream)") {
     // nothing listens here — connection refused on every attempt
     val http = new HttpDocAiBackend("http://127.0.0.1:1", attempts = 2, retryDelayMs = 10)

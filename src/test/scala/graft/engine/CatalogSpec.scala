@@ -1,7 +1,12 @@
 package graft.engine
 
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -306,5 +311,88 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     assert(cat.table("DOCUMENTS_EXTRACTED_FIELDS").count() == 1)
     assert(cat.table("DOCUMENTS_EXTRACTED_FIELDS")
       .filter(col("class_name") === "invoice").count() == 1)
+  }
+
+  /** Data files of a table, relative to its directory, sorted. */
+  private def dataFiles(cat: Catalog, name: String): Seq[String] = {
+    val dir = java.nio.file.Paths.get(cat.root, "tables", name)
+    val s = java.nio.file.Files.walk(dir)
+    try s.iterator().asScala.map(dir.relativize(_).toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+    finally s.close()
+  }
+
+  private def tableDir(cat: Catalog, name: String) = s"${cat.root}/tables/$name"
+
+  test("appendRows reads back as the same rows written by append") {
+    val at = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789123")
+    val rows = Map(
+      "DOCUMENTS_EXTRACTED_FIELDS" -> Seq(
+        Row("@s/a.txt", "a.txt", "invoice", "total", "\"250\"", null, at),
+        Row("@s/a.txt", "a.txt", "invoice", "vendor", null, 0.5, at),
+        Row("@s/b.txt", "b.txt", "report", "title", "\"t\"", null, at)),
+      "DOCUMENT_OCR" -> Seq(Row("a.txt", "a.txt", """{"content":"x"}""", "Summary: x", at)))
+    val (viaJob, viaDriver) = (freshCat(), freshCat())
+    for ((name, rs) <- rows) {
+      viaJob.append(name, spark.createDataFrame(rs.asJava, Catalog.schemas(name)))
+      viaDriver.appendRows(name, rs)
+      val ddl = Catalog.schemas(name).fieldNames.map(col)
+      assert(viaDriver.table(name).select(ddl: _*).collect().toSet == rs.toSet, name)
+      assert(viaDriver.table(name).collect().toSet == viaJob.table(name).collect().toSet, name)
+      val (job, driver) = (spark.read.parquet(tableDir(viaJob, name)),
+        spark.read.parquet(tableDir(viaDriver, name)))
+      assert(driver.schema == job.schema, name)
+      assert(driver.schema(driver.schema.fieldIndex(
+        Catalog.schemas(name).fieldNames.last)).dataType == TimestampType, name)
+      assert(driver.collect().toSet == job.collect().toSet, name)
+      // the job's file names and partition directories, another uuid
+      val names = Seq(dataFiles(viaJob, name), dataFiles(viaDriver, name))
+        .map(_.map(_.replaceAll("part-[0-9]{5}-[0-9a-f-]{36}", "part-N-<uuid>")).distinct)
+      assert(names(1) == names(0) && names(0).nonEmpty, names)
+    }
+  }
+
+  test("appendRows places escaped and null class names where the job writer does") {
+    val name = "DOCUMENTS_EXTRACTED_FIELDS"
+    val classes = Seq("a/b", "x=y", "50%", "", null)
+    val rows = classes.map(c => Row("u", "f", c, "k", "v", null, null))
+    val (viaJob, viaDriver) = (freshCat(), freshCat())
+    viaJob.append(name, spark.createDataFrame(rows.asJava, Catalog.schemas(name)))
+    rows.foreach(r => viaDriver.appendRows(name, Seq(r)))
+    def dirs(cat: Catalog) = dataFiles(cat, name).map(_.takeWhile(_ != '/')).distinct
+    assert(dirs(viaDriver) == dirs(viaJob), dirs(viaJob))
+    assert(dirs(viaJob).contains("class_name=a%2Fb"), dirs(viaJob))
+    val t = viaDriver.table(name)
+    for (c <- Seq("a/b", "x=y", "50%")) {
+      val one = t.filter(col("class_name") === c)
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(class_name"), plan)
+      val read = one.select(input_file_name()).as[String].collect().toSeq
+        .map(f => java.nio.file.Paths.get(new java.net.URI(f)).getParent.getFileName.toString)
+      assert(read == Seq("class_name=" + ExternalCatalogUtils.escapePathName(c)), c)
+    }
+    // the empty and the null class share the default partition
+    assert(t.filter(col("class_name").isNull).count() == 2)
+    assert(t.collect().toSet == viaJob.table(name).collect().toSet)
+  }
+
+  test("an appendRows file never published is invisible and recovery deletes it") {
+    val cat = freshCat()
+    val name = "DOCUMENT_OCR"
+    cat.appendRows(name, Seq(Row("a.txt", "a.txt", "{}", "s", null)))
+    val live = java.nio.file.Paths.get(tableDir(cat, name))
+    val Seq(published) = dataFiles(cat, name)
+    // a crash after the write, before the move: the written file waits
+    // under its pending name, its checksum beside it
+    val pending = StoreSwap.pendingPath(live, "0-" + published)
+    java.nio.file.Files.createDirectories(pending.getParent)
+    java.nio.file.Files.copy(live.resolve(published), pending)
+    java.nio.file.Files.copy(live.resolve(s".$published.crc"),
+      pending.resolveSibling(s".${pending.getFileName}.crc"))
+    assert(cat.table(name).count() == 1)
+    assert(cat.listTables() == Catalog.schemas.keys.toSeq.sorted)
+    cat.ensureTables()
+    assert(!java.nio.file.Files.exists(pending.getParent))
+    assert(cat.table(name).count() == 1 && dataFiles(cat, name) == Seq(published))
   }
 }

@@ -26,6 +26,13 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     cat
   }
 
+  /** Prompts for every class the local backend assigns: no request
+    * generates any.
+    */
+  private def seedPrompts(cat: Catalog): Unit =
+    cat.append("CLASS_PROMPTS", Seq("invoice", "contract", "report", "letter", "form")
+      .map(c => (c, """{"title": "What is the title?"}""")).toDF("class_name", "prompts"))
+
   test("interactive pipeline persists to all four tables and History reads back") {
     val cat = stagedCat()
     val out = Pipelines.interactive(cat, "docs", "a.txt")
@@ -62,6 +69,7 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val cat = stagedCat()
+    seedPrompts(cat)
     val key = "graft.test.caller"
     // write executions of this warehouse, and every job's (execution, caller)
     val writes = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
@@ -91,9 +99,81 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     try {
       assert(call("first", "a.txt").toSet == Set("first"))
       val second = call("second", "b.txt")
-      // three appends and the NEW_UPLOADS rewrite, each one job or more
-      assert(second.size >= 4 && second.forall(_ == "second"), second)
+      // the NEW_UPLOADS rewrite; the driver writes the three appends
+      assert(second.size == 1 && second.forall(_ == "second"), second)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("an interactive request runs two Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    val cat = stagedCat()
+    Pipelines.interactive(cat, "docs", "a.txt") // generates the class's prompts
+    val key = "graft.test.request"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty(key) == "warm") jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "warm")
+      try Pipelines.interactive(cat, "docs", "a.txt")
+      finally sc.setLocalProperty(key, null)
+      ListenerBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the scan and the NEW_UPLOADS upsert
+    assert(jobs.get() == 2)
+    assert(cat.table("DOCUMENTS_PROCESSED").count() == 2)
+    assert(cat.table("NEW_UPLOADS").count() == 1)
+  }
+
+  test("concurrent interactive requests on one catalog all persist") {
+    import java.util.concurrent.{Executors, TimeUnit}
+    val cat = stagedCat()
+    seedPrompts(cat)
+    val files = (0 until 16).map(i => f"c$i%02d.txt")
+    files.foreach(f => cat.putFile("docs", f,
+      s"Memo $f from Acme. The total is $$$f.".getBytes(StandardCharsets.UTF_8)))
+    Pipelines.interactive(cat, "docs", "a.txt")
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val requests = files.grouped(8).toSeq.map(group => pool.submit(new Runnable {
+        def run(): Unit = group.foreach(f => Pipelines.interactive(cat, "docs", f))
+      }))
+      requests.foreach(_.get(5, TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    val expected = (files :+ "a.txt").sorted
+    def keys(table: String, key: String) =
+      cat.table(table).select(key).as[String].collect().toSeq.sorted
+    assert(keys("DOCUMENTS_PROCESSED", "file_ref") == expected)
+    assert(keys("DOCUMENT_OCR", "file_ref") == expected)
+    assert(keys("NEW_UPLOADS", "file_name") == expected)
+  }
+
+  test("interactive's driver-built rows are the set-based persists' rows") {
+    import org.apache.spark.sql.Row
+    val cat = stagedCat()
+    val frame = Pipelines.streamColumns(
+      spark.read.format("binaryFile").load(cat.stageDir("docs") + "/a.txt"),
+      "docs", Map("total" -> "What is the total?", "due" -> "When is it due?"))
+    val rows = frame.collect()
+    val doc = spark.createDataFrame(java.util.Arrays.asList(rows: _*), frame.schema)
+    val at = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    def driverBuilt(table: String, built: Seq[Row], stamped: String*) =
+      spark.createDataFrame(java.util.Arrays.asList(built: _*), Catalog.schemas(table))
+        .drop(stamped: _*)
+    val processed = driverBuilt("DOCUMENTS_PROCESSED",
+      Seq(Pipelines.processedRow(rows(0), at)), "processed_at")
+    val fields = driverBuilt("DOCUMENTS_EXTRACTED_FIELDS",
+      Pipelines.fieldRows(rows(0), at), "confidence", "extracted_at")
+    for ((driver, job) <- Seq(processed -> Pipelines.processedRows(doc),
+                              fields -> Pipelines.fieldRows(doc))) {
+      assert(driver.columns.toSeq == job.columns.toSeq)
+      assert(driver.collect().toSet == job.collect().toSet)
+    }
+    assert(fields.count() == 2)
   }
 
   test("batchSql pipeline produces one wide row per staged file") {
