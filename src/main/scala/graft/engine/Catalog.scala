@@ -1,6 +1,9 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -22,10 +25,17 @@ import org.apache.spark.sql.types._
   * reduced runtime DDL (no timestamps) is handled by schema probing in
   * HistoryQueries, not by try/except query rewriting (SURVEY §1.3).
   *
-  * Every write of a table holds that table's JVM-wide lock
-  * ([[Catalog.locked]]), so concurrent requests on one warehouse
-  * serialize per table: a merge reads no file a concurrent rewrite
-  * removes, and no two writes of a table share a job's `_temporary`.
+  * Two append entry points, one publish discipline: [[appendRows]]
+  * for rows the driver holds and [[appendBatch]] for a distributed
+  * frame with a replay token both write complete files beside the
+  * table, under [[StoreSwap.pendingPath]], and make them visible with
+  * [[StoreSwap.publish]]. Every other change to a table directory is a
+  * [[StoreSwap.rewrite]] swap (merge, delete, compact, cluster).
+  *
+  * The table's JVM-wide lock ([[Catalog.locked]]) covers only the
+  * publish step or a rewrite, so concurrent requests on one warehouse
+  * serialize per table there: a merge reads no file a concurrent
+  * rewrite or publish changes, and an append's write runs unlocked.
   */
 final class Catalog(val spark: SparkSession, val root: String) {
 
@@ -64,24 +74,17 @@ final class Catalog(val spark: SparkSession, val root: String) {
   def table(name: String): DataFrame =
     spark.read.schema(schemas(name)).parquet(tablePath(name))
 
-  /** Append sink (S7; write_pandas app:523-546). Timestamp defaults
-    * stamped at write time (F12: parquet has no DEFAULT autofill).
-    * Tables with a partition spec are written partitioned so reads
-    * filtering on the partition column prune whole directories — at
-    * 100 TB, per-class queries on the fields table touch only their
-    * class's partitions.
-    */
-  def append(name: String, df: DataFrame): Unit =
-    locked(name)(write(name, withDefaults(name, df), SaveMode.Append, tablePath(name)))
-
-  /** [[append]] of rows the driver already holds, with no Spark job:
-    * Spark's parquet writer runs here, on the Hadoop conf of
-    * [[writeOptions]], one file per partition value, each written under
-    * [[StoreSwap.pendingPath]] and then published into the table
-    * ([[StoreSwap.publish]]). Format, partition directories and file
-    * names are a job write's. `rows` hold every column of the table's
-    * schema in DDL order: the caller stamps the timestamps (F12).
-    * Files of different partitions are published one by one.
+  /** Append sink for rows the driver already holds (S7; write_pandas
+    * app:523-546): Spark's parquet writer runs here, on the Hadoop conf
+    * of [[writeOptions]], one file per partition value, each written
+    * under [[StoreSwap.pendingPath]] and then published into the table
+    * ([[StoreSwap.publish]]), with no Spark job. Format, partition
+    * directories and file names are a job write's: tables with a
+    * partition spec are written partitioned, so reads filtering on the
+    * partition column prune whole directories. `rows` hold every column
+    * of the table's schema in DDL order: the caller stamps the
+    * timestamps (F12: parquet has no DEFAULT autofill). Files of
+    * different partitions are published one by one.
     */
   def appendRows(name: String, rows: Seq[Row]): Unit = {
     val schema = schemas(name)
@@ -144,49 +147,35 @@ final class Catalog(val spark: SparkSession, val root: String) {
     filled.select(schema.fieldNames.map(col): _*)
   }
 
-  /** Idempotent append for streaming foreachBatch (X2): replaying the
-    * same (table, token) after a crash between append and checkpoint
-    * commit must not double-append. The batch is staged to a temp dir,
-    * any files from a previous attempt of the SAME token are removed,
-    * then the fresh files move in under token-stamped names — so the
-    * final state after any number of replays is exactly one copy.
-    * Partition subdirectories (partitionSpec) are preserved.
+  /** Idempotent append of a distributed frame for streaming
+    * foreachBatch (X2): replaying the same (table, token) after a crash
+    * between append and checkpoint commit must not double-append. The
+    * batch's job writes, outside the table lock, under
+    * [[StoreSwap.pendingPath]]; then, under the lock, any files of an
+    * earlier attempt of the SAME token are removed and the fresh ones
+    * published ([[StoreSwap.publish]]) under token-stamped names in
+    * their partition subdirectories (partitionSpec) — so the final
+    * state after any number of replays is exactly one copy. Missing
+    * columns are filled as [[withDefaults]] says.
     */
-  def appendBatch(name: String, df: DataFrame, token: String): Unit = locked(name) {
+  def appendBatch(name: String, df: DataFrame, token: String): Unit = {
     // no '-' in tokens: replay cleanup matches files by the "-b<token>"
     // suffix, and a '-' inside one token could make it a suffix of
     // another token's files (e.g. "a-b1" vs "1"), deleting their data
     require(token.matches("[A-Za-z0-9_]+"), s"unsafe batch token: $token")
-    val tmp = s"$root/tables/.stage_${name}_$token"
-    write(name, withDefaults(name, df), SaveMode.Overwrite, tmp)
-    val tmpPath = Paths.get(tmp)
-    val target = Paths.get(tablePath(name))
-    Files.createDirectories(target)
-    // clear leftovers of a prior attempt of this token (crash mid-move)
+    val live = Paths.get(tablePath(name))
+    val staged = StoreSwap.pendingPath(live, token)
     val suffix = s"-b$token.parquet"
-    val old = Files.walk(target)
-    try old.filter(p => p.getFileName.toString.endsWith(suffix))
-      .forEach(p => Files.delete(p))
-    finally old.close()
-    // move fresh files in, preserving partition subdirs, token-stamped
-    val walk = Files.walk(tmpPath)
-    val fresh =
-      try {
-        val it = walk.filter(p => p.getFileName.toString.endsWith(".parquet")).iterator()
-        val b = Seq.newBuilder[java.nio.file.Path]
-        while (it.hasNext) b += it.next()
-        b.result().sortBy(_.toString)
-      } finally walk.close()
-    fresh.zipWithIndex.foreach { case (src, i) =>
-      val rel = tmpPath.relativize(src)
-      val destDir = if (rel.getParent == null) target else target.resolve(rel.getParent)
-      Files.createDirectories(destDir)
-      Files.move(src, destDir.resolve(f"part-$i%05d$suffix"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    if (!Files.exists(target.resolve("_SUCCESS")))
-      Files.write(target.resolve("_SUCCESS"), Array.emptyByteArray)
-    StoreSwap.deleteTree(tmpPath)
+    try {
+      write(name, withDefaults(name, df), SaveMode.Overwrite, staged.toString)
+      locked(name) {
+        filesUnder(live, suffix).foreach(StoreSwap.unpublish)
+        filesUnder(staged, ".parquet").zipWithIndex.foreach { case (file, i) =>
+          val target = live.resolve(staged.relativize(file)).resolveSibling(f"part-$i%05d$suffix")
+          StoreSwap.publish(file, target)
+        }
+      }
+    } finally StoreSwap.deleteTree(staged)
   }
 
   /** MERGE upsert persisted (J5): anti-join + union, written to a temp
@@ -210,13 +199,14 @@ final class Catalog(val spark: SparkSession, val root: String) {
 
   /** Crash recovery for an interrupted [[overwrite]] swap
     * ([[StoreSwap.recover]]): a complete `.tmp_` rolls forward, else
-    * the `.bak_` rolls back; leftovers are dropped.
+    * the `.bak_` rolls back; leftovers, unpublished appends included,
+    * are dropped.
     */
   def recover(name: String): Unit = StoreSwap.recover(Paths.get(tablePath(name)))
 
-  /** DROP TABLE (S9; cleanup:14-28). Also removes swap remnants
-    * (.tmp_/.bak_) so a dropped table can never be resurrected by
-    * [[recover]] on the next warehouse open.
+  /** DROP TABLE (S9; cleanup:14-28). Also removes swap and append
+    * remnants (.tmp_/.bak_/.append_), so a dropped table can never be
+    * resurrected by [[recover]] on the next warehouse open.
     */
   def dropTable(name: String): Unit = StoreSwap.drop(Paths.get(tablePath(name)))
 
@@ -265,11 +255,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
   def compact(name: String, targetBytes: Long = 128L * 1024 * 1024): Unit = locked(name) {
     val dir = Paths.get(tablePath(name))
     if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      val bytes =
-        try walk.filter(p => p.toString.endsWith(".parquet"))
-          .mapToLong(p => Files.size(p)).sum()
-        finally walk.close()
+      val bytes = filesUnder(dir, ".parquet").map(Files.size).sum
       val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       overwrite(name, table(name).repartition(parts))
     }
@@ -389,6 +375,17 @@ object Catalog {
     */
   private def locked[A](live: Path)(body: => A): A =
     tableLocks.computeIfAbsent(live.toAbsolutePath.normalize, _ => new Object).synchronized(body)
+
+  /** Files under `dir` whose names end with `suffix`, sorted; none when
+    * `dir` is absent.
+    */
+  private def filesUnder(dir: Path, suffix: String): Seq[Path] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(suffix)).toSeq.sortBy(_.toString)
+      finally walk.close()
+    }
 
   /** Regex matching everything up to and including a stage's directory
     * in a file path. Stage names are Pattern-quoted so regex

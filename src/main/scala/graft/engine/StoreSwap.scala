@@ -19,11 +19,12 @@ import org.apache.spark.sql.types.StructType
   * The dot-prefixed names are skipped by `Catalog.listTables` and by
   * Spark's file listing.
   *
-  * Single files ([[publish]]): a file the driver writes for `live` is
-  * written complete under [[pendingPath]], in the hidden sibling
-  * `.append_<name>`, then moved into `live` with its Hadoop `.crc`.
-  * A crash before the move leaves nothing visible; [[recover]] and
-  * [[drop]] clear what it left.
+  * Appends ([[publish]]): every catalog append, a driver write or a
+  * job's output, is written complete under [[pendingPath]], in the
+  * hidden sibling `.append_<name>`, then each data file is moved into
+  * `live` with its Hadoop `.crc`; [[unpublish]] takes a published file
+  * back out. A crash before the move leaves nothing visible;
+  * [[recover]] and [[drop]] clear what it left.
   *
   * Store tables ([[Table]]): the incremental stores append one batch
   * at a time from `foreachBatch`, and a crashed batch is replayed, so
@@ -77,7 +78,9 @@ private[graft] object StoreSwap {
 
   def bakPath(live: Path): Path = live.resolveSibling(".bak_" + live.getFileName)
 
-  /** Where the file `name` for `live` is written before [[publish]]. */
+  /** Where the file or job output `name` for `live` is written before
+    * [[publish]].
+    */
   def pendingPath(live: Path, name: String): Path = pendingDir(live).resolve(name)
 
   private def pendingDir(live: Path): Path = live.resolveSibling(".append_" + live.getFileName)
@@ -92,6 +95,12 @@ private[graft] object StoreSwap {
     Files.createDirectories(target.getParent)
     if (Files.exists(crcPath(pending))) move(crcPath(pending), crcPath(target))
     move(pending, target)
+  }
+
+  /** Remove the published file `target`, then its `.crc`. */
+  def unpublish(target: Path): Unit = {
+    Files.deleteIfExists(target)
+    Files.deleteIfExists(crcPath(target))
   }
 
   private def complete(dir: Path): Boolean = Files.exists(dir.resolve("_SUCCESS"))

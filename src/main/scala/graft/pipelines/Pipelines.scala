@@ -34,8 +34,8 @@ import graft.ops.Relational
   * expression evaluator is shared between threads. A request's extract
   * needs the class, so it runs after the scan job, over the request's
   * one-row local relation, while the optimizer folds that relation.
-  * Concurrent requests on one catalog are safe: every table write
-  * holds the table's lock (`Catalog`).
+  * Concurrent requests on one catalog are safe: every publish and
+  * rewrite of a table holds the table's lock (`Catalog`).
   *
   * Batch-SQL (app:944-966): the purest "query" — one set-based plan:
   * directory scan -> ai_extract column -> explode -> pivot. At 100 TB
@@ -116,35 +116,6 @@ object Pipelines {
     out
   }
 
-  /** Ensure a prompt schema exists for each class present in `classes`
-    * (app:481-489): generate via ai_complete + PARSE_JSON, guarded by
-    * NOT EXISTS (insert-if-absent), persisted through the catalog merge.
-    */
-  def ensurePrompts(cat: Catalog, classes: DataFrame): Unit = {
-    val existing = cat.table("CLASS_PROMPTS")
-    // NOT EXISTS guard first (J4): only absent classes generate prompts
-    // and only then does the table rewrite happen — the common warm
-    // path (class already known) costs one anti-join probe, no write
-    // class sets are metadata-bounded (a handful of labels), so one
-    // driver round-trip decides absent-vs-present AND materializes the
-    // generated prompts — the old isEmpty-then-append shape ran the
-    // classify/anti-join subtree twice
-    val fresh = classes.select(col("class_name")).distinct()
-      .join(existing.select(col("class_name")), Seq("class_name"), "left_anti")
-      .withColumn("prompts",
-        ai_complete(lit("mistral-7b"),
-          concat(lit("Generate a JSON object of field: question pairs for class '"),
-            col("class_name"), lit("'"))))
-      .withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
-    val freshRows = fresh.collect()
-    if (freshRows.nonEmpty) {
-      cat.append("CLASS_PROMPTS", cat.spark.createDataFrame(
-        java.util.Arrays.asList(freshRows: _*), fresh.schema))
-      PromptStore.invalidateAll(cat) // negative results may be cached
-    }
-  }
-
   /** Interactive single-document pipeline (§3.1). `stage`/`fileName`
     * identify an already-PUT file. Returns the extraction row.
     *
@@ -213,21 +184,29 @@ object Pipelines {
     }
   }
 
-  /** [[ensurePrompts]] for ONE class, served from the PromptStore cache:
-    * the warm path (class known, prompts cached) costs zero Spark jobs —
-    * the shape an interactive request needs. Falls back to a presence
-    * probe + generate only when the cache has nothing for the class.
+  /** Ensure a prompt schema exists for `className` (app:481-489),
+    * insert-if-absent (NOT EXISTS, J4). The warm path (class known,
+    * prompts cached in PromptStore) costs zero Spark jobs. Otherwise
+    * one presence probe decides: an empty cached map means EITHER
+    * absent or stored-but-empty, and only absence generates. The schema
+    * comes from one `ai_complete` over a one-row relation, which the
+    * optimizer folds on the driver, and is written by the driver
+    * (`Catalog.appendRows`).
     */
-  def ensurePrompts(cat: Catalog, className: String): Unit = {
-    if (PromptStore.get(cat, className).nonEmpty) return
-    // empty canonical map can mean EITHER absent or stored-but-empty —
-    // only absence may generate (insert-if-absent, like the frame form)
-    val spark = cat.spark
-    import spark.implicits._
-    val present = !cat.table("CLASS_PROMPTS")
-      .filter(col("class_name") === className).isEmpty
-    if (!present) ensurePrompts(cat, Seq(className).toDF("class_name"))
-  }
+  def ensurePrompts(cat: Catalog, className: String): Unit =
+    if (PromptStore.get(cat, className).isEmpty &&
+        cat.table("CLASS_PROMPTS").filter(col("class_name") === className).isEmpty) {
+      val spark = cat.spark
+      import spark.implicits._
+      val prompts = Seq(className).toDF("class_name")
+        .select(ai_complete(lit("mistral-7b"),
+          concat(lit("Generate a JSON object of field: question pairs for class '"),
+            col("class_name"), lit("'"))))
+        .collect()(0).getString(0)
+      val now = Timestamp.from(Instant.now())
+      cat.appendRows("CLASS_PROMPTS", Seq(Row(className, prompts, now, now)))
+      PromptStore.invalidateAll(cat) // negative results may be cached
+    }
 
   /** Batch single-SQL mode (§3.3) — the flagship one-plan query:
     * stage scan -> extract -> explode -> pivot to wide.

@@ -1,6 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.DataFrame
+import java.sql.Timestamp
+import java.time.Instant
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Catalog
@@ -50,16 +53,13 @@ object PromptStore {
     * insert-if-absent semantics — an existing 'invoice' schema is never
     * overwritten, and re-running is a no-op.
     */
-  def seedSampleClass(cat: Catalog): Unit = {
-    val spark = cat.spark
-    import spark.implicits._
+  def seedSampleClass(cat: Catalog): Unit =
     // WHERE NOT EXISTS guard (single-writer, like the setup script)
     if (cat.table("CLASS_PROMPTS").filter(col("class_name") === "invoice").isEmpty) {
-      cat.append("CLASS_PROMPTS",
-        Seq(("invoice", sampleInvoicePrompts)).toDF("class_name", "prompts"))
+      val now = Timestamp.from(Instant.now())
+      cat.appendRows("CLASS_PROMPTS", Seq(Row("invoice", sampleInvoicePrompts, now, now)))
       promptCache.invalidate((cat.root, "invoice"))
     }
-  }
 
   /** The reference's sample invoice schema (setup:130-142), verbatim. */
   private val sampleInvoicePrompts: String =

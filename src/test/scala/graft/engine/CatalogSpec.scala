@@ -21,6 +21,11 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     cat
   }
 
+  private val now = new java.sql.Timestamp(System.currentTimeMillis())
+
+  /** CLASS_PROMPTS rows of `classes`, each with prompts "{}". */
+  private def promptRows(classes: String*): Seq[Row] = classes.map(c => Row(c, "{}", now, now))
+
   test("ensureTables creates all five empty tables with canonical schemas") {
     val cat = freshCat()
     Catalog.schemas.foreach { case (name, schema) =>
@@ -30,11 +35,11 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("append stamps timestamp defaults and fills missing columns") {
+  test("appendBatch stamps timestamp defaults and fills missing columns") {
     val cat = freshCat()
-    cat.append("NEW_UPLOADS",
+    cat.appendBatch("NEW_UPLOADS",
       Seq(("a.pdf", "stage/a.pdf", "stage", true)).toDF(
-        "file_name", "file_ref", "stage_name", "processed"))
+        "file_name", "file_ref", "stage_name", "processed"), "0")
     val row = cat.table("NEW_UPLOADS").collect()(0)
     assert(row.getAs[String]("file_name") == "a.pdf")
     assert(row.getAs[java.sql.Timestamp]("uploaded_at") != null)
@@ -42,7 +47,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
 
   test("merge persists an upsert (update + insert)") {
     val cat = freshCat()
-    cat.append("CLASS_PROMPTS", Seq(("invoice", "{}")).toDF("class_name", "prompts"))
+    cat.appendRows("CLASS_PROMPTS", promptRows("invoice"))
     cat.merge("CLASS_PROMPTS",
       cat.table("CLASS_PROMPTS").limit(0) // empty with right schema
         .unionByName(Seq(("invoice", """{"a":"b"}"""), ("report", "{}"))
@@ -58,8 +63,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
 
   test("deleteWhere removes matching rows only") {
     val cat = freshCat()
-    cat.append("CLASS_PROMPTS",
-      Seq(("a", "{}"), ("b", "{}")).toDF("class_name", "prompts"))
+    cat.appendRows("CLASS_PROMPTS", promptRows("a", "b"))
     cat.deleteWhere("CLASS_PROMPTS", col("class_name") === "a")
     assert(cat.table("CLASS_PROMPTS").select("class_name")
       .as[String].collect().toSeq == Seq("b"))
@@ -142,7 +146,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     }
     spark.listenerManager.register(listener)
     try {
-      cat.append("CLASS_PROMPTS", Seq(("a", "{}")).toDF("class_name", "prompts"))
+      cat.appendBatch("CLASS_PROMPTS", Seq(("a", "{}")).toDF("class_name", "prompts"), "0")
       org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(!writes.isEmpty, "no write seen")
@@ -162,18 +166,16 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
   test("listStages unions filesystem stages with NEW_UPLOADS references") {
     val cat = freshCat()
     cat.putFile("fs_stage", "a.txt", "x".getBytes(StandardCharsets.UTF_8))
-    cat.append("NEW_UPLOADS",
-      Seq(("f", "ref_stage/f", "ref_stage", false)).toDF(
-        "file_name", "file_ref", "stage_name", "processed"))
+    cat.appendRows("NEW_UPLOADS", Seq(Row("f", "ref_stage/f", "ref_stage", false, now)))
     assert(cat.listStages() == Seq("fs_stage", "ref_stage"))
   }
 
   test("fields table is written partitioned by class_name and prunes on read") {
     val cat = freshCat()
-    cat.append("DOCUMENTS_EXTRACTED_FIELDS",
+    cat.appendBatch("DOCUMENTS_EXTRACTED_FIELDS",
       Seq(("u1", "f1", "invoice", "total", "\"100\""),
           ("u2", "f2", "report", "title", "\"t\""))
-        .toDF("file_url", "file_ref", "class_name", "field_name", "field_value"))
+        .toDF("file_url", "file_ref", "class_name", "field_name", "field_value"), "0")
     // physical layout: one dir per class
     val dirs = java.nio.file.Files.list(
       java.nio.file.Paths.get(cat.root, "tables", "DOCUMENTS_EXTRACTED_FIELDS"))
@@ -193,8 +195,8 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
   test("compact collapses many small append files into few") {
     val cat = freshCat()
     (1 to 8).foreach { i =>
-      cat.append("DOCUMENT_OCR",
-        Seq((s"f$i", s"f$i", "{}", "s")).toDF("file_name", "file_ref", "ocr", "summary"))
+      cat.appendBatch("DOCUMENT_OCR",
+        Seq((s"f$i", s"f$i", "{}", "s")).toDF("file_name", "file_ref", "ocr", "summary"), s"$i")
     }
     def fileCount = {
       val s = java.nio.file.Files.walk(
@@ -237,7 +239,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
 
   test("overwrite never has a window with no table data (bak-swap + recover)") {
     val cat = freshCat()
-    cat.append("CLASS_PROMPTS", Seq(("a", "{}"), ("b", "{}")).toDF("class_name", "prompts"))
+    cat.appendRows("CLASS_PROMPTS", promptRows("a", "b"))
     // normal swap: data replaced, no .bak/.tmp residue
     cat.deleteWhere("CLASS_PROMPTS", col("class_name") === "a")
     assert(cat.table("CLASS_PROMPTS").select("class_name").as[String].collect().toSeq == Seq("b"))
@@ -263,10 +265,10 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
   test("cluster rewrites the table range-partitioned and sorted within files") {
     val cat = freshCat()
     // append in shuffled id order across several files
-    Seq(Seq(7, 2), Seq(9, 1), Seq(4, 8), Seq(3, 6)).foreach { ids =>
-      cat.append("DOCUMENT_OCR",
+    Seq(Seq(7, 2), Seq(9, 1), Seq(4, 8), Seq(3, 6)).zipWithIndex.foreach { case (ids, b) =>
+      cat.appendBatch("DOCUMENT_OCR",
         ids.map(i => (f"f$i%02d", f"f$i%02d", "{}", "s"))
-          .toDF("file_name", "file_ref", "ocr", "summary"))
+          .toDF("file_name", "file_ref", "ocr", "summary"), s"$b")
     }
     cat.cluster("DOCUMENT_OCR", Seq("file_name"), numFiles = 2)
     assert(cat.table("DOCUMENT_OCR").count() == 8)
@@ -311,11 +313,51 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     assert(cat.table("DOCUMENTS_EXTRACTED_FIELDS").count() == 1)
     assert(cat.table("DOCUMENTS_EXTRACTED_FIELDS")
       .filter(col("class_name") === "invoice").count() == 1)
+    // every published data file keeps its Hadoop checksum
+    for (name <- Seq("DOCUMENTS_PROCESSED", "DOCUMENTS_EXTRACTED_FIELDS")) {
+      val dir = java.nio.file.Paths.get(tableDir(cat, name))
+      val files = dataFiles(cat, name)
+      assert(files.nonEmpty, name)
+      files.map(dir.resolve).foreach { f =>
+        assert(java.nio.file.Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+      }
+    }
+  }
+
+  test("a failed appendBatch leaves the table unchanged and no leftover beside it") {
+    val cat = freshCat()
+    val name = "DOCUMENTS_PROCESSED"
+    val rows = Seq(("u1", "f1", "invoice", "{}"))
+      .toDF("file_url", "file_ref", "class_name", "extraction_result")
+    cat.appendBatch(name, rows, "1")
+    val before = dataFiles(cat, name)
+    // the UDF reads a column of a range, so it throws in the write's
+    // task, not while the optimizer folds a local relation
+    val boom = udf((s: String) => if (s != null) throw new IllegalStateException("boom") else s)
+    val failing = spark.range(1).select(lit("u2").as("file_url"), lit("f2").as("file_ref"),
+      lit("invoice").as("class_name"), boom(col("id").cast("string")).as("extraction_result"))
+    // a failed replay of the same token keeps the earlier attempt's files
+    intercept[Exception](cat.appendBatch(name, failing, "1"))
+    assert(dataFiles(cat, name) == before)
+    assert(cat.table(name).select("file_url").as[String].collect().toSeq == Seq("u1"))
+    def leftovers = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(cat.root, "tables"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".") && n.contains(name)).toSeq
+      finally s.close()
+    }
+    cat.ensureTables()
+    assert(leftovers.isEmpty, leftovers)
+    assert(dataFiles(cat, name) == before)
+    cat.dropTable(name)
+    assert(leftovers.isEmpty, leftovers)
   }
 
   /** Data files of a table, relative to its directory, sorted. */
-  private def dataFiles(cat: Catalog, name: String): Seq[String] = {
-    val dir = java.nio.file.Paths.get(cat.root, "tables", name)
+  private def dataFiles(cat: Catalog, name: String): Seq[String] = dataFilesIn(tableDir(cat, name))
+
+  private def dataFilesIn(path: String): Seq[String] = {
+    val dir = java.nio.file.Paths.get(path)
     val s = java.nio.file.Files.walk(dir)
     try s.iterator().asScala.map(dir.relativize(_).toString)
       .filter(_.endsWith(".parquet")).toSeq.sorted
@@ -324,7 +366,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
 
   private def tableDir(cat: Catalog, name: String) = s"${cat.root}/tables/$name"
 
-  test("appendRows reads back as the same rows written by append") {
+  test("appendRows reads back as the same rows written by appendBatch") {
     val at = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789123")
     val rows = Map(
       "DOCUMENTS_EXTRACTED_FIELDS" -> Seq(
@@ -334,7 +376,8 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
       "DOCUMENT_OCR" -> Seq(Row("a.txt", "a.txt", """{"content":"x"}""", "Summary: x", at)))
     val (viaJob, viaDriver) = (freshCat(), freshCat())
     for ((name, rs) <- rows) {
-      viaJob.append(name, spark.createDataFrame(rs.asJava, Catalog.schemas(name)))
+      val df = spark.createDataFrame(rs.asJava, Catalog.schemas(name))
+      viaJob.appendBatch(name, df, "0")
       viaDriver.appendRows(name, rs)
       val ddl = Catalog.schemas(name).fieldNames.map(col)
       assert(viaDriver.table(name).select(ddl: _*).collect().toSet == rs.toSet, name)
@@ -345,10 +388,15 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
       assert(driver.schema(driver.schema.fieldIndex(
         Catalog.schemas(name).fieldNames.last)).dataType == TimestampType, name)
       assert(driver.collect().toSet == job.collect().toSet, name)
-      // the job's file names and partition directories, another uuid
-      val names = Seq(dataFiles(viaJob, name), dataFiles(viaDriver, name))
-        .map(_.map(_.replaceAll("part-[0-9]{5}-[0-9a-f-]{36}", "part-N-<uuid>")).distinct)
+      // a plain job write's file names and partition directories, another uuid
+      val plain = tempDir("graft_cat_plain_").resolve(name).toString
+      Catalog.partitionSpec.get(name).fold(df.write)(df.write.partitionBy(_: _*)).parquet(plain)
+      val names = Seq(plain, tableDir(viaDriver, name)).map(dir => dataFilesIn(dir)
+        .map(_.replaceAll("part-[0-9]{5}-[0-9a-f-]{36}", "part-N-<uuid>")).distinct)
       assert(names(1) == names(0) && names(0).nonEmpty, names)
+      def partitionDirs(cat: Catalog) =
+        dataFiles(cat, name).map(f => f.take(math.max(0, f.lastIndexOf('/')))).distinct
+      assert(partitionDirs(viaJob) == partitionDirs(viaDriver), name)
     }
   }
 
@@ -357,7 +405,7 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     val classes = Seq("a/b", "x=y", "50%", "", null)
     val rows = classes.map(c => Row("u", "f", c, "k", "v", null, null))
     val (viaJob, viaDriver) = (freshCat(), freshCat())
-    viaJob.append(name, spark.createDataFrame(rows.asJava, Catalog.schemas(name)))
+    viaJob.appendBatch(name, spark.createDataFrame(rows.asJava, Catalog.schemas(name)), "0")
     rows.foreach(r => viaDriver.appendRows(name, Seq(r)))
     def dirs(cat: Catalog) = dataFiles(cat, name).map(_.takeWhile(_ != '/')).distinct
     assert(dirs(viaDriver) == dirs(viaJob), dirs(viaJob))

@@ -100,6 +100,17 @@ class AiCallCountSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("ensurePrompts: a cold class makes one complete call, a known class none") {
+    withBackend(CountingBackend) {
+      val cat = stagedCat()
+      Pipelines.ensurePrompts(cat, "memo")
+      Pipelines.ensurePrompts(cat, "memo")
+      val prompt = "Generate a JSON object of field: question pairs for class 'memo'"
+      assert(CountingBackend.count("complete", prompt) == 1)
+      assert(cat.table("CLASS_PROMPTS").count() == 1)
+    }
+  }
+
   test("batchSql: parse and extract run once per document") {
     withBackend(CountingBackend) {
       val cat = stagedCat()

@@ -29,9 +29,11 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
   /** Prompts for every class the local backend assigns: no request
     * generates any.
     */
-  private def seedPrompts(cat: Catalog): Unit =
-    cat.append("CLASS_PROMPTS", Seq("invoice", "contract", "report", "letter", "form")
-      .map(c => (c, """{"title": "What is the title?"}""")).toDF("class_name", "prompts"))
+  private def seedPrompts(cat: Catalog): Unit = {
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    cat.appendRows("CLASS_PROMPTS", Seq("invoice", "contract", "report", "letter", "form")
+      .map(c => org.apache.spark.sql.Row(c, """{"title": "What is the title?"}""", now, now)))
+  }
 
   test("interactive pipeline persists to all four tables and History reads back") {
     val cat = stagedCat()
@@ -322,7 +324,7 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     val cat = stagedCat()
     // pre-seed prompts for every class in the backend's class set using
     // the ['q', text] list shape (app:161-183); ensurePrompts will not
-    // overwrite them (anti-join guard), so extraction must canonicalize
+    // overwrite them (presence guard), so extraction must canonicalize
     import org.apache.spark.sql.functions.current_timestamp
     val seeded = Seq("invoice", "contract", "report", "letter", "form")
       .map(c => (c, """["q", "What is this about?"]"""))
@@ -366,12 +368,11 @@ class PipelinesSpec extends AnyFunSuite with SparkTestBase {
     assert(out(0).getAs[Boolean]("has_ocr"))
   }
 
-  test("ensurePrompts is idempotent (anti-join guard)") {
+  test("ensurePrompts is idempotent (presence guard)") {
     val cat = stagedCat()
-    val classes = Seq("invoice").toDF("class_name")
-    Pipelines.ensurePrompts(cat, classes)
+    Pipelines.ensurePrompts(cat, "invoice")
     val first = cat.table("CLASS_PROMPTS").select("prompts").as[String].collect()(0)
-    Pipelines.ensurePrompts(cat, classes)
+    Pipelines.ensurePrompts(cat, "invoice")
     assert(cat.table("CLASS_PROMPTS").count() == 1)
     assert(cat.table("CLASS_PROMPTS").select("prompts").as[String].collect()(0) == first)
   }
